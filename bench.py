@@ -29,7 +29,7 @@ from health_etl_pipeline_and_analytics_with_machine_learning_spark.session impor
 #: into the payload so the box-normalization block can pick the last
 #: artifact from a DIFFERENT round as its reference (ADVICE r14: a
 #: plain HEAD read self-compares after the round's artifact commit).
-ROUND = 17
+ROUND = 19
 
 
 def pick_reference(repo_dir: str, current_round: int):

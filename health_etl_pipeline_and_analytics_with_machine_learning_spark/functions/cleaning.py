@@ -66,8 +66,15 @@ def _keep_only(col: Column, keep_class: str) -> Column:
     more letter ranges with extra characters at ~4 us PER CHARACTER,
     while the equivalent positive extraction runs at normal regex speed.
     Concatenating every maximal run of kept characters == deleting every
-    non-kept character (equivalence fuzz-pinned against the CPython spec
-    in tests/test_fuzz_expressions.py, null/empty/non-ASCII included).
+    non-kept character.
+
+    ``\\w`` and ``\\s`` in ``keep_class`` are Java's ASCII classes, so the
+    result equals CPython's ``re.sub(f"[^{keep_class}]", "", s,
+    flags=re.ASCII)``, not the reference's Unicode ``re.sub``: non-ASCII
+    letters, digits and whitespace ('é', '²', NBSP, U+2003) are deleted
+    here where the reference keeps them. Both facts are fuzz-pinned over
+    ASCII, Latin-1 and other code points, null and empty included, in
+    tests/test_fuzz_expressions.py.
     """
     return F.array_join(
         F.regexp_extract_all(col, F.lit(f"[{keep_class}]+"), 0), ""

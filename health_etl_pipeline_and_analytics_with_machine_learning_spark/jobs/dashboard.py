@@ -15,6 +15,14 @@ The app retrains its model on every rerun (Health_Jim.py:894-897); here
 the expensive artifacts are computed once per invocation — the rerun
 inefficiency disappears structurally.
 
+Those two exceptions are also the reuse rule of a long-lived caller:
+:func:`dashboard_sections` takes a ``shared`` memo and fills it with the
+sections that do not read the full (year, country) key — the
+correlation keyed on nothing (one entry per dataset) and the mortality
+trend keyed on ``country``. The memo is only valid for the frame it was
+filled from; the caller owns it and must clear it when the frame
+changes (``jobs.webapp.DashboardApp._load``).
+
 Usage::
 
     python -m health_etl_pipeline_and_analytics_with_machine_learning_spark.jobs.dashboard \
@@ -37,8 +45,17 @@ from ..session import get_spark
 
 
 def dashboard_sections(
-    cleaned: DataFrame, year: int | None = None, country: str | None = None
+    cleaned: DataFrame,
+    year: int | None = None,
+    country: str | None = None,
+    shared: dict | None = None,
 ) -> dict:
+    """The seven sections for one (year, country) filter. ``shared``
+    memoizes the sections keyed on less than that: pass the same dict on
+    every call over the same ``cleaned`` frame, and a fresh one after the
+    frame changes."""
+    if shared is None:
+        shared = {}
     filtered = cleaned
     if year is not None:
         filtered = filtered.filter(F.col("Year") == year)
@@ -48,17 +65,28 @@ def dashboard_sections(
     def rows(df: DataFrame, limit: int = 50) -> list[dict]:
         return [r.asDict() for r in df.limit(limit).collect()]
 
+    def memo(key: tuple, build) -> list[dict]:
+        if key not in shared:
+            shared[key] = rows(build())
+        return shared[key]
+
     return {
         "filters": {"year": year, "country": country},
         "overview": rows(queries.overview_metrics(filtered)),
         "deadliest_diseases": rows(queries.q1_deadliest_diseases(filtered, 10)),
         # country-only slice of the FULL frame (Health_Jim.py:940-945)
-        "mortality_trend": rows(queries.mortality_trend(cleaned, country)),
+        "mortality_trend": memo(
+            ("mortality_trend", country),
+            lambda: queries.mortality_trend(cleaned, country),
+        ),
         "gender_impact": rows(queries.gender_impact_melted(filtered)),
         "treatment_cost": rows(queries.q4_treatment_cost(filtered)),
         "urban_rural": rows(queries.q6_urban_rural_level1(filtered)),
         # unfiltered frame (Health_Jim.py:1140)
-        "correlation_with_mortality": rows(queries.correlation_with_mortality(cleaned)),
+        "correlation_with_mortality": memo(
+            ("correlation_with_mortality",),
+            lambda: queries.correlation_with_mortality(cleaned),
+        ),
     }
 
 

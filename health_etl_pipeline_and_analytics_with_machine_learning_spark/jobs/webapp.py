@@ -20,10 +20,25 @@ Architectural difference, on purpose: the Streamlit app re-cleans the
 CSV and retrains the model on every widget interaction (the script
 reruns top-to-bottom, ``Health_Jim.py:894-897``); here the cleaned
 frame is checkpointed ONCE per dataset and every filter change is a
-Catalyst-planned slice of it, with per-(year, country) responses
-memoized. Streamlit itself is not a container dependency, and a web
-framework would add nothing: the app surface is two JSON endpoints and
-one HTML page.
+Catalyst-planned slice of it. Each section is memoized by the filter
+values it reads:
+
+- whole responses per (year, country) — a repeated key never reaches
+  :func:`..jobs.dashboard.dashboard_sections`;
+- inside a miss, the correlation once per dataset and the mortality
+  trend once per country (the ``shared`` memo that
+  ``dashboard_sections`` fills). The landing page computes both for the
+  unfiltered view, so a filtered miss only runs the five filtered
+  sections, plus the trend for a country not seen before.
+
+Both memos are dropped together in ``_load``, so an upload never serves
+the previous dataset's sections. Filter values outside the dataset's
+domain (``/api/meta``) are answered 400 and never memoized, which bounds
+both memos by the number of (year, country) combinations.
+
+Streamlit itself is not a container dependency, and a web framework
+would add nothing: the app surface is two JSON endpoints and one HTML
+page.
 
 Scale note: the served frame is a localCheckpoint at dashboard
 cardinality (the reference dataset is 10k rows; a 100 TB deployment
@@ -149,6 +164,10 @@ init();
 """
 
 
+class UnknownFilter(ValueError):
+    """A filter value outside the served dataset's domain."""
+
+
 class DashboardApp:
     """Holds the Spark session + checkpointed cleaned frame and answers
     the three routes. One lock serializes Spark work (the driver is a
@@ -158,6 +177,7 @@ class DashboardApp:
         self.spark = spark
         self._lock = threading.Lock()
         self._cache: dict[tuple[int | None, str | None], dict] = {}
+        self._shared: dict = {}
         self._load(raw_csv)
 
     def _load(self, raw_csv: str) -> None:
@@ -184,6 +204,7 @@ class DashboardApp:
             "countries": list(years_countries["countries"]),
         }
         self._cache.clear()
+        self._shared.clear()
 
     def upload(self, raw_csv: str) -> dict:
         with self._lock:
@@ -191,11 +212,17 @@ class DashboardApp:
             return self.meta
 
     def dashboard(self, year: int | None, country: str | None) -> dict:
+        """Sections for one filter; raises :class:`UnknownFilter` for a
+        year or country the dataset does not contain."""
         key = (year, country)
         with self._lock:
+            if year is not None and year not in self.meta["years"]:
+                raise UnknownFilter(f"unknown year: {year}")
+            if country is not None and country not in self.meta["countries"]:
+                raise UnknownFilter(f"unknown country: {country}")
             if key not in self._cache:
                 self._cache[key] = dashboard_sections(
-                    self.cleaned, year=year, country=country
+                    self.cleaned, year=year, country=country, shared=self._shared
                 )
             return self._cache[key]
 
@@ -234,6 +261,8 @@ def make_server(app: DashboardApp, port: int = 0) -> ThreadingHTTPServer:
                 country = q["country"][0] if q.get("country") else None
                 try:
                     self._json(app.dashboard(year, country))
+                except UnknownFilter as exc:
+                    self._json({"error": str(exc)}, code=400)
                 except Exception as exc:  # surface, don't kill the server
                     self._json({"error": str(exc)}, code=500)
             else:

@@ -24,8 +24,9 @@ from dataclasses import dataclass, field
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
+from pyspark.ml.linalg import Vectors
 from pyspark.ml.regression import RandomForestRegressor
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TARGET = "Mortality_Rate_per_100"
@@ -98,15 +99,22 @@ class TrainedModel:
 
     def predict_single(self, input_data: dict) -> float:
         """Single prediction (Health_Jim.py:728-744): missing features
-        filled from training medians, column order aligned, round(4)."""
-        from pyspark.sql import SparkSession
+        filled from training medians, column order aligned, round(4).
 
-        spark = SparkSession.getActiveSession()
-        filled = {
-            c: float(input_data.get(c, self.medians.get(c, 0.0))) for c in self.feature_cols
-        }
-        row_df = spark.createDataFrame([Row(**filled)])
-        pred = self.model.transform(row_df).select("prediction").first()[0]
+        Scores one row on the driver with the forest's local ``predict``
+        over the vector the assembler would build, so no Spark job runs.
+        Only the numeric-only app variant can be served: the notebook
+        variant's one-hot inputs come from categorical columns a feature
+        dict does not carry."""
+        inputs = list(self.model.stages[-2].getInputCols())
+        missing = [c for c in inputs if c not in self.feature_cols]
+        if missing:
+            raise ValueError(
+                f"predict_single serves numeric-only models; assembler inputs {missing} "
+                "are not numeric features (train with use_categoricals=False)"
+            )
+        features = [float(input_data.get(c, self.medians.get(c, 0.0))) for c in inputs]
+        pred = self.model.stages[-1].predict(Vectors.dense(features))
         return round(float(pred), 4)
 
 

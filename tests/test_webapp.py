@@ -11,6 +11,10 @@ import urllib.request
 
 import pytest
 
+from health_etl_pipeline_and_analytics_with_machine_learning_spark import queries
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.jobs.dashboard import (
+    dashboard_sections,
+)
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.jobs.webapp import (
     DashboardApp,
     make_server,
@@ -164,3 +168,143 @@ def test_upload_releases_superseded_checkpoint_and_tempfile(served, tmp_path):
     assert not (before_ids & after_ids), (before_ids, after_ids)
     # no new temp csv left behind
     assert set(glob.glob(os.path.join(_tf.gettempdir(), "tmp*.csv"))) <= tmp_before
+
+
+# --------------------------------------------------------------------------
+# Per-section memo: the correlation once per dataset, the mortality trend
+# once per country. These run on generated CSVs, so they need no
+# reference dataset.
+
+
+def _json_eq(a, b) -> bool:
+    return json.loads(json.dumps(a, default=str)) == json.loads(json.dumps(b, default=str))
+
+
+@pytest.fixture(scope="module")
+def generated(spark, tmp_path_factory):
+    gen = pytest.importorskip("scripts.gen_health_raw")
+    d = tmp_path_factory.mktemp("generated")
+    first = gen.generate(str(d / "seed1.csv"), 1500, seed=1)
+    second = gen.generate(str(d / "seed2.csv"), 600, seed=2)
+    app = DashboardApp(spark, first)
+    server = make_server(app, port=0)
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    host, port = server.server_address
+    app.dashboard(None, None)  # the landing page
+    yield app, f"http://{host}:{port}", first, second
+    server.shutdown()
+    server.server_close()
+
+
+@pytest.fixture
+def calls(monkeypatch):
+    """Count calls of the two shared sections' queries."""
+    counts = {"correlation_with_mortality": 0, "mortality_trend": 0}
+    for name in counts:
+        original = getattr(queries, name)
+
+        def spy(*args, _name=name, _orig=original, **kwargs):
+            counts[_name] += 1
+            return _orig(*args, **kwargs)
+
+        monkeypatch.setattr(queries, name, spy)
+    return counts
+
+
+def test_memoized_sections_match_fresh_computation(generated):
+    app, _, _, _ = generated
+    years, countries = app.meta["years"], app.meta["countries"]
+    keys = [
+        (None, None),
+        (years[0], countries[0]),
+        (years[-1], countries[0]),
+        (years[0], countries[-1]),
+        (None, countries[1]),
+        (years[1], None),
+    ]
+    for year, country in keys:
+        got = app.dashboard(year, country)
+        assert _json_eq(got, dashboard_sections(app.cleaned, year=year, country=country)), (
+            year,
+            country,
+        )
+
+
+def test_filtered_miss_reuses_shared_sections(generated, calls):
+    app, _, _, _ = generated
+    years, countries = app.meta["years"], app.meta["countries"]
+    country = countries[2]
+    app.dashboard(years[0], country)
+    # the landing page computed the correlation; the trend is new for
+    # this country
+    assert calls == {"correlation_with_mortality": 0, "mortality_trend": 1}
+    app.dashboard(years[1], country)
+    # a second year for a country already seen reuses its trend
+    assert calls == {"correlation_with_mortality": 0, "mortality_trend": 1}
+
+
+def test_concurrent_misses_compute_each_shared_section_once(generated, calls):
+    app, _, _, _ = generated
+    import sys
+
+    years, countries = app.meta["years"], app.meta["countries"]
+    fresh = countries[3:6]
+    keys = [(y, c) for c in fresh for y in years[:3]]
+    results: dict = {}
+
+    def client(key):
+        results[key] = app.dashboard(*key)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(k,)) for k in keys]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert set(results) == set(keys)
+    assert calls == {"correlation_with_mortality": 0, "mortality_trend": len(fresh)}
+    for c in fresh:
+        trends = {json.dumps(results[(y, c)]["mortality_trend"], default=str) for y in years[:3]}
+        assert len(trends) == 1
+
+
+def test_upload_recomputes_shared_sections(generated, calls):
+    app, base, first, second = generated
+    before = app.dashboard(None, None)["correlation_with_mortality"]
+    with open(second, "rb") as f:
+        req = urllib.request.Request(base + "/api/upload", data=f.read(), method="POST")
+    try:
+        with urllib.request.urlopen(req, timeout=120) as r:
+            assert r.status == 200
+        country = app.meta["countries"][0]
+        got = app.dashboard(app.meta["years"][0], country)
+        assert calls == {"correlation_with_mortality": 1, "mortality_trend": 1}
+        fresh = dashboard_sections(app.cleaned)
+        assert _json_eq(got["correlation_with_mortality"], fresh["correlation_with_mortality"])
+        assert not _json_eq(got["correlation_with_mortality"], before)
+        assert _json_eq(
+            got["mortality_trend"],
+            dashboard_sections(app.cleaned, country=country)["mortality_trend"],
+        )
+    finally:
+        app.upload(first)
+        app.dashboard(None, None)
+
+
+@pytest.mark.parametrize("query", ["country=Atlantis", "year=1066", "year=1066&country=Atlantis"])
+def test_filter_outside_domain_returns_json_400(generated, query):
+    app, base, _, _ = generated
+    import urllib.error
+
+    memo = (len(app._cache), len(app._shared))
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(base + "/api/dashboard?" + query, timeout=60)
+    assert ei.value.code == 400
+    assert json.loads(ei.value.read())["error"].startswith("unknown ")
+    assert (len(app._cache), len(app._shared)) == memo
