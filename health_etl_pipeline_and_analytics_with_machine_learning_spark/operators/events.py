@@ -665,21 +665,17 @@ def streaming_hour_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, and the bounded stream's final window table must
     hash-match the batch/DuckDB GROUP BY date_trunc answer.
 
-    Distinct users (r12, VERDICT r11 item 4): exact DISTINCT isn't
-    expressible inside a streaming aggregate (documented engine
-    boundary), so the stream carries HyperLogLog++
-    ``approx_count_distinct(user_id, rsd=HLL_RSD)`` — the production
-    answer — certified with the approx_distinct_bound pattern: the
-    oracle pins the batch-exact count and a constant TRUE the sketch
-    must earn by landing within max(4·rsd relative, 5 users) — the
-    margin is DERIVED from the sketch's rsd (r13, ADVICE r12: a
-    hand-tuned envelope validated only at small SFs would misdiagnose
-    a large-SF or Spark-version breach as a correctness bug), and the
-    absolute floor covers tiny per-window cardinalities where HLL++
-    register noise (Spark has no sparse mode) is a few users
-    regardless of rsd. Second entry in the certified-streaming family
-    next to streaming_sessionization; see streaming/sessionize.py for
-    replay mechanics, the envelope constants, and scale notes."""
+    Distinct users: exact DISTINCT isn't expressible inside a
+    streaming aggregate (documented engine boundary), so the stream
+    carries HyperLogLog++ ``approx_count_distinct(user_id,
+    rsd=HLL_RSD)`` — the production answer — certified with the
+    approx_distinct_bound pattern: the oracle pins the batch-exact count
+    and a constant TRUE the sketch must earn by landing within
+    max(4·rsd relative, 5 users). The margin derives from the sketch's
+    rsd; the absolute floor covers tiny per-window cardinalities where
+    HLL++ register noise (Spark has no sparse mode) is a few users
+    regardless of rsd. See streaming/sessionize.py for the envelope
+    constants and scale notes, streaming/replay.py for the replay."""
     from ..streaming.sessionize import stream_hour_rollup
 
     return stream_hour_rollup(spark, sf_dir)
@@ -711,8 +707,8 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the batch/DuckDB range join. Third certified streaming
     operator class (windowed agg, custom applyInPandasWithState state,
     and now the stateful stream-stream join buffer). See
-    streaming/sessionize.py for replay mechanics and the production
-    watermark form."""
+    streaming/sessionize.py for the production watermark form and
+    streaming/replay.py for the replay."""
     from ..streaming.sessionize import stream_view_purchase_join
 
     return stream_view_purchase_join(spark, sf_dir)

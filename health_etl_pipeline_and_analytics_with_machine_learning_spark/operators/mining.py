@@ -2348,40 +2348,24 @@ def streaming_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunked parquet dir, COMPLETE output to a memory sink named
     ``countmin_replay``); the exact ground-truth probe side runs as a
     batch query, which is exactly the production split — sketch on the
-    stream, truth from the warehouse. See streaming/sessionize.py for
-    replay mechanics and scale notes.
+    stream, truth from the warehouse. The replay input is the events
+    chunk set the sessionize replays share (streaming/sessionize.py);
+    streaming/replay.py runs it with the JVM-state partition count.
     """
-    from ..streaming.sessionize import (
-        REPLAY_STATE_PARTITIONS as _REPLAY_STATE_PARTITIONS,
-        _chunked_events_dir,
-        _read_chunked_stream,
-    )
+    from ..streaming.replay import REPLAY_STATE_PARTITIONS, run_bounded
+    from ..streaming.sessionize import _chunked_events_dir, _read_chunked_stream
 
-    watch_dir = _chunked_events_dir(spark, sf_dir, 3)
-    raw = _read_chunked_stream(spark, watch_dir)
+    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, 3))
     grid_stream = (
         _cm_cells(raw)
         .groupBy("hrow", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     name = "countmin_replay"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _REPLAY_STATE_PARTITIONS
+    run_bounded(
+        grid_stream.writeStream.outputMode("complete").format("memory").queryName(name),
+        REPLAY_STATE_PARTITIONS,
     )
-    try:
-        q = (
-            grid_stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     grid = lineage_cut(spark.table(name), eager=True)
     return _cm_probe(spark, sf_dir, grid)
 

@@ -303,11 +303,12 @@ def _probe_cells_expr(arr_sql: str, v: str, vv: str) -> Column:
 #: quantizer-fit cache: the Lloyd fit is a PURE FUNCTION of the
 #: immutable source table + (k, iters, sample_hex) — md5-hash sample,
 #: deterministic init, pinned rounding — so refitting per query run is
-#: wasted driver latency (measured: ~0.9 s/run at sf0.1, the whole
-#: r4 similarity_ivf_topk 1.6→2.5 s regression). Same legitimacy
-#: argument as streaming/sessionize.py _CHUNK_CACHE: reuse of a
-#: deterministic artifact of the immutable input. The thing being
-#: measured — assignment scan, probe, re-score — still runs per call.
+#: wasted driver latency (measured: ~0.9 s/run at sf0.1). The thing
+#: being measured — assignment scan, probe, re-score — still runs per
+#: call. Keyed on the table path and fit params only, so a table
+#: rewritten in place during the process serves the old fit; the
+#: replay directories (streaming/replay.py cached_dir) already key on
+#: the source files' (mtime_ns, size) and the session timezone.
 _FIT_CACHE: dict[tuple[str, int, int, str], list[tuple[int, list[float]]]] = {}
 
 

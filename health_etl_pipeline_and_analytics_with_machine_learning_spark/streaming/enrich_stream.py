@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .events_stream import read_events_stream
+from .replay import run_bounded
 
 
 def enrich_with_segment(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -49,14 +50,7 @@ def run_enrich_to_memory(
     stateless)."""
     dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
     stream = enrich_with_segment(read_events_stream(spark, sf_dir), dim)
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    run_bounded(
+        stream.writeStream.outputMode("complete").format("memory").queryName(query_name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")

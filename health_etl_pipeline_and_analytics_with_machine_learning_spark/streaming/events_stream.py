@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .replay import mkdtemp, run_bounded
+
+
 def _probe_events_schema(spark: SparkSession, src: str) -> T.StructType:
     """Resolve the on-disk schema of the events parquet via one batch
     footer read — the stream schema and the ts rebuild branch both
@@ -44,13 +47,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> Dat
     multiple times to simulate at-least-once redelivery (every event
     duplicated), the input the streaming dedup twin exists for."""
     import os
-    import tempfile
 
     src = os.path.join(sf_dir, "events.parquet")
     schema = _probe_events_schema(spark, src)
     watch_dir = src
     if os.path.isfile(src):
-        watch_dir = tempfile.mkdtemp(prefix="events_stream_")
+        watch_dir = mkdtemp("events_stream_")
         for i in range(copies):
             os.symlink(src, os.path.join(watch_dir, f"events_{i}.parquet"))
     raw = spark.readStream.schema(schema).parquet(watch_dir)
@@ -92,16 +94,9 @@ def run_to_memory(
     This is the local smoke path; production uses a real sink +
     checkpointLocation."""
     stream = hourly_rollup(read_events_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    run_bounded(
+        stream.writeStream.outputMode("complete").format("memory").queryName(query_name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -131,14 +126,7 @@ def run_dedup_to_memory(
     """Drive the redelivered (``copies``×) stream through the dedup
     operator to completion; append-mode memory sink."""
     stream = dedup_within_watermark(read_events_stream(spark, sf_dir, copies=copies))
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    run_bounded(
+        stream.writeStream.outputMode("append").format("memory").queryName(query_name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")

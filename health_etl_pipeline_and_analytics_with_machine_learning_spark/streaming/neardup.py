@@ -1,5 +1,5 @@
 """Streaming incremental near-dup — the micro-batch replay behind
-``operators.dedup.streaming_neardup_probe`` (r11, VERDICT r10 item 4).
+``operators.dedup.streaming_neardup_probe``.
 
 Shape: the historical corpus (sources src0..src9) is reduced ONCE to
 its banded, hot-bucket-capped SimHash signature store
@@ -28,8 +28,8 @@ loop CDC does for row state) and persist its BANDED form so per-batch
 probes skip the re-explode; the hot-bucket cap already lives on the
 store side, so candidate volume stays linear in each batch regardless
 of probe-side skew. The probe op keeps the store immutable so the
-answer is a pure function of the input corpus; the maintained form IS
-implemented too (r12, ``stream_neardup_store_maintenance`` below):
+answer is a pure function of the input corpus; the maintained form is
+``stream_neardup_store_maintenance`` below:
 each source's band rows append back to a persisted banded store, the
 cap is re-evaluated per batch over the grown store, and the oracle
 certifies the whole loop with a per-probe-state prefix-source replay.
@@ -37,39 +37,14 @@ certifies the whole loop with a per-probe-state prefix-source replay.
 
 from __future__ import annotations
 
-import atexit
-
-from ..functions.lineage import lineage_cut
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: one parquet file per micro-batch, keyed like sessionize._CHUNK_CACHE
-#: plus the documents file's (mtime_ns, size) fingerprint (ADVICE r11:
-#: a regenerated corpus at the same path must not serve stale chunks)
-_PROBE_CHUNK_CACHE: dict[tuple, str] = {}
-
-#: every mkdtemp this module creates, reaped at interpreter exit
-#: (ADVICE r11: bench loops and the chunk-invariance tests used to
-#: accumulate pair/chunk directories for the process lifetime)
-_TMP_DIRS: list[str] = []
-
-
-def _mkdtemp(prefix: str) -> str:
-    d = tempfile.mkdtemp(prefix=prefix)
-    _TMP_DIRS.append(d)
-    return d
-
-
-@atexit.register
-def _reap_tmp_dirs() -> None:
-    for d in _TMP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _TMP_DIRS.clear()
-
+from ..functions.lineage import lineage_cut
+from .replay import cached_dir, chunk_table, mkdtemp, read_chunks, run_bounded
 
 _PAIRS_SCHEMA = "doc_a long, doc_b long, hamming long"
 _PROBE_DOC_SCHEMA = "doc_id long, text string"
@@ -78,8 +53,7 @@ _PROBE_DOC_SCHEMA = "doc_id long, text string"
 def _src_num(col):
     """The numeric tail of a source id ('src15' → 15) — substr from
     position 4 with NO length cap, textually lockstep with the SQL
-    twins' unbounded substr(source, 4) (ADVICE r11: the old 8-char cap
-    was a latent divergence for srcN with N >= 10^8)."""
+    twins' unbounded substr(source, 4)."""
     return F.substring(col, 4, 2147483647).cast("int")
 
 
@@ -92,71 +66,34 @@ def _store_pred(col):
     return _src_num(col) < F.lit(_NEARDUP_STORE_SOURCES)
 
 
-def _documents_fingerprint(sf_dir: str) -> tuple:
-    """(mtime_ns, size) of the documents parquet — cheap change signal
-    for the chunk cache (ADVICE r11: a corpus regenerated in place at
-    the same sf_dir must invalidate cached chunk layouts)."""
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(p)
-    except OSError:
-        return (None, None)
-    return (st.st_mtime_ns, st.st_size)
-
-
 def _chunked_probe_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
     """Split the NEW-batch documents (source ≥ src10) into ``n_chunks``
     parquet files — one FileStreamSource micro-batch each — grouping
     whole ingest sources per chunk (chunk = source_number % n_chunks),
     so every micro-batch carries a whole number of ingest batches, the
-    way an ingest queue delivers them. Layout is a pure function of the
-    corpus + chunk count; mtimes are pinned so FileStreamSource replays
-    chunks in index order. Distributed end-to-end: one partitioned
-    write, no driver-side materialization."""
+    way an ingest queue delivers them (:func:`replay.chunk_table`)."""
     from ..operators.dedup import _NEARDUP_STORE_SOURCES
     from ..operators.registry import load
 
-    key = (sf_dir, n_chunks, _documents_fingerprint(sf_dir))
-    cached = _PROBE_CHUNK_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    d = load(spark, sf_dir, "documents")
-    probe_docs = d.filter(~_store_pred(F.col("source"))).select(
-        "doc_id",
-        "text",
-        ((_src_num(F.col("source")) - _NEARDUP_STORE_SOURCES) % n_chunks).alias(
-            "__chunk"
-        ),
-    )
-    out = _mkdtemp("neardup_probe_chunks_")
-    staging = tempfile.mkdtemp(prefix="neardup_probe_staging_")
-    probe_docs.repartition(n_chunks, "__chunk").write.mode("overwrite").partitionBy(
-        "__chunk"
-    ).parquet(staging)
-    for sub in os.listdir(staging):
-        if not sub.startswith("__chunk="):
-            continue
-        i = int(sub.split("=", 1)[1])
-        parts = [
-            f
-            for f in os.listdir(os.path.join(staging, sub))
-            if f.endswith(".parquet")
-        ]
-        assert len(parts) == 1, f"chunk {i}: expected 1 file, got {parts}"
-        path = os.path.join(out, f"chunk_{i:03d}.parquet")
-        os.rename(os.path.join(staging, sub, parts[0]), path)
-        # FileStreamSource orders by modification time; pin it explicitly
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    _PROBE_CHUNK_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        d = load(spark, sf_dir, "documents")
+        return d.filter(~_store_pred(F.col("source"))).select(
+            "doc_id",
+            "text",
+            ((_src_num(F.col("source")) - _NEARDUP_STORE_SOURCES) % n_chunks).alias(
+                "__chunk"
+            ),
+        )
+
+    return chunk_table(
+        spark, "neardup_probe_chunks", sf_dir, "documents", n_chunks, build
+    ).path
 
 
 def _store_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The historical corpus reduced ONCE to its banded, hot-bucket-
     capped signature rows, materialized for reuse across every
-    micro-batch's probe join (r11 review: the first version re-exploded
-    and re-capped the store per foreachBatch call). Lineage-cut policy
+    micro-batch's probe join. Lineage-cut policy
     + cluster caveat: functions.lineage.lineage_cut — a fault-tolerant
     deployment swaps in a persisted BANDED signature TABLE (the
     production form anyway, see the module docstring)."""
@@ -165,13 +102,11 @@ def _store_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import simhash_sig
 
     d = load(spark, sf_dir, "documents")
-    # EAGER inner cut (r12 review): the band rows feed the bucket-size
-    # pass AND the cap join, so without a cut the Arrow signature tally
-    # — the dominant cost — would run twice while the outer checkpoint
-    # materializes. The inner blocks are dropped by the ContextCleaner
-    # once `bands` goes out of scope (the returned capped copy has its
-    # own truncated lineage), so the ADVICE r11 concern — holding the
-    # uncapped rows for the stream's whole lifetime — stays closed.
+    # EAGER inner cut: the band rows feed the bucket-size pass AND the
+    # cap join, so without a cut the Arrow signature tally — the
+    # dominant cost — would run twice while the outer checkpoint
+    # materializes. The ContextCleaner drops the uncapped blocks once
+    # `bands` goes out of scope (the capped copy has its own lineage).
     bands = lineage_cut(
         _simhash_bands(simhash_sig(d.filter(_store_pred(F.col("source"))), spark)),
         eager=True,
@@ -196,11 +131,7 @@ def _run_probe_phase(
     from ..operators.dedup import _banded_hamming_pairs
     from ..operators.text import simhash_sig
 
-    raw = (
-        spark.readStream.schema(_PROBE_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch_dir)
-    )
+    raw = read_chunks(spark, watch_dir, _PROBE_DOC_SCHEMA)
 
     def _probe_batch(batch_df: DataFrame, _batch_id: int) -> None:
         batch_sig = simhash_sig(batch_df, spark)
@@ -210,11 +141,7 @@ def _run_probe_phase(
     writer = raw.writeStream.foreachBatch(_probe_batch)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_bounded(writer)
 
 
 def _final_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -244,13 +171,13 @@ def stream_neardup_probe(
     values as the batch/DuckDB oracle on streaming_neardup_probe."""
     store_bands = _store_bands(spark, sf_dir)
     watch_dir = _chunked_probe_docs_dir(spark, sf_dir, n_chunks)
-    out_dir = _mkdtemp("neardup_probe_pairs_")
+    out_dir = mkdtemp("neardup_probe_pairs_")
     _run_probe_phase(spark, store_bands, watch_dir, out_dir)
     return _final_pairs(spark, out_dir)
 
 
 # --------------------------------------------------------------------------
-# Maintained-store form (r12, VERDICT r11 item 2): the probe op keeps
+# Maintained-store form: the probe op keeps
 # the store immutable; here each ingest batch's signatures are appended
 # BACK to a persisted BANDED store after probing it, so later batches
 # dedup against earlier ingest too — self-deduplicating ingest, the
@@ -281,55 +208,24 @@ def _chunked_ingest_dir(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
     from ..operators.dedup import _NEARDUP_STORE_SOURCES
     from ..operators.registry import load
 
-    key = ("maint", sf_dir, n_chunks, _documents_fingerprint(sf_dir))
-    cached = _PROBE_CHUNK_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    d = load(spark, sf_dir, "documents")
-    src = _src_num(F.col("source"))
-    n_ingest = (
-        d.agg(F.max(src).alias("m")).collect()[0]["m"] - _NEARDUP_STORE_SOURCES + 1
-    )
-    probe_docs = d.filter(~_store_pred(F.col("source"))).select(
-        "doc_id",
-        "text",
-        src.cast("int").alias("src"),
-        (
-            ((src - _NEARDUP_STORE_SOURCES) * n_chunks / F.lit(n_ingest)).cast("int")
-        ).alias("__chunk"),
-    )
-    out = _mkdtemp("neardup_maint_chunks_")
-    staging = tempfile.mkdtemp(prefix="neardup_maint_staging_")
-    probe_docs.repartition(n_chunks, "__chunk").write.mode("overwrite").partitionBy(
-        "__chunk"
-    ).parquet(staging)
-    for sub in os.listdir(staging):
-        if not sub.startswith("__chunk="):
-            continue
-        i = int(sub.split("=", 1)[1])
-        parts = [
-            f
-            for f in os.listdir(os.path.join(staging, sub))
-            if f.endswith(".parquet")
-        ]
-        assert len(parts) == 1, f"chunk {i}: expected 1 file, got {parts}"
-        path = os.path.join(out, f"chunk_{i:03d}.parquet")
-        os.rename(os.path.join(staging, sub, parts[0]), path)
-        # FileStreamSource orders by modification time; pin it explicitly
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    _PROBE_CHUNK_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        d = load(spark, sf_dir, "documents")
+        src = _src_num(F.col("source"))
+        n_ingest = (
+            d.agg(F.max(src).alias("m")).collect()[0]["m"] - _NEARDUP_STORE_SOURCES + 1
+        )
+        return d.filter(~_store_pred(F.col("source"))).select(
+            "doc_id",
+            "text",
+            src.cast("int").alias("src"),
+            (
+                ((src - _NEARDUP_STORE_SOURCES) * n_chunks / F.lit(n_ingest)).cast("int")
+            ).alias("__chunk"),
+        )
 
-
-#: INITIAL-store cache: the historical corpus's banded form is a PURE
-#: FUNCTION of the immutable source table (same replay-input doctrine
-#: as _PROBE_CHUNK_CACHE — generation is setup, not the loop being
-#: measured), so the simhash tally over src0..src9 runs once per
-#: (corpus, process). Keyed by the documents fingerprint so an
-#: in-place corpus regeneration invalidates it; band rows derive from
-#: text alone, so no session-TZ key is needed.
-_INIT_STORE_CACHE: dict[tuple, str] = {}
+    return chunk_table(
+        spark, "neardup_maint_chunks", sf_dir, "documents", n_chunks, build
+    ).path
 
 
 def _init_store_bands_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -338,40 +234,39 @@ def _init_store_bands_dir(spark: SparkSession, sf_dir: str) -> str:
     the hot-bucket cap is recomputed per batch because the store (and
     so each bucket's population) grows as ingest is accepted.
 
-    Every call returns its OWN fresh directory (the loop mutates its
-    store: appends per batch, file swap on compaction), seeded from the
-    cached build by hard link — safe because store part files are never
-    modified in place (appends create new UUID-named files; compaction
-    unlinks, which leaves the cached originals untouched)."""
+    The build is a pure function of the corpus and the banding
+    geometry, so it runs once per key of :func:`replay.cached_dir`; the
+    geometry is read LIVE into the key, so an in-process change to band
+    count or width (a test monkeypatching it) rebuilds the store instead
+    of serving one banded under the old math. Every call returns its
+    OWN fresh directory (the loop mutates its store: appends per batch,
+    file swap on compaction), seeded from the cached build by hard
+    link — safe because store part files are never modified in place
+    (appends create new UUID-named files; compaction unlinks, which
+    leaves the cached originals untouched)."""
     from ..operators import dedup
     from ..operators.dedup import _bands_with_src
     from ..operators.registry import load
     from ..operators.text import simhash_sig
 
-    # the banding geometry is part of the key, read LIVE at call time
-    # (ADVICE r13): an in-process change to band count/width — e.g. a
-    # test monkeypatching the geometry — self-invalidates the cache
-    # instead of silently serving a store banded under the old math
-    key = (
-        "store0",
-        sf_dir,
-        _documents_fingerprint(sf_dir),
-        dedup._SIMHASH_BANDS,
-        dedup._SIMHASH_BAND_BITS,
-    )
-    cached = _INIT_STORE_CACHE.get(key)
-    if cached is None or not os.path.isdir(cached):
-        cached = _mkdtemp("neardup_store_bands_cache_")
-        d = load(spark, sf_dir, "documents")
-        hist = d.filter(_store_pred(F.col("source")))
+    def fill(out: str) -> None:
+        hist = load(spark, sf_dir, "documents").filter(_store_pred(F.col("source")))
         src_of = hist.select(
             "doc_id", _src_num(F.col("source")).cast("int").alias("src")
         )
         _bands_with_src(simhash_sig(hist, spark), src_of).write.mode(
             "overwrite"
-        ).parquet(cached)
-        _INIT_STORE_CACHE[key] = cached
-    store_dir = _mkdtemp("neardup_store_bands_")
+        ).parquet(out)
+
+    cached = cached_dir(
+        spark,
+        "neardup_store_bands_cache",
+        sf_dir,
+        "documents",
+        (dedup._SIMHASH_BANDS, dedup._SIMHASH_BAND_BITS),
+        fill,
+    ).path
+    store_dir = mkdtemp("neardup_store_bands_")
     for f in os.listdir(cached):
         if f.endswith(".parquet"):
             os.link(os.path.join(cached, f), os.path.join(store_dir, f))
@@ -389,10 +284,10 @@ def _probe_and_grow(
     PRE-BANDED rows (doc_id, simhash, bk, band_key, src — one or more
     whole CONTIGUOUS ingest sources) against the store as of strictly
     earlier sources via ``dedup._banded_prefix_pairs`` (ONE join for
-    the whole batch, cap evaluated per probe state — the r12 perf
-    pass: the per-source loop re-scanned and re-capped the store once
-    per source), append the top-50 pairs, then append the batch's own
-    band rows so later batches see them.
+    the whole batch, cap evaluated per probe state, so the store is
+    scanned once per batch, not once per source), append the top-50
+    pairs, then append the batch's own band rows so later batches see
+    them.
 
     Replay idempotence: the store read keeps only src < min(batch) —
     a replayed batch's own first-attempt rows (src ≥ min) are excluded,
@@ -436,11 +331,7 @@ def _run_maintenance_phase(
     from ..operators.dedup import _bands_with_src
     from ..operators.text import simhash_sig
 
-    raw = (
-        spark.readStream.schema(_MAINT_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch_dir)
-    )
+    raw = read_chunks(spark, watch_dir, _MAINT_DOC_SCHEMA)
 
     def _maint_batch(batch_df: DataFrame, _batch_id: int) -> None:
         # the band rows feed four consumers (state list, sizing, probe
@@ -455,11 +346,7 @@ def _run_maintenance_phase(
     writer = raw.writeStream.foreachBatch(_maint_batch)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_bounded(writer)
 
 
 def stream_neardup_store_maintenance(
@@ -472,13 +359,13 @@ def stream_neardup_store_maintenance(
     prefix-source oracle on streaming_neardup_store_maintenance."""
     store_dir = _init_store_bands_dir(spark, sf_dir)
     watch_dir = _chunked_ingest_dir(spark, sf_dir, n_chunks)
-    out_dir = _mkdtemp("neardup_maint_pairs_")
+    out_dir = mkdtemp("neardup_maint_pairs_")
     _run_maintenance_phase(spark, store_dir, watch_dir, out_dir)
     return _final_pairs(spark, out_dir)
 
 
 # --------------------------------------------------------------------------
-# Store COMPACTION (r13, VERDICT r12 item 3): the OPTIMIZE step every
+# Store COMPACTION: the OPTIMIZE step every
 # appended table needs at 100 TB. At-least-once appends leave duplicate
 # band rows in the store; the probe absorbs them with a DISTINCT on
 # every read, which is correct but pays the dedup cost per batch
@@ -495,9 +382,8 @@ def compact_store_bands(spark: SparkSession, store_dir: str) -> tuple[int, int]:
 
     The rewrite stages to a fresh directory, and the swap moves the
     staged files IN before the old files go — new-then-delete, never
-    delete-then-new (r13 review: the first draft removed the old part
-    files first, so a crash between the two loops left a gutted store
-    that later probes would read as silently-missing history). Staged
+    delete-then-new, which would leave a gutted store (silently missing
+    history) after a crash between the two loops. Staged
     part names are fresh UUIDs, so they cannot collide with the
     existing files; a crash at ANY point leaves the store holding the
     old rows, the new rows, or both — and "both" is just duplicates,
@@ -514,7 +400,7 @@ def compact_store_bands(spark: SparkSession, store_dir: str) -> tuple[int, int]:
     Runs out-of-band of the ingest loop."""
     before = spark.read.schema(_STORE_BANDS_SCHEMA).parquet(store_dir)
     n_before = before.count()
-    staging = _mkdtemp("neardup_store_compact_")
+    staging = mkdtemp("neardup_store_compact_")
     before.distinct().write.mode("overwrite").parquet(staging)
     n_after = spark.read.schema(_STORE_BANDS_SCHEMA).parquet(staging).count()
     old = [f for f in os.listdir(store_dir) if f.endswith(".parquet")]
@@ -565,10 +451,10 @@ def stream_neardup_store_compaction(
     rewrite, and one batch per phase exercises it fully."""
     store_dir = _init_store_bands_dir(spark, sf_dir)
     watch_all = _chunked_ingest_dir(spark, sf_dir, n_chunks)
-    out_dir = _mkdtemp("neardup_maint_pairs_")
+    out_dir = mkdtemp("neardup_maint_pairs_")
     files = sorted(f for f in os.listdir(watch_all) if f.endswith(".parquet"))
-    first_dir = _mkdtemp("neardup_compact_phase1_")
-    second_dir = _mkdtemp("neardup_compact_phase2_")
+    first_dir = mkdtemp("neardup_compact_phase1_")
+    second_dir = mkdtemp("neardup_compact_phase2_")
     for i, f in enumerate(files):
         dst = first_dir if i < compact_after else second_dir
         os.link(os.path.join(watch_all, f), os.path.join(dst, f))

@@ -27,20 +27,23 @@ deterministic while exercising identical state-transition code.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .events_stream import _probe_events_schema
+from .replay import (
+    REPLAY_PANDAS_STATE_PARTITIONS,
+    REPLAY_STATE_PARTITIONS,
+    ReplayDir,
+    chunk_table,
+    read_chunks,
+    run_bounded,
+)
 
 
 def _wall_ts(col):
-    """Session-TZ-proof event-time canonicalization (r6): ``ts`` arrives
+    """Session-TZ-proof event-time canonicalization: ``ts`` arrives
     as an NTZ→TIMESTAMP cast whose epoch carries the session offset;
     re-adding it makes the epoch equal the wall clock read as UTC, so
     tumbling ``window()`` buckets align to WALL hours under any session
@@ -61,15 +64,10 @@ SESSION_GAP_S = 30 * 60
 #: sketch (stream_hour_rollup) — the knob everything below derives from
 HLL_RSD = 0.02
 
-#: certified relative envelope DERIVED from the sketch's rsd (ADVICE
-#: r12: the previous hand-tuned 5% was only ~2.5 sigma of headroom —
-#: validated at sf0.01/sf0.1 where measured max error is 1-3 users,
-#: but a single unlucky window at a larger SF, or a Spark-version
-#: change to the HLL++ register math, could breach it and fail the
-#: op's certification as if it were a correctness bug). 4 standard
-#: deviations keeps the per-window breach probability ~1e-4 AT ANY
-#: SCALE FACTOR, so a future red row here should be diagnosed as a
-#: sketch-implementation change, not an envelope issue.
+#: certified relative envelope DERIVED from the sketch's rsd: 4
+#: standard deviations keep the per-window breach probability ~1e-4 at
+#: any scale factor, so a red row here points at a change in the HLL++
+#: register math, not at the envelope.
 HLL_REL_MARGIN = 4 * HLL_RSD
 
 #: absolute floor (users) for tiny per-window cardinalities: Spark's
@@ -128,116 +126,33 @@ def _sessionize_user(key, pdf_iter, state: GroupState):
     )
 
 
-#: replay-input cache: the chunk layout is a PURE FUNCTION of the
-#: immutable source table + chunk count (deterministic order, pinned
-#: mtimes), so rebuilding it per run is wasted setup — reuse is as
-#: legitimate as reusing the source parquet itself. Each streaming op's
-#: replay (the thing being measured) still runs in full every call.
-#: keyed by (sf_dir, n_chunks, session TZ): the chunk files store ts as
-#: an instant whose epoch embeds the session offset in effect when the
-#: NTZ source was cast, so chunks written under one session timezone
-#: must never be replayed under another (the r6 hostile-TZ suite run
-#: caught exactly that cross-TZ cache hit)
-_CHUNK_CACHE: dict[tuple[str, int, str], str] = {}
-
-#: state-store partition counts for the bounded certification replays.
-#: The state-store layout follows spark.sql.shuffle.partitions at query
-#: START, and per-micro-batch overhead has two opposing terms:
-#: per-PARTITION cost (state-store commit + delta file + exchange — and
-#: for pandas state ops a Python worker round) vs per-GROUP Python cost
-#: that parallelizes ACROSS partitions. Replay key cardinality is a few
-#: hundred users/windows, so the JVM-state replays (stream-stream join
-#: buffer, dropDuplicates, windowed/complete aggregation) want FEW
-#: partitions — measured at sf0.1 on the join replay: 8 → 4.5 s,
-#: 2 → 2.3–3.0 s, identical results. The applyInPandasWithState
-#: replays invert: their per-user pandas calls are Python-bound, and 2
-#: partitions serializes them onto 2 workers (sessionization 10.4 s vs
-#: 3.7 s at 8) — they get 16 (A/B'd vs 8 across box-load conditions:
-#: equal-or-better both times, and wider spread degrades less under
-#: contention). Results are partition-count-invariant either way;
-#: production unbounded runs size to key cardinality.
-REPLAY_STATE_PARTITIONS = "2"
-REPLAY_PANDAS_STATE_PARTITIONS = "16"
-
-
-def _chunked_events_dir(spark: SparkSession, sf_dir: str, n_chunks: int) -> str:
-    """Split the events table into ``n_chunks`` time-ordered parquet
-    files in a temp dir, so FileStreamSource (maxFilesPerTrigger=1)
-    replays them as successive micro-batches — every user active in
-    more than one time slice crosses batch boundaries and exercises the
-    cross-batch state path.
-
-    Fully distributed: global (ts, event_id) rank via the funnel-free
-    two-phase pattern (operators.record_id), chunk = rank ÷ step, then
-    ONE partitioned parquet write — each chunk's rows hash to exactly
-    one shuffle partition, so the writer emits exactly one file per
-    chunk. No driver-side materialization of the table (the old
-    ``toPandas`` writer was the one collect-class call in the repo that
-    grew with the input); the only driver data is the row count and the
-    per-partition offset map. The layout stays a pure function of the
-    source table + chunk count: equal-count time slices, pinned mtimes.
-    """
+def _chunked_events_dir(spark: SparkSession, sf_dir: str, n_chunks: int) -> ReplayDir:
+    """The events table as ``n_chunks`` equal-count, time-ordered chunks
+    (:func:`replay.chunk_table`), so every user active in more than one
+    time slice crosses batch boundaries and exercises the cross-batch
+    state path. Chunk = global (ts, event_id) rank ÷ step, with the rank
+    from the funnel-free two-phase pattern (operators.record_id): the
+    only driver data is the row count and the per-partition offset map.
+    Chunks hold ``ts`` as registry.load normalizes it, a session-TZ
+    TIMESTAMP, whatever the on-disk encoding."""
     from ..operators.record_id import with_record_id
     from ..operators.registry import load
 
-    key = (sf_dir, n_chunks, spark.conf.get("spark.sql.session.timeZone"))
-    cached = _CHUNK_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    # the schema-adaptive loader normalizes either on-disk ts encoding
-    # to a session-TZ TIMESTAMP; chunks re-encode as Spark parquet
-    # TIMESTAMP(µs, UTC), so the stream probe below never needs the
-    # legacy nanos path
-    ev = load(spark, sf_dir, "events")
-    n_rows = ev.count()
-    step = (n_rows + n_chunks - 1) // n_chunks
-    ranked = with_record_id(ev, ["ts", "event_id"], id_col="__rid", mode="scaled")
-    chunked = (
-        ranked.withColumn("__chunk", F.expr(f"CAST((__rid - 1) DIV {step} AS INT)"))
-        .drop("__rid")
-        .repartition(n_chunks, "__chunk")
-    )
-    # staging lives OUTSIDE the watch dir: the stream's schema probe and
-    # FileStreamSource must see nothing but the final chunk files
-    out = tempfile.mkdtemp(prefix="events_chunks_")
-    staging = tempfile.mkdtemp(prefix="events_chunks_staging_")
-    chunked.write.mode("overwrite").partitionBy("__chunk").parquet(staging)
-    for d in os.listdir(staging):
-        if not d.startswith("__chunk="):
-            continue
-        i = int(d.split("=", 1)[1])
-        parts = [
-            f for f in os.listdir(os.path.join(staging, d)) if f.endswith(".parquet")
-        ]
-        assert len(parts) == 1, f"chunk {i}: expected 1 file, got {parts}"
-        path = os.path.join(out, f"chunk_{i:03d}.parquet")
-        os.rename(os.path.join(staging, d, parts[0]), path)
-        # FileStreamSource orders by modification time; pin it explicitly
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    _CHUNK_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        ev = load(spark, sf_dir, "events")
+        step = (ev.count() + n_chunks - 1) // n_chunks
+        ranked = with_record_id(ev, ["ts", "event_id"], id_col="__rid", mode="scaled")
+        return ranked.withColumn(
+            "__chunk", F.expr(f"CAST((__rid - 1) DIV {step} AS INT)")
+        ).drop("__rid")
+
+    return chunk_table(spark, "events_chunks", sf_dir, "events", n_chunks, build)
 
 
-def _read_chunked_stream(spark: SparkSession, watch_dir: str) -> DataFrame:
-    """FileStreamSource over a chunk dir (one file per micro-batch),
-    with the same schema-adaptive ts normalization as registry.load —
-    shared by the sessionizer and the rollup replay."""
-    schema = _probe_events_schema(
-        spark, os.path.join(watch_dir, sorted(os.listdir(watch_dir))[0])
-    )
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch_dir)
-    )
-    from pyspark.sql import types as T
-
-    if isinstance(schema["ts"].dataType, T.LongType):  # nanos-long encoding
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+def _read_chunked_stream(spark: SparkSession, chunks: ReplayDir) -> DataFrame:
+    """FileStreamSource over an events chunk dir, read with the schema
+    the chunker recorded."""
+    return read_chunks(spark, chunks.path, chunks.schema)
 
 
 def stream_sessionization(
@@ -247,8 +162,7 @@ def stream_sessionization(
     completion and return the FINAL per-user session stats — same
     columns, same values as the batch ``sessionization`` query (and its
     DuckDB oracle)."""
-    watch_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
-    raw = _read_chunked_stream(spark, watch_dir)
+    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
 
     updates = (
         raw.select("user_id", "ts", "event_id")
@@ -262,25 +176,10 @@ def stream_sessionization(
         )
     )
     name = "sessionize_updates"
-    # pin the replay state layout (see REPLAY_STATE_PARTITIONS) and
-    # restore the session conf after
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", REPLAY_PANDAS_STATE_PARTITIONS
+    run_bounded(
+        updates.writeStream.outputMode("update").format("memory").queryName(name),
+        REPLAY_PANDAS_STATE_PARTITIONS,
     )
-    try:
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     all_updates = spark.sql(f"SELECT * FROM {name}")
     # final row per user = the update with the largest n_events
@@ -310,7 +209,7 @@ def stream_hour_rollup(
     (operators.events.events_hour_agg). Exact DISTINCT inside a
     streaming aggregate isn't expressible (a documented engine
     boundary), so the distinct-user column ships the way production
-    ships it (r12, VERDICT r11 item 4): HyperLogLog++
+    ships it: HyperLogLog++
     ``approx_count_distinct`` INSIDE the streaming aggregate, certified
     with the approx_distinct_bound pattern — the oracle pins the exact
     per-window count and a constant TRUE that the stream's sketch must
@@ -329,8 +228,7 @@ def stream_hour_rollup(
     window expression with a 2 h watermark and append output to a real
     sink. State here is O(hours × event types), not O(events) — the
     HLL buffer is a fixed ~kB per (hour, type) group at rsd=0.02."""
-    watch_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
-    raw = _read_chunked_stream(spark, watch_dir)
+    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
     rolled = (
         raw.groupBy(F.window(_wall_ts(F.col("ts")), "1 hour").alias("win"), "event_type")
         .agg(
@@ -340,21 +238,10 @@ def stream_hour_rollup(
         )
     )
     name = "hour_rollup_replay"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", REPLAY_STATE_PARTITIONS)
-    try:
-        q = (
-            rolled.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_bounded(
+        rolled.writeStream.outputMode("complete").format("memory").queryName(name),
+        REPLAY_STATE_PARTITIONS,
+    )
     # the bound column is earned against the BATCH-exact distinct count
     # (tiny: hours × event-types rows, computed once after stream end —
     # the stream itself never does an exact DISTINCT)
@@ -419,9 +306,9 @@ def stream_view_purchase_join(
     Scale shape: the join shuffles both streams on user_id once;
     per-micro-batch work is new-rows × matching-state, with state
     bounded by the watermark horizon in the production form."""
-    watch_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
+    chunks = _chunked_events_dir(spark, sf_dir, n_chunks)
     views = (
-        _read_chunked_stream(spark, watch_dir)
+        _read_chunked_stream(spark, chunks)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -430,7 +317,7 @@ def stream_view_purchase_join(
         )
     )
     purchases = (
-        _read_chunked_stream(spark, watch_dir)
+        _read_chunked_stream(spark, chunks)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -445,21 +332,10 @@ def stream_view_purchase_join(
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
     name = "view_purchase_pairs"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", REPLAY_STATE_PARTITIONS)
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_bounded(
+        joined.writeStream.outputMode("append").format("memory").queryName(name),
+        REPLAY_STATE_PARTITIONS,
+    )
     # the pair set is the certified object; roll it up per user so the
     # result is small and deterministically ordered
     return (
@@ -494,30 +370,19 @@ def stream_dedup_replay(
     within the lateness horizon); the bounded replay keeps full state
     so the answer is exact.
     """
-    watch_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
-    a = _read_chunked_stream(spark, watch_dir)
-    b = _read_chunked_stream(spark, watch_dir)
+    chunks = _chunked_events_dir(spark, sf_dir, n_chunks)
+    a = _read_chunked_stream(spark, chunks)
+    b = _read_chunked_stream(spark, chunks)
     deduped = (
         a.unionByName(b)
         .select("event_id", "event_type", "value")
         .dropDuplicates(["event_id"])
     )
     name = "dedup_replay_events"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", REPLAY_STATE_PARTITIONS)
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_bounded(
+        deduped.writeStream.outputMode("append").format("memory").queryName(name),
+        REPLAY_STATE_PARTITIONS,
+    )
     out = spark.sql(f"SELECT * FROM {name}")
     return (
         out.groupBy("event_type")
@@ -582,8 +447,7 @@ def stream_cdc_compaction(
     compacted table, maintained incrementally — no periodic rewrite of
     cold keys, which is the advantage over batch compaction at 100 TB.
     """
-    watch_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
-    raw = _read_chunked_stream(spark, watch_dir)
+    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
     updates = (
         raw.select("user_id", "ts", "event_id", "event_type", "value")
         .groupBy("user_id")
@@ -596,23 +460,10 @@ def stream_cdc_compaction(
         )
     )
     name = "cdc_compaction_updates"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", REPLAY_PANDAS_STATE_PARTITIONS
+    run_bounded(
+        updates.writeStream.outputMode("update").format("memory").queryName(name),
+        REPLAY_PANDAS_STATE_PARTITIONS,
     )
-    try:
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.sql(f"SELECT * FROM {name}")
     final = (
         out.groupBy("user_id")

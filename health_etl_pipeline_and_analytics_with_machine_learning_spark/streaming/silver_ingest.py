@@ -25,7 +25,6 @@ both engines — no streaming fork of the pipeline to keep in sync.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +33,7 @@ from pyspark.sql import types as T
 from ..functions.cleaning import null_na_tokens
 from ..pipeline import stage_rowwise
 from ..sources.ingest import SPARK_CHARSET, detect_encoding
+from .replay import mkdtemp, run_bounded
 
 
 def chunk_csv(raw_csv: str, n_chunks: int) -> str:
@@ -44,7 +44,7 @@ def chunk_csv(raw_csv: str, n_chunks: int) -> str:
     with open(raw_csv, "rb") as f:
         lines = f.read().splitlines(keepends=True)
     header, body = lines[0], lines[1:]
-    out = tempfile.mkdtemp(prefix="csv_chunks_")
+    out = mkdtemp("csv_chunks_")
     step = (len(body) + n_chunks - 1) // n_chunks
     for i in range(n_chunks):
         part = body[i * step : (i + 1) * step]
@@ -94,14 +94,5 @@ def stream_bronze_ingest(
         )
         cleaned.write.mode("append").parquet(out_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = raw.writeStream.foreachBatch(_bronze_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_bounded(raw.writeStream.foreachBatch(_bronze_batch), "8")
     return spark.read.parquet(out_dir)

@@ -176,3 +176,26 @@ def test_streaming_neardup_probe_batch_boundary_invariance(spark):
         assert doc_a not in store_ids, (doc_a, "probe side must be ingest docs")
         assert doc_b in store_ids, (doc_b, "store side must be history docs")
         assert 0 <= hamming <= 12
+
+
+def test_bounded_replays_go_through_the_replay_module():
+    """Every bounded replay drains and pins its shuffle partitions in
+    streaming/replay.py (run_bounded) and nowhere else; the session
+    builder's ``.config`` is not a ``conf.set`` and stays exempt."""
+    import pathlib
+    import re
+
+    import health_etl_pipeline_and_analytics_with_machine_learning_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    banned = re.compile(
+        r"processAllAvailable\(|conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions"
+    )
+    offenders = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "streaming" / "replay.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert offenders == []

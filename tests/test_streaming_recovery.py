@@ -18,19 +18,23 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.events import (
     sessionization,
 )
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.replay import (
+    mkdtemp,
+    read_chunks,
+    run_bounded,
+)
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
     _OUT_SCHEMA,
     _STATE_SCHEMA,
     _chunked_events_dir,
-    _read_chunked_stream,
     _sessionize_user,
 )
 
 from conftest import SF_SMOKE
 
 
-def _run_phase(spark, watch_dir: str, ckpt: str, out: str) -> None:
-    raw = _read_chunked_stream(spark, watch_dir)
+def _run_phase(spark, watch_dir: str, schema, ckpt: str, out: str) -> None:
+    raw = read_chunks(spark, watch_dir, schema)
     updates = (
         raw.select("user_id", "ts", "event_id")
         .groupBy("user_id")
@@ -42,39 +46,28 @@ def _run_phase(spark, watch_dir: str, ckpt: str, out: str) -> None:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            updates.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_bounded(
+        updates.writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(lambda df, _bid: df.write.mode("append").parquet(out)),
+        "8",
+    )
 
 
 def test_sessionizer_recovers_state_from_checkpoint(spark, tmp_path):
     src = _chunked_events_dir(spark, SF_SMOKE, 3)
     watch = str(tmp_path / "watch")
     os.makedirs(watch)
-    chunks = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    chunks = sorted(f for f in os.listdir(src.path) if f.endswith(".parquet"))
     assert len(chunks) == 3
     for f in chunks[:2]:  # phase 1 sees only the first two time slices
-        shutil.copy2(os.path.join(src, f), os.path.join(watch, f))
+        shutil.copy2(os.path.join(src.path, f), os.path.join(watch, f))
 
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "updates")
-    _run_phase(spark, watch, ckpt, out)
+    _run_phase(spark, watch, src.schema, ckpt, out)
     # simulated failure window: the query is down while data arrives
-    shutil.copy2(os.path.join(src, chunks[2]), os.path.join(watch, chunks[2]))
-    _run_phase(spark, watch, ckpt, out)  # restart from the SAME checkpoint
+    shutil.copy2(os.path.join(src.path, chunks[2]), os.path.join(watch, chunks[2]))
+    _run_phase(spark, watch, src.schema, ckpt, out)  # restart from the SAME checkpoint
 
     # final totals = max-n_events update per user across BOTH phases
     got = (
@@ -400,11 +393,7 @@ def test_compaction_swap_is_crash_safe_at_every_point(spark, tmp_path):
     # staging must share the store dir's temp root: the swap replay
     # uses os.rename exactly like compact_store_bands, and pytest's
     # tmp_path can sit on a different mount (EXDEV)
-    from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.neardup import (
-        _mkdtemp,
-    )
-
-    staging = _mkdtemp("compact_crash_staging_")
+    staging = mkdtemp("compact_crash_staging_")
     before.distinct().write.mode("overwrite").parquet(staging)
     assert probe() == want  # crash after staging: store untouched
 
@@ -464,7 +453,6 @@ def test_store_lifecycle_interleaving_patrol(spark):
         _STORE_BANDS_SCHEMA,
         _init_store_bands_dir,
         _inject_duplicate_appends,
-        _mkdtemp,
         _probe_and_grow,
         _src_num,
         _store_pred,
@@ -501,7 +489,7 @@ def test_store_lifecycle_interleaving_patrol(spark):
 
     def _crashed_swap(store_dir):
         before = spark.read.schema(_STORE_BANDS_SCHEMA).parquet(store_dir)
-        staging = _mkdtemp("patrol_crash_staging_")
+        staging = mkdtemp("patrol_crash_staging_")
         before.distinct().write.mode("overwrite").parquet(staging)
         for f in os.listdir(staging):
             if f.endswith(".parquet"):
