@@ -635,10 +635,11 @@ def forward_fill_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of ``sessionization``, certified by the SAME
     oracle: the events table is replayed as time-ordered micro-batches
-    through an ``applyInPandasWithState`` stateful operator (per-user
-    O(1) state), and the bounded stream's final per-user session stats
-    must hash-match the batch/DuckDB gaps-and-islands answer. See
-    streaming/sessionize.py for the operator and its scale notes."""
+    through a native ``session_window`` count (1800 s gap, session state
+    kept across micro-batches), and the bounded stream's final per-user
+    session stats must hash-match the batch/DuckDB gaps-and-islands
+    answer. See streaming/sessionize.py for the gap-edge rule and the
+    production form."""
     from ..streaming.sessionize import stream_sessionization
 
     return stream_sessionization(spark, sf_dir)
@@ -704,9 +705,9 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM join, oracle-certified: purchases join the same
     user's views within the preceding hour, both sides replayed as
     independent micro-batch streams; the bounded stream's pair set must
-    hash-match the batch/DuckDB range join. Third certified streaming
-    operator class (windowed agg, custom applyInPandasWithState state,
-    and now the stateful stream-stream join buffer). See
+    hash-match the batch/DuckDB range join. The stateful stream-stream
+    join buffer is the certified operator class next to the windowed
+    and session-window aggregations. See
     streaming/sessionize.py for the production watermark form and
     streaming/replay.py for the replay."""
     from ..streaming.sessionize import stream_view_purchase_join

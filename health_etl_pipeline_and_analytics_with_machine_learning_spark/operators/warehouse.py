@@ -59,7 +59,14 @@ def cdc_latest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields ride inside the struct after the ordering fields, so no
     join-back is needed.
     """
-    ev = load(spark, sf_dir, "events")
+    return latest_per_user(load(spark, sf_dir, "events")).orderBy("user_id")
+
+
+def latest_per_user(ev: DataFrame) -> DataFrame:
+    """Each user's newest (ts, event_id) event as (user_id,
+    last_event_id, last_event_type, last_value, last_ts): the compaction
+    body shared by ``cdc_latest_compaction`` (over the table) and
+    ``streaming_cdc_compaction`` (over its micro-batch replay)."""
     s = F.max(
         F.struct(
             F.col("ts"),
@@ -78,7 +85,6 @@ def cdc_latest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.value").alias("last_value"),
             F.date_format(F.col("s.ts"), "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -391,9 +397,9 @@ def incremental_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of ``cdc_latest_compaction``, certified by the
-    same oracle: per-user latest-row state maintained incrementally
-    across micro-batches (applyInPandasWithState, O(1) per key) instead
-    of periodic batch rewrites. See
+    same oracle: the batch op's own ``latest_per_user`` aggregation runs
+    over the micro-batch replay, its per-user max(struct) kept in the
+    state store (O(1) per key) instead of periodic batch rewrites. See
     streaming/sessionize.py:stream_cdc_compaction."""
     from ..streaming.sessionize import stream_cdc_compaction
 

@@ -19,16 +19,14 @@ from pyspark.sql.streaming import DataStreamWriter
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 
-#: state-store partition counts for the bounded replays (fixed at query
+#: state-store partition count for the bounded replays (fixed at query
 #: start; answers are partition-count-invariant). Each partition costs a
 #: state-store commit and an exchange per micro-batch, and replay keys
-#: number a few hundred, so JVM-state replays (join buffer,
-#: dropDuplicates, windowed aggregation) want few: the join replay at
-#: sf0.1 took 4.5 s at 8 and 2.3–3.0 s at 2. applyInPandasWithState
-#: replays are Python-bound per key and want many: sessionization took
-#: 10.4 s at 2, 3.7 s at 8, and 16 was equal or better than 8.
+#: number a few hundred, so the stateful replays (join buffer,
+#: dropDuplicates, windowed, session-window and max(struct)
+#: aggregations) want few: the join replay at sf0.1 took 4.5 s at 8 and
+#: 2.3–3.0 s at 2.
 REPLAY_STATE_PARTITIONS = "2"
-REPLAY_PANDAS_STATE_PARTITIONS = "16"
 
 #: base of the pinned chunk mtimes: chunk i gets _MTIME0 + i seconds
 _MTIME0 = 1_700_000_000

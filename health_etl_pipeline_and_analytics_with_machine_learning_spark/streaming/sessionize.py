@@ -1,39 +1,30 @@
-"""Streaming sessionization — the custom STATEFUL streaming operator
-(SURVEY §2.9 extension tier): per-user 30-minute-inactivity sessions
-maintained incrementally with ``applyInPandasWithState``.
+"""Bounded Structured Streaming replays of the events table, each the
+oracle-certified twin of a batch op: sessionization, the hourly
+rollup, the view-to-purchase join, exactly-once dedup and CDC
+compaction. Every replay reads the same time-ordered chunk dir, one
+chunk per micro-batch, and runs to completion through
+:func:`replay.run_bounded`.
 
-The batch twin is ``operators.events.sessionization`` (gaps-and-islands
-via two window passes); built-in ``session_window`` is NOT its streaming
-equivalent — its gap boundary is exclusive (an event exactly 30:00 after
-the previous one starts a NEW session) while the batch rule keeps it
-(``gap > 1800`` strictly, on second-truncated timestamps). The stateful
-operator below implements the batch rule bit-for-bit, so the bounded
-stream's final answer hash-matches the batch/DuckDB result — a full
-oracle certification of a streaming operator.
-
-State per user: (last event time in truncated seconds, sessions so far,
-events so far) — O(1) per key, the property that makes this viable on an
-unbounded stream. Arrow moves each micro-batch group to pandas in one
-batch (no per-row Python). Emission is ``update`` mode: every
-micro-batch yields the user's current running totals; the final totals
-are the rows with the max n_events per user (n_events is strictly
-increasing), recovered relationally after the bounded run.
-
-At 100 TB (unbounded production): add EventTimeTimeout + watermark to
-evict idle users' state and emit their final sessions; the bounded
-parquet replay here processes every file, so NoTimeout keeps the test
-deterministic while exercising identical state-transition code.
+Sessionization is a native ``session_window`` count. The batch twin
+(``operators.events.sessionization``) starts a session when the gap to
+the user's previous event, on second-truncated timestamps, exceeds
+1800 s (``gap > 1800``). ``session_window(t, "1800 seconds")`` gives
+each event the window [t, t + 1800 s) and merges windows that overlap
+or only touch, so events exactly 1800 s apart share a session and
+events 1801 s apart do not: the batch rule, on the same
+``CAST(ts AS LONG)`` time basis. The bounded replay runs in complete
+mode, so the sink holds every session at stream end. Production
+(unbounded) form: append mode plus a watermark on the event time, which
+emits each session once the watermark passes its end and evicts its
+state.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .replay import (
-    REPLAY_PANDAS_STATE_PARTITIONS,
     REPLAY_STATE_PARTITIONS,
     ReplayDir,
     chunk_table,
@@ -77,55 +68,6 @@ HLL_REL_MARGIN = 4 * HLL_RSD
 #: never cover that regime)
 HLL_ABS_FLOOR = 5.0
 
-_OUT_SCHEMA = "user_id long, n_sessions long, n_events long"
-_STATE_SCHEMA = "last_ts_s long, n_sessions long, n_events long"
-
-
-def _sessionize_user(key, pdf_iter, state: GroupState):
-    """Fold one user's micro-batch events through (last_ts, n_sessions,
-    n_events) state. Matches the batch rule exactly: timestamps truncate
-    to whole seconds, a gap of exactly 1800 s continues the session."""
-    (user_id,) = key
-    if state.exists:
-        last_ts, n_sessions, n_events = state.get
-    else:
-        last_ts, n_sessions, n_events = None, 0, 0
-
-    pdfs = [p for p in pdf_iter if len(p)]
-    if not pdfs:
-        # zero-row invocation: happens for EventTimeTimeout expirations
-        # (the production config this module documents) and is legal for
-        # any timeout conf — emit the user's current totals if any state
-        # exists, never index into an empty frame
-        if state.exists:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_sessions": [n_sessions],
-                    "n_events": [n_events],
-                }
-            )
-        return
-    rows = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-    rows = rows.sort_values(["ts", "event_id"])
-    # datetime64[us/ns] → epoch seconds, truncated like CAST(ts AS LONG);
-    # the gap scan is vectorized — no per-row Python in the hot path
-    ts = (rows["ts"].astype("datetime64[us]").astype("int64") // 1_000_000).to_numpy()
-    first_starts = 1 if (last_ts is None or ts[0] - last_ts > SESSION_GAP_S) else 0
-    n_sessions += first_starts + int((ts[1:] - ts[:-1] > SESSION_GAP_S).sum())
-    n_events += len(ts)
-    last_ts = int(ts[-1])
-
-    state.update((last_ts, n_sessions, n_events))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_sessions": [n_sessions],
-            "n_events": [n_events],
-        }
-    )
-
-
 def _chunked_events_dir(spark: SparkSession, sf_dir: str, n_chunks: int) -> ReplayDir:
     """The events table as ``n_chunks`` equal-count, time-ordered chunks
     (:func:`replay.chunk_table`), so every user active in more than one
@@ -155,50 +97,47 @@ def _read_chunked_stream(spark: SparkSession, chunks: ReplayDir) -> DataFrame:
     return read_chunks(spark, chunks.path, chunks.schema)
 
 
+def session_counts(raw: DataFrame) -> DataFrame:
+    """One row per (user, session): ``user_id``, the session window over
+    whole-second event time (the batch twin's ``CAST(ts AS LONG)``) with
+    a :data:`SESSION_GAP_S` gap, and the session's event ``count``."""
+    t = F.timestamp_seconds(F.col("ts").cast("long"))
+    return raw.groupBy(
+        "user_id", F.session_window(t, f"{SESSION_GAP_S} seconds")
+    ).count()
+
+
 def stream_sessionization(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> DataFrame:
-    """Run the bounded event stream through the stateful sessionizer to
-    completion and return the FINAL per-user session stats — same
-    columns, same values as the batch ``sessionization`` query (and its
-    DuckDB oracle)."""
+    """Run the bounded event stream through :func:`session_counts` to
+    completion and roll the sessions up per user — same columns, same
+    values as the batch ``sessionization`` query (and its DuckDB
+    oracle)."""
     raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
-
-    updates = (
-        raw.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_user,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = "sessionize_updates"
+    name = "sessionize_sessions"
+    sessions = session_counts(raw)
     run_bounded(
-        updates.writeStream.outputMode("update").format("memory").queryName(name),
-        REPLAY_PANDAS_STATE_PARTITIONS,
+        sessions.writeStream.outputMode("complete").format("memory").queryName(name),
+        REPLAY_STATE_PARTITIONS,
     )
-
-    all_updates = spark.sql(f"SELECT * FROM {name}")
-    # final row per user = the update with the largest n_events
-    # (strictly increasing across micro-batches)
-    final = (
-        all_updates.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "n_sessions")).alias("s"))
+    return (
+        spark.sql(f"SELECT * FROM {name}")
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_sessions"),
+            F.sum("count").alias("n_events"),
+        )
         .select(
             "user_id",
-            F.col("s.n_sessions").alias("n_sessions"),
-            F.col("s.n_events").alias("n_events"),
+            "n_sessions",
+            "n_events",
+            F.round(F.col("n_events") / F.col("n_sessions"), 4).alias(
+                "events_per_session"
+            ),
         )
+        .orderBy("user_id")
     )
-    return final.select(
-        "user_id",
-        "n_sessions",
-        "n_events",
-        F.round(F.col("n_events") / F.col("n_sessions"), 4).alias("events_per_session"),
-    ).orderBy("user_id")
 
 
 def stream_hour_rollup(
@@ -289,10 +228,10 @@ def stream_hour_rollup(
 def stream_view_purchase_join(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> DataFrame:
-    """STREAM-STREAM inner join replay — the third stateful streaming
-    operator class next to the windowed aggregation and the custom
-    applyInPandasWithState state machine: each user's purchases join the
-    views they followed within one hour (event-time range condition).
+    """STREAM-STREAM inner join replay — the stateful streaming operator
+    class next to the windowed and session-window aggregations: each
+    user's purchases join the views they followed within one hour
+    (event-time range condition).
 
     Both sides read the same chunked replay directory as independent
     FileStreamSources; the inner join buffers both sides' state, so the
@@ -353,9 +292,9 @@ def stream_view_purchase_join(
 def stream_dedup_replay(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> DataFrame:
-    """Streaming exactly-once dedup replay — the fourth stateful
-    operator class (next to the custom state machine, the windowed agg,
-    and the stream-stream join): the chunked event replay is read by
+    """Streaming exactly-once dedup replay — the stateful operator
+    class next to the windowed and session-window aggregations and the
+    stream-stream join: the chunked event replay is read by
     TWO independent FileStreamSources and unioned, so every event
     arrives twice (an at-least-once delivery simulation), then
     ``dropDuplicates("event_id")`` must emit each exactly once
@@ -394,91 +333,25 @@ def stream_dedup_replay(
     )
 
 
-_CDC_OUT_SCHEMA = (
-    "user_id long, ts_us long, event_id long, event_type string, value double"
-)
-_CDC_STATE_SCHEMA = "ts_us long, event_id long, event_type string, value double"
-
-
-def _cdc_user(key, pdf_iter, state: GroupState):
-    """Latest-row-wins fold: keep each user's max-(ts, event_id) record
-    across micro-batches — O(1) state per key, the streaming form of the
-    batch max(struct) aggregation."""
-    (user_id,) = key
-    best = tuple(state.get) if state.exists else None
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        ts = (
-            pdf["ts"].astype("datetime64[us]").astype("int64").reset_index(drop=True)
-        )
-        rows = pdf.reset_index(drop=True).assign(__t=ts)
-        top = rows.sort_values(["__t", "event_id"]).iloc[-1]
-        cand = (
-            int(top["__t"]),
-            int(top["event_id"]),
-            str(top["event_type"]),
-            float(top["value"]),
-        )
-        if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-            best = cand
-    if best is None:
-        return
-    state.update(best)
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "ts_us": [best[0]],
-            "event_id": [best[1]],
-            "event_type": [best[2]],
-            "value": [best[3]],
-        }
-    )
-
-
 def stream_cdc_compaction(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> DataFrame:
     """Streaming twin of ``operators.warehouse.cdc_latest_compaction``,
-    certified by the SAME oracle: the chunked replay folds each user's
-    change feed through O(1) latest-row state (applyInPandasWithState),
-    and the bounded stream's final compacted table must hash-match the
-    batch max(struct) answer. Production form: the state IS the
-    compacted table, maintained incrementally — no periodic rewrite of
-    cold keys, which is the advantage over batch compaction at 100 TB.
+    certified by the SAME oracle: the batch op's own
+    ``latest_per_user`` max(struct) aggregation runs over the chunked
+    replay in complete mode, each user's latest row held in the state
+    store across micro-batches. Production form: update mode to a real
+    sink, where the O(keys) state IS the compacted table, maintained
+    incrementally with no periodic rewrite of cold keys — the advantage
+    over batch compaction at 100 TB.
     """
+    from ..operators.warehouse import latest_per_user
+
     raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
-    updates = (
-        raw.select("user_id", "ts", "event_id", "event_type", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _cdc_user,
-            outputStructType=_CDC_OUT_SCHEMA,
-            stateStructType=_CDC_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    name = "cdc_compaction_updates"
+    name = "cdc_compaction_latest"
+    latest = latest_per_user(raw)
     run_bounded(
-        updates.writeStream.outputMode("update").format("memory").queryName(name),
-        REPLAY_PANDAS_STATE_PARTITIONS,
+        latest.writeStream.outputMode("complete").format("memory").queryName(name),
+        REPLAY_STATE_PARTITIONS,
     )
-    out = spark.sql(f"SELECT * FROM {name}")
-    final = (
-        out.groupBy("user_id")
-        .agg(F.max(F.struct("ts_us", "event_id", "event_type", "value")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.event_id").alias("last_event_id"),
-            F.col("s.event_type").alias("last_event_type"),
-            F.col("s.value").alias("last_value"),
-            # ts_us is already wall-canonical micros (the Arrow transfer
-            # renders session-TZ wall clock before the int64 cast), so
-            # only the re-rendering needs the session-offset pin
-            _fmt_wall(
-                F.timestamp_micros(F.col("s.ts_us")), "yyyy-MM-dd HH:mm:ss"
-            ).alias("last_ts"),
-        )
-    )
-    return final.orderBy("user_id")
+    return spark.sql(f"SELECT * FROM {name}").orderBy("user_id")

@@ -50,9 +50,10 @@ _TZ_SENSITIVE = [
     "range_interval_window",
     "time_weighted_avg",
     "attribution_position_based",
-    # streaming wall-clock renderers (r6 full-registry hostile sweep
-    # found these two; the fix is streaming/sessionize.py's
-    # _wall_ts/_fmt_wall session-offset pins)
+    # streaming ops that render wall-clock strings from replayed event
+    # time: the hour rollup through streaming/sessionize.py's
+    # _wall_ts/_fmt_wall session-offset pins, CDC compaction through the
+    # batch op's own date_format over session-TZ chunk timestamps
     "streaming_hour_rollup",
     "streaming_cdc_compaction",
 ]

@@ -1,11 +1,11 @@
-"""Checkpoint fault-tolerance of the custom stateful streaming operator:
-the sessionizer is stopped mid-replay and restarted from its checkpoint,
-and the final answer must STILL equal the batch oracle — which can only
-happen if (a) source offsets resume where they left off and (b) the
-per-user (last_ts, n_sessions, n_events) state is restored from the
-state store. A restart that lost state would restart every user's
-counts from zero and undercount; a restart that replayed offsets would
-double-count."""
+"""Checkpoint fault-tolerance of the stateful streaming replays. The
+session-window sessionizer is stopped mid-replay and restarted from its
+checkpoint, and the final answer must STILL equal the batch oracle —
+which can only happen if the session state is restored from the state
+store (a restart that lost it would count only the new chunk's
+sessions). In complete mode a restart that ignored the checkpoint
+would re-read every chunk and still produce the right table, so the
+checkpoint's commits/ log pins that source offsets resumed."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ import os
 import shutil
 
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.events import (
     sessionization,
@@ -24,32 +23,30 @@ from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.rep
     run_bounded,
 )
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
-    _OUT_SCHEMA,
-    _STATE_SCHEMA,
     _chunked_events_dir,
-    _sessionize_user,
+    session_counts,
 )
 
 from conftest import SF_SMOKE
 
 
+def _committed_batches(ckpt_dir: str) -> int:
+    # the checkpoint's commits/ log is the direct contract: one entry
+    # per COMMITTED micro-batch (output part-file counts depend on how
+    # many files each write happens to emit)
+    commits = os.path.join(ckpt_dir, "commits")
+    return len([f for f in os.listdir(commits) if not f.startswith(".")])
+
+
 def _run_phase(spark, watch_dir: str, schema, ckpt: str, out: str) -> None:
+    # complete mode: every micro-batch writes the whole session table,
+    # so ``out`` holds the last committed batch's complete output
     raw = read_chunks(spark, watch_dir, schema)
-    updates = (
-        raw.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_user,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
     run_bounded(
-        updates.writeStream.outputMode("update")
+        session_counts(raw)
+        .writeStream.outputMode("complete")
         .option("checkpointLocation", ckpt)
-        .foreachBatch(lambda df, _bid: df.write.mode("append").parquet(out)),
+        .foreachBatch(lambda df, _bid: df.write.mode("overwrite").parquet(out)),
         "8",
     )
 
@@ -63,21 +60,22 @@ def test_sessionizer_recovers_state_from_checkpoint(spark, tmp_path):
     for f in chunks[:2]:  # phase 1 sees only the first two time slices
         shutil.copy2(os.path.join(src.path, f), os.path.join(watch, f))
 
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "updates")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "sessions")
     _run_phase(spark, watch, src.schema, ckpt, out)
+    assert _committed_batches(ckpt) == 2  # one micro-batch per chunk file
     # simulated failure window: the query is down while data arrives
     shutil.copy2(os.path.join(src.path, chunks[2]), os.path.join(watch, chunks[2]))
     _run_phase(spark, watch, src.schema, ckpt, out)  # restart from the SAME checkpoint
+    # offsets resumed: phase 2 committed exactly ONE more micro-batch
+    # (the new chunk), not a re-read of all three
+    assert _committed_batches(ckpt) == 3
 
-    # final totals = max-n_events update per user across BOTH phases
     got = (
         spark.read.parquet(out)
         .groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "n_sessions")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.n_sessions").alias("n_sessions"),
-            F.col("s.n_events").alias("n_events"),
+        .agg(
+            F.count(F.lit(1)).alias("n_sessions"),
+            F.sum("count").alias("n_events"),
         )
     )
     expected = sessionization(spark, SF_SMOKE).select(
@@ -113,16 +111,6 @@ def test_neardup_probe_recovers_offsets_from_checkpoint(spark, tmp_path):
     assert len(chunks) == 3
     for f in chunks[:2]:  # phase 1 sees only the first two ingest batches
         shutil.copy2(os.path.join(src, f), os.path.join(watch, f))
-
-    def _committed_batches(ckpt_dir: str) -> int:
-        # the checkpoint's commits/ log is the direct contract: one
-        # entry per COMMITTED micro-batch (r11 second-review find:
-        # inferring this from output part-file counts depends on how
-        # many files each write happens to emit)
-        commits = os.path.join(ckpt_dir, "commits")
-        return len(
-            [f for f in os.listdir(commits) if not f.startswith(".")]
-        )
 
     store = _store_bands(spark, SF_SMOKE)
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "pairs")
