@@ -43,8 +43,9 @@ def lineage_cut(df: DataFrame, *, eager: bool = False) -> DataFrame:
     ``streaming/neardup.compact_store_bands``), or no cut at all
     (paying the recompute). Blocks are session-scoped and outside the
     cache manager (unreleasable until the RDD is garbage-collected) —
-    callers that re-derive the SAME cut repeatedly should use a keyed
-    single-slot persist cache instead (``operators/text.py``'s
-    ``_TERCILE_HIST_CACHE`` discipline, ADVICE r15/r16).
+    callers that re-derive the SAME cut repeatedly should persist it and
+    hold it in the artifact memo (``functions/artifacts.py``) with
+    ``unpersist`` as its release, as ``operators/text._tercile_hist``
+    does.
     """
     return df.localCheckpoint(eager=eager)

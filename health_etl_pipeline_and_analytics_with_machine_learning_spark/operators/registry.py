@@ -22,6 +22,10 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions import artifacts
 
 #: decimals to which cross-engine-compared aggregate doubles are rounded
 ROUND_DP = 4
@@ -61,8 +65,6 @@ def round_cmp(col, dp: int = ROUND_DP):
     identical double ops in both engines. Pair with :func:`round_cmp_sql`
     in the oracle.
     """
-    from pyspark.sql import functions as F
-
     scale = float(10**dp)
     return F.floor(F.round(col, dp + 3) * scale + F.lit(0.5)) / F.lit(scale)
 
@@ -157,52 +159,46 @@ def epoch_us_utc(col):
     ``unix_micros``/``cast("long")`` — wherever an op emits or compares
     epoch-derived numbers.
     """
-    from pyspark.sql import functions as F
-
     return F.unix_micros(F.from_utc_timestamp(col, F.expr("current_timezone()")))
 
 
-def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one of the driver's parquet tables.
+def table_schema(spark: SparkSession, sf_dir: str, table: str) -> T.StructType:
+    """The footer schema of ``table``, inferred once per stamp of the
+    artifact memo. ``events.parquet`` has shipped ``ts`` as
+    TIMESTAMP(NANOS), which Spark infers only with
+    ``spark.sql.legacy.parquet.nanosAsLong`` set (as a long), so the
+    inference sets it and puts back the value it found; a read with the
+    inferred schema needs no conf."""
 
-    ``events.parquet`` has shipped with two different on-disk ``ts``
-    encodings across driver versions — TIMESTAMP(NANOS) (which Spark's
-    reader rejects unless nanos are read as a long) and plain
-    ``timestamp[us]`` (read as TIMESTAMP_NTZ). We branch on the schema
-    Spark actually resolves, and both branches establish the SAME
-    invariant: ``ts`` is a TIMESTAMP whose session-rendered WALL CLOCK
-    equals DuckDB's naive reading of the file, at microsecond
-    precision. The NTZ cast gives that for free (wall-preserving);
-    the nanos branch pins it with ``to_utc_timestamp(...,
-    current_timezone())`` — identity under UTC, and under any other
-    session TZ it re-bases the true-epoch value so wall-clock
-    operators (date_trunc/to_date/hour) and :func:`epoch_us_utc`
-    both agree with the oracle regardless of session timezone.
-    """
-    path = f"{sf_dir}/{table}.parquet"
-    if table != "events":
-        return spark.read.parquet(path)
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        # footer said TIMESTAMP(NANOS) and the legacy conf was off:
-        # read nanos as a long, rebuild below
+    def infer() -> T.StructType:
+        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    dt = df.schema["ts"].dataType
+        try:
+            return spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+        finally:
+            if prev is None:
+                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+            else:
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+
+    return artifacts.memo(spark, "table_schema", sf_dir, table, (), infer)
+
+
+def events_ts(events: DataFrame) -> DataFrame:
+    """``events`` (batch or stream, read with :func:`table_schema`) with
+    ``ts`` as a TIMESTAMP whose session-rendered WALL CLOCK equals
+    DuckDB's naive reading of the file, at microsecond precision,
+    whichever on-disk encoding the file uses. timestamp[us] reads as
+    TIMESTAMP_NTZ, and the cast preserves the wall clock. TIMESTAMP(NANOS)
+    reads as a long: integer division (``ts / 1000`` is a double and
+    loses the last microsecond above 2^53 ns; DuckDB truncates exactly),
+    then ``to_utc_timestamp(..., current_timezone())`` re-bases the true
+    epoch so wall-clock operators (date_trunc/to_date/hour) and
+    :func:`epoch_us_utc` agree with the oracle under any session
+    timezone (identity under UTC)."""
+    dt = events.schema["ts"].dataType
     if isinstance(dt, T.LongType):
-        # nanos-as-long; integer division: ts/1000 via `/` is a double
-        # and loses the last microsecond above 2^53 ns — DuckDB
-        # truncates exactly. timestamp_micros yields the TRUE epoch,
-        # whose session rendering would drift from DuckDB's naive wall
-        # clock under non-UTC TZs — re-base so the wall-clock invariant
-        # in the docstring holds for this encoding too (UTC: identity)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return df.withColumn(
+        return events.withColumn(
             "ts",
             F.to_utc_timestamp(
                 F.timestamp_micros(F.expr("ts div 1000")),
@@ -210,5 +206,15 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             ),
         )
     if isinstance(dt, T.TimestampNTZType):
-        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return df
+        return events.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return events
+
+
+def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Read one of the driver's parquet tables with its memoized footer
+    schema (:func:`table_schema`, no Spark job once warm); ``events``
+    gets its ``ts`` normalized by :func:`events_ts`."""
+    df = spark.read.schema(table_schema(spark, sf_dir, table)).parquet(
+        f"{sf_dir}/{table}.parquet"
+    )
+    return events_ts(df) if table == "events" else df

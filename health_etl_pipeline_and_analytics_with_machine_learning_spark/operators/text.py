@@ -16,6 +16,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import artifacts
 from .registry import load, query, round_cmp, round_cmp_sql, spread
 
 #: the SHARED lowercase-alpha tokenizer: Spark expression and its DuckDB
@@ -672,19 +673,43 @@ def _tercile_xe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: single-slot cache of the persisted tercile histogram, keyed on
-#: (session, sf_dir) — exactly one KB-scale histogram is ever cached,
-#: mirroring _bpe_train_rules' one-cached-at-a-time discipline (ADVICE
-#: r15 item 3). A SAME-KEY repeat REUSES the cached entry rather than
-#: re-persisting: two invocations build the IDENTICAL logical plan, so
-#: Spark's cache manager gives them ONE shared entry — persist-then-
-#: unpersist-the-previous would destroy the new invocation's cache
-#: along with the old (verified empirically: "Asked to cache already
-#: cached data" followed by an uncached serve plan, r16 review of the
-#: first version of this fix). Same path-keyed staleness hazard as
-#: _BPE_RULES_CACHE (documented there); the session in the key makes a
-#: restarted SparkSession rebuild instead of serving a dead DataFrame.
-_TERCILE_HIST_CACHE: list = []
+def _tercile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tercile split's per-(source, rounded score) histogram of
+    document counts and character mass, persisted MEMORY_AND_DISK and
+    held in the artifact memo (``functions/artifacts.py``), stamped on
+    the documents table's files.
+
+    It fans out to BOTH the threshold branch and the bucket branch, and
+    Catalyst does not dedupe shared subplans, so without a barrier the
+    corpus scan, LM build and per-doc scoring would run twice. It is
+    histogram-sized (≤ |distinct 4dp scores| per source, KBs), so it is
+    materialized once: persist plus an eager count, not
+    ``localCheckpoint``, whose blocks live outside the cache manager and
+    cannot be released. A same-stamp repeat reuses the entry and never
+    re-persists: two invocations build the identical logical plan, so
+    the cache manager gives them ONE shared entry, and unpersisting the
+    previous one would drop the new invocation's cache with it. A stale
+    stamp unpersists the old histogram (best effort) before the refill.
+    Persist keeps lineage, so a DataFrame returned before a refill
+    recomputes the histogram if it is executed afterwards."""
+
+    def fill() -> DataFrame:
+        hist = (
+            _tercile_xe(spark, sf_dir)
+            .groupBy("source", "xe")
+            .agg(F.count(F.lit(1)).alias("c"), F.sum("n_chars").alias("ch"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        try:
+            hist.count()  # materialize before the plan fans out
+        except BaseException:
+            hist.unpersist()
+            raise
+        return hist
+
+    return artifacts.memo(
+        spark, "tercile_hist", sf_dir, "documents", (), fill, release=DataFrame.unpersist
+    )
 
 
 @query(
@@ -759,45 +784,7 @@ def perplexity_tercile_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold selection as CTEs."""
     from pyspark.sql.window import Window
 
-    xe_df = _tercile_xe(spark, sf_dir)
-    # the histogram fans out to BOTH the threshold branch and the
-    # bucket branch — Catalyst does not dedupe shared subplans (the
-    # r5b gotcha), so without a barrier the whole corpus scan + LM
-    # build + per-doc scoring would run twice. It is histogram-sized
-    # (≤ |distinct 4dp scores| per source — KBs), so materialize once:
-    # persist + eager count, NOT localCheckpoint (ADVICE r15 item 3:
-    # checkpoint blocks live outside the cache manager and are
-    # session-unreleasable — the class the BPE trainer was migrated
-    # off in r15), single-slot keyed cache (see _TERCILE_HIST_CACHE
-    # for why a same-key repeat must REUSE, never re-persist).
-    # Tradeoff (same as the trainer): persist keeps lineage, so a DF
-    # returned by an OLDER invocation recomputes (correctly, with the
-    # double-scan back) if executed after a different-key call evicts
-    # its histogram.
-    key = (spark, sf_dir)
-    if _TERCILE_HIST_CACHE and _TERCILE_HIST_CACHE[0][0] == key:
-        hist = _TERCILE_HIST_CACHE[0][1]
-    else:
-        hist = (
-            xe_df.groupBy("source", "xe")
-            .agg(F.count(F.lit(1)).alias("c"), F.sum("n_chars").alias("ch"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            hist.count()  # materialize before the plan fans out
-        except BaseException:
-            hist.unpersist()
-            raise
-        if _TERCILE_HIST_CACHE:
-            try:
-                _TERCILE_HIST_CACHE.pop()[1].unpersist()
-            except Exception:
-                # best-effort release: the evicted entry may belong to
-                # a STOPPED SparkSession (the restart case the keyed
-                # cache exists to survive) — dropping the dead entry
-                # matters, the unpersist RPC does not (r16 review)
-                pass
-        _TERCILE_HIST_CACHE.append((key, hist))
+    hist = _tercile_hist(spark, sf_dir)
     cum = hist.select(
         "*",
         F.sum("c").over(Window.partitionBy("source").orderBy("xe")).alias("run"),
@@ -1124,28 +1111,6 @@ def _bpe_train_oracle_sql() -> str:
     return "".join(parts)
 
 
-#: session-scope cache of the learned merge rules, keyed on the fit
-#: inputs — the same shared-fit discipline as similarity.py's quantizer
-#: cache: the encoder op consumes the EXACT rule list the certified
-#: trainer learned (and vice versa), and a repeated driver run doesn't
-#: re-pay the {_BPE_MERGES} training rounds. The training derivation is
-#: fully deterministic (integer counts, lexicographic tiebreak), so the
-#: cache is a cost optimization, never a correctness dependency —
-#: tests pop the key and re-derive to prove it.
-#:
-#: HAZARD (ADVICE r15 item 2): the key is (sf_dir, _BPE_MERGES) only —
-#: it identifies the dataset by PATH, not content. If the parquet under
-#: an sf_dir is rewritten mid-session, the trainer/encoder/vocab ops
-#: serve rules learned from the OLD bytes; any test or job that mutates
-#: a table in place must pop the key first (as
-#: test_bpe_oracles_survive_merge_exhaustion does in its finally). Left
-#: path-keyed deliberately: the driver corpus is read-only by contract
-#: (TESTDATA.md), and an mtime/size fingerprint would force a
-#: filesystem stat on every call for a hazard the contract already
-#: excludes.
-_BPE_RULES_CACHE: dict[tuple, list] = {}
-
-
 def _bpe_round_pairs(cur: DataFrame) -> DataFrame:
     """One training round's pair-count statistic over the symbol-string
     vocab table ``cur``: a narrow codegen'd adjacent-pair explode and
@@ -1171,27 +1136,35 @@ def _bpe_round_pairs(cur: DataFrame) -> DataFrame:
 
 
 def _bpe_train_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    """Run the {_BPE_MERGES}-round greedy BPE training loop and return
-    the learned rules ``[(step, l, r, merged, count), …]`` — shared by
-    the trainer op (which ships the table) and the encoder op (which
-    applies the rules to the corpus).
+    """The learned rules ``[(step, l, r, merged, count), …]`` of
+    :func:`_bpe_train`, shared by the trainer op (which ships the table)
+    and the encoder and vocab ops (which apply the rules to the corpus).
+
+    The rules are held in the artifact memo (``functions/artifacts.py``),
+    stamped on the documents table's files, so the consumers apply the
+    EXACT rule list the certified trainer learned without re-paying the
+    training rounds, and a table rewritten in place retrains. Training
+    is fully deterministic (integer counts, lexicographic tiebreak), so
+    the memo is a cost optimization, never a correctness dependency."""
+    return artifacts.memo(
+        spark, "bpe_rules", sf_dir, "documents", (_BPE_MERGES,),
+        lambda: _bpe_train(spark, sf_dir),
+    )
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """Run the {_BPE_MERGES}-round greedy BPE training loop.
 
     Each round's vocab table is persisted MEMORY_AND_DISK and eagerly
     materialized; once round N+1's table is materialized (reading round
     N's cache, not its lineage), round N's blocks are unpersisted —
-    exactly one round's vocab is ever cached (ADVICE r14: the previous
-    localCheckpoint-per-round form accumulated every round's blocks for
-    the session, and ``DataFrame.unpersist()`` is a no-op on
-    localCheckpoint blocks — they live on the internal RDD, outside the
-    cache manager, verified empirically this round — so the fix is
-    cacheManager-tracked persist, not an unpersist call bolted onto the
-    checkpoint). The tradeoff: persist doesn't truncate lineage, so
+    exactly one round's vocab is ever cached (``DataFrame.unpersist()``
+    is a no-op on localCheckpoint blocks, which live on the internal RDD
+    outside the cache manager, so rounds use cacheManager-tracked
+    persist). The tradeoff: persist doesn't truncate lineage, so
     round N's logical plan nests N fold expressions; bounded by
     _BPE_MERGES ({_BPE_MERGES}) — if that ever grows past ~50, add a
     periodic localCheckpoint every K rounds to cap optimizer cost."""
-    key = (sf_dir, _BPE_MERGES)
-    if key in _BPE_RULES_CACHE:
-        return _BPE_RULES_CACHE[key]
     cur = (
         _word_freq(spark, sf_dir)
         .select(_bpe_symbolize(F.col("w")).alias("s"), "wn")
@@ -1227,7 +1200,6 @@ def _bpe_train_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
                 cur = nxt
     finally:
         cur.unpersist()  # the live round's vocab is never read again
-    _BPE_RULES_CACHE[key] = rules
     return rules
 
 
@@ -1306,8 +1278,8 @@ def bpe_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer-prep shelf: pair counts → trainer → VOCAB → encoder
     stats → ``vocab_oov_rate``.
 
-    Scale shape: the learned rules come from the shared rules cache
-    (:data:`_BPE_RULES_CACHE` — driver-scale literals, zero joins);
+    Scale shape: the learned rules come from the memoized trainer
+    (:func:`_bpe_train_rules` — driver-scale literals, zero joins);
     the folds compose into one narrow codegen'd expression over the
     |vocab| word table (the corpus collapsed once, the same
     occurrence→type-space trick as the trainer); the symbol count is a
@@ -1426,8 +1398,8 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     only corpus-sized shuffle), then each learned rule applies as a
     narrow string-accumulator fold (:func:`_bpe_merge_fold`) with the
     rule folded in as a LITERAL — the plan has ZERO joins: the merge
-    table is a driver-scale artifact, reused via the shared rules
-    cache (:data:`_BPE_RULES_CACHE`), exactly like the k-means
+    table is a driver-scale artifact, reused via the memoized rules
+    (:func:`_bpe_train_rules`), exactly like the k-means
     centroid literals. The {_BPE_MERGES} folds compose into one
     codegen'd expression over |src_vocab| rows; the per-source stats
     are one tiny final aggregation. At 100 TB: corpus scan + a

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.registry import load
 from .events_stream import read_events_stream
 from .replay import run_bounded
 
@@ -48,7 +49,7 @@ def run_enrich_to_memory(
     parquet source (memory sink, complete mode — the aggregate makes
     this a stateful sink query even though the join itself is
     stateless)."""
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    dim = load(spark, sf_dir, "customer")
     stream = enrich_with_segment(read_events_stream(spark, sf_dir), dim)
     run_bounded(
         stream.writeStream.outputMode("complete").format("memory").queryName(query_name)

@@ -17,28 +17,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..operators.registry import events_ts, table_schema
 from .replay import mkdtemp, run_bounded
-
-
-def _probe_events_schema(spark: SparkSession, src: str) -> T.StructType:
-    """Resolve the on-disk schema of the events parquet via one batch
-    footer read — the stream schema and the ts rebuild branch both
-    derive from it, so a driver-side change of the on-disk ``ts``
-    encoding (nanos-long vs timestamp[us]) can't desync batch and
-    streaming (see registry.load for the batch twin)."""
-    try:
-        return spark.read.parquet(src).schema
-    except Exception:
-        # TIMESTAMP(NANOS) footer: readable only as long via legacy conf
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(src).schema
+from .sessionize import _fmt_wall, _wall_ts
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
-    """readStream over the events parquet (stand-in for kafka/kinesis;
-    same schema-adaptive ts rebuild as the batch loader).
+    """readStream over the events parquet (stand-in for kafka/kinesis),
+    read with ``load``'s memoized footer schema and normalized by the
+    batch loader's own ``ts`` rebuild (``registry.events_ts``), so the
+    stream and the batch agree under either on-disk encoding and any
+    session timezone.
 
     FileStreamSource wants a DIRECTORY it can watch for arriving files;
     the driver ships one flat file, so we expose it through a temp
@@ -49,36 +39,30 @@ def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> Dat
     import os
 
     src = os.path.join(sf_dir, "events.parquet")
-    schema = _probe_events_schema(spark, src)
     watch_dir = src
     if os.path.isfile(src):
         watch_dir = mkdtemp("events_stream_")
         for i in range(copies):
             os.symlink(src, os.path.join(watch_dir, f"events_{i}.parquet"))
-    raw = spark.readStream.schema(schema).parquet(watch_dir)
-    dt = schema["ts"].dataType
-    if isinstance(dt, T.LongType):
-        # integer division (`div`): double division loses the last
-        # microsecond above 2^53 ns — same rebuild as registry.load
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(dt, T.TimestampNTZType):
-        # session TZ is UTC (session.py), so this preserves epoch micros
-        return raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+    schema = table_schema(spark, sf_dir, "events")
+    return events_ts(spark.readStream.schema(schema).parquet(watch_dir))
 
 
 def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Tumbling 1-hour window per event type with a late-data watermark —
-    the streaming twin of events_hour_agg."""
+    the streaming twin of events_hour_agg. Windows cut and render wall
+    hours under any session timezone, as the batch twin's ``date_trunc``
+    does (the canonicalization of ``sessionize.stream_hour_rollup``)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withColumn("ts", _wall_ts(F.col("ts")))
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
         .select(
-            F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
+            _fmt_wall(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
             "event_type",
             "n_events",
             "sum_value",

@@ -43,8 +43,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import artifacts
 from ..functions.lineage import lineage_cut
-from .replay import cached_dir, chunk_table, mkdtemp, read_chunks, run_bounded
+from .replay import ReplayDir, chunk_table, mkdtemp, read_chunks, run_bounded
 
 _PAIRS_SCHEMA = "doc_a long, doc_b long, hamming long"
 _PROBE_DOC_SCHEMA = "doc_id long, text string"
@@ -235,15 +236,15 @@ def _init_store_bands_dir(spark: SparkSession, sf_dir: str) -> str:
     so each bucket's population) grows as ingest is accepted.
 
     The build is a pure function of the corpus and the banding
-    geometry, so it runs once per key of :func:`replay.cached_dir`; the
-    geometry is read LIVE into the key, so an in-process change to band
-    count or width (a test monkeypatching it) rebuilds the store instead
-    of serving one banded under the old math. Every call returns its
-    OWN fresh directory (the loop mutates its store: appends per batch,
-    file swap on compaction), seeded from the cached build by hard
-    link — safe because store part files are never modified in place
-    (appends create new UUID-named files; compaction unlinks, which
-    leaves the cached originals untouched)."""
+    geometry, so it runs once per stamp of :func:`artifacts.memo`; the
+    geometry is read LIVE into the slot's params, so an in-process
+    change to band count or width (a test monkeypatching it) rebuilds
+    the store instead of serving one banded under the old math. Every
+    call returns its OWN fresh directory (the loop mutates its store:
+    appends per batch, file swap on compaction), seeded from the cached
+    build by hard link — safe because store part files are never
+    modified in place (appends create new UUID-named files; compaction
+    unlinks, which leaves the cached originals untouched)."""
     from ..operators import dedup
     from ..operators.dedup import _bands_with_src
     from ..operators.registry import load
@@ -258,13 +259,11 @@ def _init_store_bands_dir(spark: SparkSession, sf_dir: str) -> str:
             "overwrite"
         ).parquet(out)
 
-    cached = cached_dir(
-        spark,
-        "neardup_store_bands_cache",
-        sf_dir,
-        "documents",
-        (dedup._SIMHASH_BANDS, dedup._SIMHASH_BAND_BITS),
-        fill,
+    kind = "neardup_store_bands_cache"
+    geometry = (dedup._SIMHASH_BANDS, dedup._SIMHASH_BAND_BITS)
+    cached = artifacts.memo(
+        spark, kind, sf_dir, "documents", geometry, lambda: ReplayDir.new(kind, fill),
+        ReplayDir.on_disk, ReplayDir.remove,
     ).path
     store_dir = mkdtemp("neardup_store_bands_")
     for f in os.listdir(cached):

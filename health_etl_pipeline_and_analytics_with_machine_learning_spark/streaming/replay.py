@@ -1,8 +1,10 @@
 """Bounded stream replays: a finished table replayed as micro-batches
 through a Structured Streaming query run to completion. The runner
 (:func:`run_bounded`), the chunk layout (:func:`chunk_table`,
-:func:`read_chunks`), the directory cache (:func:`cached_dir`) and the
-temp-dir reaper (:func:`mkdtemp`) live here and nowhere else."""
+:func:`read_chunks`), the replay directories (:class:`ReplayDir`, held
+in the engine's artifact memo, ``functions/artifacts.py``, so a source
+table rewritten in place refills them) and the temp-dir reaper
+(:func:`mkdtemp`) live here and nowhere else."""
 
 from __future__ import annotations
 
@@ -16,6 +18,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
+
+from ..functions import artifacts
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
 
@@ -73,61 +77,30 @@ def run_bounded(
 
 
 class ReplayDir(NamedTuple):
-    """A cached directory and the schema recorded when it was filled."""
+    """A replay directory and the schema recorded when it was filled:
+    the value of a replay slot of :func:`artifacts.memo`, which refills
+    a slot whose directory was deleted (:meth:`on_disk`) and removes a
+    replaced one (:meth:`remove`)."""
 
     path: str
     schema: T.StructType | None
 
+    @classmethod
+    def new(cls, kind: str, write: Callable[[str], T.StructType | None]) -> ReplayDir:
+        """A fresh temp dir filled by ``write(path)``, which returns the
+        schema to record; removed again if ``write`` raises."""
+        out = mkdtemp(f"{kind}_")
+        try:
+            return cls(out, write(out))
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
 
-_DIRS: dict[tuple, ReplayDir] = {}
+    def on_disk(self) -> bool:
+        return os.path.isdir(self.path)
 
-
-def _fingerprint(sf_dir: str, table: str) -> tuple:
-    """(path, mtime_ns, size) of every file of ``table`` (one file or a
-    directory of part files)."""
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    paths = [root] if os.path.isfile(root) else [
-        os.path.join(base, f) for base, _, files in os.walk(root) for f in files
-    ]
-    stats = [(p, os.stat(p)) for p in sorted(paths)]
-    return tuple((p, st.st_mtime_ns, st.st_size) for p, st in stats)
-
-
-def cached_dir(
-    spark: SparkSession,
-    kind: str,
-    sf_dir: str,
-    table: str,
-    params: tuple,
-    fill: Callable[[str], T.StructType | None],
-) -> ReplayDir:
-    """The directory ``fill(path)`` derives from ``table``, filled once
-    per key; ``fill`` returns the schema to record with it.
-
-    Key: (kind, sf_dir, params, the table files' (mtime_ns, size),
-    session timezone). The fingerprint makes a table rewritten in place
-    refill the directory instead of replaying old rows. The timezone is
-    there because chunk files store ``ts`` as an instant carrying the
-    session offset in effect when the source was cast. ``params`` holds
-    everything else the contents depend on."""
-    key = (
-        kind,
-        sf_dir,
-        params,
-        _fingerprint(sf_dir, table),
-        spark.conf.get("spark.sql.session.timeZone"),
-    )
-    hit = _DIRS.get(key)
-    if hit is not None and os.path.isdir(hit.path):
-        return hit
-    out = mkdtemp(f"{kind}_")
-    try:
-        entry = ReplayDir(out, fill(out))
-    except BaseException:
-        shutil.rmtree(out, ignore_errors=True)
-        raise
-    _DIRS[key] = entry
-    return entry
+    def remove(self) -> None:
+        shutil.rmtree(self.path, ignore_errors=True)
 
 
 def chunk_table(
@@ -140,9 +113,9 @@ def chunk_table(
 ) -> ReplayDir:
     """Write ``build()``'s rows as one file per value of its int
     ``__chunk`` column, ``chunk_NNN.parquet`` with mtime ``_MTIME0 +
-    NNN`` so FileStreamSource replays them in index order; cached by
-    :func:`cached_dir` with params ``(n_chunks,)``, so ``build`` runs
-    only on a miss.
+    NNN`` so FileStreamSource replays them in index order; held in
+    :func:`artifacts.memo` with params ``(n_chunks,)``, so ``build``
+    runs only on a miss.
 
     One partitioned write: each chunk hashes to one shuffle partition,
     so the writer emits one file per chunk. It stages outside the watch
@@ -172,7 +145,10 @@ def chunk_table(
             shutil.rmtree(staging, ignore_errors=True)
         return spark.read.parquet(os.path.join(out, min(os.listdir(out)))).schema
 
-    return cached_dir(spark, kind, sf_dir, table, (n_chunks,), fill)
+    return artifacts.memo(
+        spark, kind, sf_dir, table, (n_chunks,), lambda: ReplayDir.new(kind, fill),
+        ReplayDir.on_disk, ReplayDir.remove,
+    )
 
 
 def read_chunks(

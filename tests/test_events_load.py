@@ -202,3 +202,35 @@ def test_load_wall_clock_invariant_under_hostile_tz(spark, micros_dir, nanos_dir
             assert got == want, d
     finally:
         spark.conf.set("spark.sql.session.timeZone", saved)
+
+
+@pytest.mark.parametrize("encoding", ["micros_dir", "nanos_dir"])
+def test_events_stream_rollup_matches_batch_under_hostile_tz(spark, request, encoding):
+    """The events stream applies ``load``'s own ``ts`` rebuild and cuts
+    wall-clock hours, so under a non-UTC session its hour rollup equals
+    the batch ``events_hour_agg`` for both encodings (the nanos rebuild's
+    ``to_utc_timestamp`` re-base keeps the stream's wall clock on the
+    batch's)."""
+    from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.events import (
+        events_hour_agg,
+    )
+    from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming import (
+        events_stream,
+    )
+
+    saved = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+        cols = ["hour", "event_type", "n_events", "sum_value"]
+        d = request.getfixturevalue(encoding)
+        stream = events_stream.run_to_memory(spark, d).select(cols)
+        batch = events_hour_agg(spark, d).select(cols)
+        got = sorted(tuple(r) for r in stream.collect())
+        assert got == sorted(tuple(r) for r in batch.collect())
+        assert [h for h, *_ in got] == [
+            "2024-01-01 00:00:00",
+            "2024-01-01 00:00:00",
+            "2024-01-02 03:00:00",
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved)

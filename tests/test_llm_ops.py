@@ -10,6 +10,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.functions import (
+    artifacts,
+)
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators import (
     dedup,
     multimodal,
@@ -86,9 +89,10 @@ def test_pq_topk_recall_and_structure_vs_bruteforce(spark):
         key = (r.query_id, r.neighbor_id)
         if key in exact_cos:
             assert r.cosine == exact_cos[key], key
-    for k in [k for k in similarity._FIT_CACHE if "#pq" in k[0]]:
-        similarity._FIT_CACHE.pop(k)
+    artifacts.evict("kmeans_fit", SF_CORRECT)
+    misses = artifacts.counts("kmeans_fit")[1]
     again = similarity.similarity_pq_topk(spark, SF_CORRECT).collect()
+    assert artifacts.counts("kmeans_fit")[1] == misses + similarity._PQ_M  # refit
     assert [tuple(r) for r in again] == [tuple(r) for r in approx]
 
 
@@ -117,26 +121,20 @@ def test_ivf_pq_topk_recall_structure_and_composition(spark):
         key = (r.query_id, r.neighbor_id)
         if key in exact_cos:
             assert r.cosine == exact_cos[key], key
-    # composition = pure reuse: exercising the flat ops must not change
-    # the composed result, and the fits must come from the SAME cache
-    # entries (coarse: IVF geometry key; codes: the per-subspace keys)
-    ivf_key = (SF_CORRECT, similarity.N_IVF_CELLS, similarity._IVF_ITERS,
-               similarity._IVF_SAMPLE_HEX)
-    assert ivf_key in similarity._FIT_CACHE
-    pq_keys = [
-        k
-        for k in similarity._FIT_CACHE
-        if k[0].startswith(SF_CORRECT) and "#pq" in k[0]
-    ]
-    assert len(pq_keys) == similarity._PQ_M
-    # evict ONLY the entries this op owns (popping everything would
-    # force unrelated ops' ~0.9 s re-fits for the rest of the session)
-    warm_coarse = similarity._FIT_CACHE.pop(ivf_key)
-    for k in pq_keys:
-        similarity._FIT_CACHE.pop(k)
+    # a cold run refits the coarse quantizer and every subspace
+    # codebook and answers the same
+    artifacts.evict("kmeans_fit", SF_CORRECT)
+    misses = artifacts.counts("kmeans_fit")[1]
     again = similarity.similarity_ivf_pq_topk(spark, SF_CORRECT).collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in approx]
-    assert similarity._FIT_CACHE[ivf_key] == warm_coarse
+    misses += 1 + similarity._PQ_M
+    assert artifacts.counts("kmeans_fit")[1] == misses
+    # composition = pure reuse: the flat ops' fits are the SAME memo
+    # slots (coarse: IVF geometry; codes: the per-subspace books), so
+    # building them fits nothing
+    similarity.similarity_ivf_topk(spark, SF_CORRECT)
+    similarity.similarity_pq_topk(spark, SF_CORRECT)
+    assert artifacts.counts("kmeans_fit")[1] == misses
 
 
 def test_ivf_pq_residual_topk_recall_structure_and_reuse(spark):
@@ -163,19 +161,18 @@ def test_ivf_pq_residual_topk_recall_structure_and_reuse(spark):
         key = (r.query_id, r.neighbor_id)
         if key in exact_cos:
             assert r.cosine == exact_cos[key], key
-    ivf_key = (SF_CORRECT, similarity.N_IVF_CELLS, similarity._IVF_ITERS,
-               similarity._IVF_SAMPLE_HEX)
-    assert ivf_key in similarity._FIT_CACHE
-    res_keys = [
-        k
-        for k in similarity._FIT_CACHE
-        if k[0].startswith(SF_CORRECT) and "#ivfpqres" in k[0]
-    ]
-    assert len(res_keys) == similarity._PQ_M
-    for k in res_keys:
-        similarity._FIT_CACHE.pop(k)
+    artifacts.evict("kmeans_fit", SF_CORRECT)
+    misses = artifacts.counts("kmeans_fit")[1]
     again = similarity.similarity_ivf_pq_residual_topk(spark, SF_CORRECT).collect()
     assert [tuple(r) for r in again] == [tuple(r) for r in approx]
+    misses += 1 + similarity._PQ_M  # the coarse fit and the residual books
+    assert artifacts.counts("kmeans_fit")[1] == misses
+    # the coarse fit is the flat IVF op's slot; the residual books are
+    # their own slots, so the flat PQ books still have to be fit
+    similarity.similarity_ivf_topk(spark, SF_CORRECT)
+    assert artifacts.counts("kmeans_fit")[1] == misses
+    similarity.similarity_pq_topk(spark, SF_CORRECT)
+    assert artifacts.counts("kmeans_fit")[1] == misses + similarity._PQ_M
 
 
 def test_bruteforce_topk_shape(spark):
@@ -1742,11 +1739,13 @@ def test_bpe_train_merges_properties_and_determinism(spark):
         assert r.merged == r.merge_left + r.merge_right
         assert r.pair_count > 0
         assert " " not in r.merged  # symbols never contain the separator
-    # determinism from a COLD rules cache: pop the memoized rules so
-    # the repeat run re-derives all training rounds, not trivially
-    # re-reads them (same discipline as the PQ fit-cache pop below)
-    T._BPE_RULES_CACHE.pop((SF_CORRECT, T._BPE_MERGES), None)
+    # determinism from COLD rules: evict the memoized rules so the
+    # repeat run re-derives all training rounds, not trivially re-reads
+    # them (same discipline as the PQ fit eviction)
+    artifacts.evict("bpe_rules", SF_CORRECT)
+    misses = artifacts.counts("bpe_rules")[1]
     again = T.bpe_train_merges(spark, SF_CORRECT).collect()
+    assert artifacts.counts("bpe_rules")[1] == misses + 1
     assert [tuple(r) for r in again] == [tuple(r) for r in rows]
     # greedy invariant for round 1 against the independently-certified
     # single-round op: the trainer's first rule is bpe_pair_counts' top
@@ -1796,9 +1795,11 @@ def test_bpe_encode_corpus_properties_losslessness_and_rule_sharing(spark):
     ).count()
     assert bad == 0
 
-    # rule sharing: a cold cache must re-derive the identical encoding
-    T._BPE_RULES_CACHE.pop((SF_CORRECT, T._BPE_MERGES), None)
+    # rule sharing: cold rules must re-derive the identical encoding
+    artifacts.evict("bpe_rules", SF_CORRECT)
+    misses = artifacts.counts("bpe_rules")[1]
     again = T.bpe_encode_corpus(spark, SF_CORRECT).collect()
+    assert artifacts.counts("bpe_rules")[1] == misses + 1
     assert [tuple(r) for r in again] == [tuple(r) for r in stats]
 
 
@@ -1917,23 +1918,20 @@ def test_bpe_oracles_survive_merge_exhaustion(spark, tmp_path):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
     )
-    try:
-        for op in (T.bpe_train_merges, T.bpe_vocab_topk, T.bpe_encode_corpus):
-            name = op.__name__
-            s_rows = sorted(map(tuple, op(spark, sf_dir).collect()), key=repr)
-            o_rows = sorted(
-                map(tuple, con.execute(REGISTRY[name].oracle).fetchall()),
-                key=repr,
-            )
-            assert s_rows, f"{name}: Spark returned nothing"
-            assert len(s_rows) == len(o_rows), (name, s_rows, o_rows)
-            for a, b in zip(s_rows, o_rows):
-                norm = lambda v: round(v, 6) if isinstance(v, float) else v
-                assert tuple(map(norm, a)) == tuple(map(norm, b)), (name, a, b)
-        # the trainer really did exhaust: exactly one rule was learnable
-        assert len(T._bpe_train_rules(spark, sf_dir)) == 1
-    finally:
-        T._BPE_RULES_CACHE.pop((sf_dir, T._BPE_MERGES), None)
+    for op in (T.bpe_train_merges, T.bpe_vocab_topk, T.bpe_encode_corpus):
+        name = op.__name__
+        s_rows = sorted(map(tuple, op(spark, sf_dir).collect()), key=repr)
+        o_rows = sorted(
+            map(tuple, con.execute(REGISTRY[name].oracle).fetchall()),
+            key=repr,
+        )
+        assert s_rows, f"{name}: Spark returned nothing"
+        assert len(s_rows) == len(o_rows), (name, s_rows, o_rows)
+        for a, b in zip(s_rows, o_rows):
+            norm = lambda v: round(v, 6) if isinstance(v, float) else v
+            assert tuple(map(norm, a)) == tuple(map(norm, b)), (name, a, b)
+    # the trainer really did exhaust: exactly one rule was learnable
+    assert len(T._bpe_train_rules(spark, sf_dir)) == 1
 
 
 def test_bpe_merge_fold_is_canonical_and_cross_engine_identical(spark):
@@ -2025,50 +2023,60 @@ def test_bpe_roundtrip_invariant_oracle_side():
     assert n_overlong == 0
 
 
-def test_perplexity_tercile_histogram_cache_is_bounded(spark):
-    """ADVICE r15 item 3 regression pin: the tercile histogram follows
-    a single-slot keyed persist cache — repeated invocations (bench
-    min-of-N, repeated driver runs) never accumulate cached
-    histograms. A SAME-key repeat must REUSE the cached entry (two
-    invocations build the identical logical plan, so the cache manager
-    gives them one shared entry — re-persist + unpersist-the-previous
-    would destroy the new invocation's cache with the old, the r16
-    review catch); a DIFFERENT-key call evicts and actually releases
-    the previous blocks (persist blocks ARE releasable, unlike the
-    localCheckpoint blocks this replaced). Results are bit-identical
-    across invocations."""
+def test_perplexity_tercile_histogram_cache_is_bounded(spark, tmp_path):
+    """The tercile histogram is one persisted entry per artifact-memo
+    slot, so repeated invocations (bench min-of-N, repeated driver runs)
+    never accumulate cached histograms. A SAME-stamp repeat must REUSE
+    the entry (two invocations build the identical logical plan, so the
+    cache manager gives them one shared entry — re-persist +
+    unpersist-the-previous would destroy the new invocation's cache
+    with the old); a rewritten documents table refills the slot, answers
+    from the new rows and actually releases the previous blocks (persist
+    blocks ARE releasable, unlike localCheckpoint blocks). Results are
+    bit-identical across invocations of one stamp."""
     from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators import (
         text as T,
     )
+    from test_oracle_parity import assert_matches_oracle
+    from test_streaming_replay import _halve, _sf_copy
 
-    def _drain():
-        # pop-and-unpersist, never bare clear(): clearing would orphan
-        # a persisted histogram in the session's cache manager — the
-        # accumulation class this pin exists to prevent (r16 review)
-        while T._TERCILE_HIST_CACHE:
-            T._TERCILE_HIST_CACHE.pop()[1].unpersist()
+    sf = _sf_copy(tmp_path, "documents")
+    a = [tuple(r) for r in T.perplexity_tercile_split(spark, sf).collect()]
+    first_hist = T._tercile_hist(spark, sf)  # a hit: the op's own entry
+    assert first_hist.storageLevel.useMemory  # actually persisted
 
-    _drain()  # isolate from earlier tests (releasing, not orphaning)
-    try:
-        a = [tuple(r) for r in T.perplexity_tercile_split(spark, SF_CORRECT).collect()]
-        assert len(T._TERCILE_HIST_CACHE) == 1
-        first_key, first_hist = T._TERCILE_HIST_CACHE[0]
-        assert first_hist.storageLevel.useMemory  # actually persisted
+    # same stamp: reuse, not re-persist — the entry object is unchanged
+    hits, misses = artifacts.counts("tercile_hist")
+    b = [tuple(r) for r in T.perplexity_tercile_split(spark, sf).collect()]
+    assert a == b
+    assert artifacts.counts("tercile_hist") == (hits + 1, misses)
+    assert T._tercile_hist(spark, sf) is first_hist
+    assert first_hist.storageLevel.useMemory  # still cached
 
-        # same key: reuse, not re-persist — the entry object is unchanged
-        b = [tuple(r) for r in T.perplexity_tercile_split(spark, SF_CORRECT).collect()]
-        assert a == b
-        assert len(T._TERCILE_HIST_CACHE) == 1
-        assert T._TERCILE_HIST_CACHE[0][1] is first_hist
-        assert first_hist.storageLevel.useMemory  # still cached
+    # rewritten source: the slot refills from the new rows and the
+    # replaced histogram's blocks are released. The refilled histogram
+    # has the identical logical plan (same path), so the cache manager
+    # would answer ``first_hist.storageLevel`` with the NEW entry's
+    # level; the old entry is identified by its cached RDD instead
+    def cached_rdd(df):
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        entry = cm.lookupCachedData(df._jdf).get()
+        return entry.cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
 
-        # different key: single-slot eviction releases the old blocks
-        T.perplexity_tercile_split(spark, SF_SMOKE).collect()
-        assert len(T._TERCILE_HIST_CACHE) == 1
-        assert T._TERCILE_HIST_CACHE[0][1] is not first_hist
-        assert not first_hist.storageLevel.useMemory  # released
-    finally:
-        _drain()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    first_rdd = cached_rdd(first_hist)
+    assert persistent().containsKey(first_rdd)
+    _halve(f"{sf}/documents.parquet")
+    c = [tuple(r) for r in T.perplexity_tercile_split(spark, sf).collect()]
+    assert artifacts.counts("tercile_hist")[1] == misses + 1
+    assert c != a
+    assert_matches_oracle(spark, "perplexity_tercile_split", sf)
+    assert not persistent().containsKey(first_rdd)  # released
+    new_hist = T._tercile_hist(spark, sf)
+    assert new_hist is not first_hist and new_hist.storageLevel.useMemory
+    assert cached_rdd(new_hist) != first_rdd
+    artifacts.evict("tercile_hist", sf)
+    assert not new_hist.storageLevel.useMemory
 
 
 def test_minhash_jaccard_calibration_properties(spark):

@@ -41,7 +41,8 @@ def test_stream_final_equals_batch(spark):
 
 def _write_events(tmp_path, rows) -> str:
     """An events table of ``rows`` = (event_id, user_id, seconds after
-    2024-01-01) in ``tmp_path``; returns the dir to pass as sf_dir."""
+    2024-01-01[, event_type, default "view"]) in ``tmp_path``; returns
+    the dir to pass as sf_dir."""
     t0 = dt.datetime(2024, 1, 1)
     pq.write_table(
         pa.table(
@@ -52,7 +53,9 @@ def _write_events(tmp_path, rows) -> str:
                     pa.timestamp("us"),
                 ),
                 "user_id": pa.array([r[1] for r in rows], pa.int64()),
-                "event_type": pa.array(["view"] * len(rows), pa.string()),
+                "event_type": pa.array(
+                    [r[3] if len(r) > 3 else "view" for r in rows], pa.string()
+                ),
                 "value": pa.array([1.0] * len(rows), pa.float64()),
                 "props": pa.array(['{"k": 1}'] * len(rows), pa.string()),
             }
@@ -172,27 +175,16 @@ def test_stream_hour_rollup_values(spark):
     assert stream == batch and len(stream) > 0
 
 
-def test_stream_stream_join_equals_batch_range_join(spark):
-    from pyspark.sql import functions as F
-
-    from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
-        load,
-    )
-    from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
-        stream_view_purchase_join,
-    )
-
-    stream = sorted(
-        tuple(r) for r in stream_view_purchase_join(spark, SF_SMOKE).collect()
-    )
-    ev = load(spark, SF_SMOKE, "events")
+def _range_join_pairs(ev: DataFrame) -> list[tuple]:
+    """The batch view→purchase range join rolled up per user, the
+    columns of ``stream_view_purchase_join``."""
     v = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"), "user_id", F.col("ts").alias("v_ts")
     )
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("p_ts")
     )
-    batch = sorted(
+    return sorted(
         tuple(r)
         for r in p.join(v, "user_id")
         .filter(
@@ -207,4 +199,56 @@ def test_stream_stream_join_equals_batch_range_join(spark):
         )
         .collect()
     )
+
+
+def test_stream_stream_join_equals_batch_range_join(spark):
+    from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
+        load,
+    )
+    from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
+        stream_view_purchase_join,
+    )
+
+    stream = sorted(
+        tuple(r) for r in stream_view_purchase_join(spark, SF_SMOKE).collect()
+    )
+    batch = _range_join_pairs(load(spark, SF_SMOKE, "events"))
     assert stream == batch and len(stream) > 0
+
+
+def test_stream_stream_join_pairs_straddle_microbatches(spark, tmp_path):
+    # no view→purchase pair of the test tables straddles a chunk
+    # boundary, so pin the join buffer on a table where every pair's
+    # view and purchase land in different chunks of the 3-chunk replay
+    # (2 rows per chunk, in time order): joining each chunk alone finds
+    # no pair, and only state carried across micro-batches finds all 3
+    from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
+        load,
+    )
+    from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
+        stream_view_purchase_join,
+    )
+
+    sf = _write_events(
+        tmp_path,
+        [
+            (0, 1, 0, "view"),
+            (1, 2, 100, "view"),
+            (2, 1, 1000, "purchase"),
+            (3, 3, 1100, "view"),
+            (4, 2, 2000, "purchase"),
+            (5, 3, 2100, "purchase"),
+        ],
+    )
+    chunks = _chunked_events_dir(spark, sf, 3)
+    files = sorted(f for f in os.listdir(chunks.path) if f.endswith(".parquet"))
+    per_chunk = [
+        pair
+        for f in files
+        for pair in _range_join_pairs(spark.read.parquet(os.path.join(chunks.path, f)))
+    ]
+    assert len(files) == 3 and per_chunk == []
+    batch = _range_join_pairs(load(spark, sf, "events"))
+    assert batch == [(1, 1, 1, 1), (2, 1, 1, 1), (3, 1, 1, 1)]
+    stream = sorted(tuple(r) for r in stream_view_purchase_join(spark, sf).collect())
+    assert stream == batch
