@@ -22,6 +22,9 @@ from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators imp
 
 # importing the operator modules populates the registry
 import health_etl_pipeline_and_analytics_with_machine_learning_spark.operators  # noqa: F401,E402
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.certification import (  # noqa: E402
+    correctness_order,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -33,8 +36,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: rq.fn for name, rq in _registry.REGISTRY.items()}
+    """One entry per implemented operator from SURVEY.md §2, in the order
+    of :func:`correctness_order`: ops changed since their last
+    certification first, then the oldest certified."""
+    return {name: _registry.REGISTRY[name].fn for name in correctness_order()}
 
 
 def oracle_sql() -> dict[str, str]:

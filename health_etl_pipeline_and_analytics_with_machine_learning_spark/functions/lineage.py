@@ -1,17 +1,13 @@
 """The engine-wide lineage-cut policy, in ONE place.
 
 Catalyst does not dedupe shared subplans: a DataFrame subtree with two
-or more downstream consumers is re-executed per reference (the r5b
-gotcha — see ``operators/dedup._minhash_candidates`` for the first
-measured instance, 1.80 → 1.64 s at sf0.1). When the subtree is
-expensive and its result is small-to-moderate, the engine cuts the
-lineage once so every consumer reads the materialized blocks instead
-of recomputing the subtree.
-
-VERDICT r16 item 4: this policy used to be hand-written (an
-~8-line caveat comment plus a bare ``.localCheckpoint()``) at each
-call-site; :func:`lineage_cut` is now the single policy point, so a
-cluster deployment swaps the mechanism in ONE place.
+or more downstream consumers is re-executed per reference (see
+``operators/dedup._minhash_candidates`` for a measured instance, 1.80
+→ 1.64 s at sf0.1). When the subtree is expensive and its result is
+small-to-moderate, the engine cuts the lineage once so every consumer
+reads the materialized blocks instead of recomputing the subtree.
+:func:`lineage_cut` is the single policy point, so a cluster
+deployment swaps the mechanism in ONE place.
 """
 
 from __future__ import annotations

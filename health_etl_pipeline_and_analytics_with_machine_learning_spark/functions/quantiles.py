@@ -8,10 +8,8 @@ the buffers. ``percentile_approx`` fixes memory but changes answers,
 which the parity tier can't accept.
 
 This module computes exact interpolated quantiles by DISTRIBUTED
-SELECTION (bucket refinement — the classic k-th-smallest algorithm),
-replacing the r1 histogram/range-partition design whose first stage
-shuffled one row per DISTINCT value (at 100 TB: billions of rows).
-Here no stage ever moves more than ``N_BUCKETS`` rows per map task:
+SELECTION (bucket refinement — the classic k-th-smallest algorithm).
+No stage ever moves more than ``N_BUCKETS`` rows per map task:
 
 1. one aggregate → (count, nan count, min, max) per column;
 2. one aggregate → a fixed-width ``N_BUCKETS``-bucket count histogram
@@ -31,9 +29,8 @@ Here no stage ever moves more than ``N_BUCKETS`` rows per map task:
 Multi-column batching (``exact_quantiles_multi``) runs stages 1/2/4
 for ALL requested columns in single passes, so e.g. four medians cost
 three jobs total, not twelve. The histogram/boundary passes ride Arrow
-batches with numpy ``bincount``/``unique`` partials (``_multi_pass`` —
-the r1–r8 struct-array explode paid row-count × column-count
-intermediate rows per pass, 10× the scan cost at 25 columns).
+batches with numpy ``bincount``/``unique`` partials (``_multi_pass``),
+so a pass costs one scan, not row-count × column-count rows.
 
 NaN and ±Infinity follow IEEE/Spark sort order (−inf < finite < +inf
 < NaN): all four regions count toward n; ranks landing in the −inf,
@@ -85,16 +82,13 @@ def _bucket_of(v: float, lo: float, width: float) -> int:
     return min(N_BUCKETS - 1, int(math.floor((v - lo) / width * N_BUCKETS)))
 
 
-#: transport crossover (r10, measured at sf0.1/600k rows): the Arrow
-#: path pays a fixed Python-worker + Arrow-serialization cost PER PASS
-#: that the JVM explode path does not, while the explode path pays
-#: row-count × column-count intermediate rows that Arrow does not. At
-#: 1 column the fixed cost dominated — iqr_clip read 0.64 s (r8, JVM)
-#: → 1.08 s (r9, Arrow-always); at 25 columns the explode rows
-#: dominated — the ETL sweep read 4.9 s (JVM) vs ~1.1 s (Arrow). The
-#: hybrid keeps both certified transports and dispatches on column
-#: count (bucket math is bit-identical on both sides, so the choice is
-#: invisible to results — pinned by the engine property suite).
+#: transport crossover (measured at 600k rows): the Arrow path pays a
+#: fixed Python-worker + serialization cost PER PASS that the JVM
+#: explode path does not, while the explode path pays row-count ×
+#: column-count intermediate rows. At 1 column the fixed cost dominates
+#: (iqr_clip 0.64 s JVM vs 1.08 s Arrow); at 25 columns the explode
+#: rows do (4.9 s JVM vs ~1.1 s Arrow). Bucket math is bit-identical on
+#: both, so the dispatch on column count is invisible to results.
 JVM_TRANSPORT_MAX_COLS = 8
 
 
@@ -163,23 +157,18 @@ def _multi_pass_arrow(
     needed: dict[str, list[int]] | None,
 ):
     """Arrow transport: numpy ``bincount``/``unique`` partials per task,
-    merged by a tiny (column, key) aggregation — the r9 form, kept for
-    MANY columns where the explode's row-count × column-count
-    intermediate rows dominate (at 25 profiled columns × 600k rows the
-    two explode passes cost 10× the underlying scan: 4.9 s vs 1.1 s).
-    Per-element ops are IEEE-identical to the JVM expression
-    (``(v − lo) / width · B`` then ``floor`` then the B−1 clamp,
-    exactly :func:`_bucket_of`), so the histogram is bit-equal, and the
-    property suite that pins the engine against the builtin percentile
-    covers it.
+    merged by a tiny (column, key) aggregation, used for MANY columns
+    where the explode's row-count × column-count intermediate rows
+    dominate (at 25 columns × 600k rows the explode passes cost 10× the
+    scan: 4.9 s vs 1.1 s). Per-element ops are IEEE-identical to the
+    JVM expression (``(v − lo) / width · B`` then ``floor`` then the B−1
+    clamp, exactly :func:`_bucket_of`), so the histogram is bit-equal;
+    the engine's property suite covers it.    covers it.
 
-    r17: ``mapInArrow`` instead of ``mapInPandas`` — the numpy partials
-    never needed pandas, and the pandas Series construction per (batch,
-    column) was pure overhead on both sides of the boundary (guide §4.2;
-    measured at 25 columns × 600k rows: 1.92 → 1.57 s per pass).
-    ``Array.to_numpy(zero_copy_only=False)`` yields the identical
-    float64 array (nulls → NaN) the pandas path produced, so the bucket
-    math is bit-for-bit unchanged. The partials column ``c`` stays the
+    ``mapInArrow``, not ``mapInPandas``: the numpy partials need no
+    pandas (measured at 25 columns × 600k rows: 1.92 → 1.57 s per
+    pass); ``Array.to_numpy(zero_copy_only=False)`` gives the float64
+    array with nulls as NaN. The partials column ``c`` stays the
     COLUMN NAME (not an index) so the merged rows are drop-in for both
     callers."""
     import numpy as np
@@ -223,9 +212,8 @@ def _multi_pass_arrow(
                     # NormalizeFloatingNumbers rule canonicalizes -0.0
                     # keys to +0.0 — the SAME normalizer the JVM
                     # transport's groupBy applies, so the transports
-                    # agree on zero's sign regardless of column count
-                    # (verified empirically in the r10 review; the
-                    # dual-transport lockstep tests pin it)
+                    # agree on zero's sign (the dual-transport lockstep
+                    # tests pin it)
                     ks, ns = np.unique(vals[sel], return_counts=True)
                 out_c.append(np.full(len(ks), i, dtype=np.int64))
                 out_k.append(ks)

@@ -1,15 +1,14 @@
 """THE quantile rank/interpolation math — certification invariant 6,
-defined once (VERDICT r8 item 6: the selection engine, the grouped
-in-plan engine, and the quantile-normalize op each carried a private
-copy of the math the r7 bug lived in).
+defined once for the selection engine, the grouped in-plan engine and
+the quantile-normalize op.
 
 Invariant 6, in full:
 
 1. the 0-based position ``pos = (n−1)·p`` is computed BEFORE the
    1-based shift: evaluating ``1 + (n−1)·p`` first can round the
    fractional part away in IEEE doubles (the ulp at 2.0 is 4.4e-16, so
-   ``1 + 0.9999999999999999 == 2.0`` exactly — the r7 Hypothesis
-   counterexample pinned in tests/test_quantiles.py);
+   ``1 + 0.9999999999999999 == 2.0`` exactly, a counterexample pinned
+   in tests/test_quantiles.py);
 2. the flanking 1-based ranks are ``k_lo = 1 + ⌊pos⌋`` and
    ``k_hi = min(k_lo + 1, n)``;
 3. ``frac == 0`` short-circuits to the lower flank — evaluating

@@ -1,169 +1,7 @@
-# Importing populates the query registry. IMPORT ORDER IS LOAD-BEARING:
-# the registry dict preserves insertion order, `__spark_entry__.queries()`
-# emits it verbatim, and the driver's per-round correctness run checks a
-# bounded prefix (first 50 in round 1). Modules are therefore ordered by
-# verification priority, NOT alphabetically:
-#
-#   1. relational  — every SURVEY §2 core parity operator (r1: unchecked)
-#   2. scaled      — 100 TB-path variants needing driver certification
-#   3. prep/similarity/skew/multimodal — r1: past the window, unchecked
-#   4. text/dedup/curation/advanced/events/joins — all driver-green in r1
-#
-# New round-N queries that need a fresh driver row belong in (or before)
-# tier 2/3 modules so they land inside the checked prefix.
-from . import relational  # noqa: F401  (tier 1: SURVEY §2 parity)
-from . import scaled  # noqa: F401  (tier 2: driver-certified scale paths)
-from . import prep, similarity, skew, multimodal  # noqa: F401  (tier 3)
-from . import text, dedup, curation, advanced, events, joins  # noqa: F401  (tier 4: green in r1)
-from . import warehouse  # noqa: F401  (tier 5: r5 maintenance family — hoisted into the window via _RECHECK_FIRST)
-from . import tpch  # noqa: F401  (tier 5: classic TPC-H shapes — local oracle this round, window rotation next)
-from . import mining  # noqa: F401  (tier 5: r5 sketch/interval/skyline family)
-
-from .registry import REGISTRY as _R
-
-#: ids that must occupy the driver's 50-entry correctness-window PREFIX,
-#: in priority order. WINDOW POLICY (formalized in r7, VERDICT r6 item
-#: 3): (a) every op whose impl or oracle text changed this round gets a
-#: slot — no exceptions; (b) the remaining slots go to
-#: OLDEST-DRIVER-CERTIFICATION-FIRST, so no op's latest driver row can
-#: age past ~3 rounds as the rotation cycles.
-#: r15 window recap: the twelve staleness-5 r10 residents + the
-#: changed-text tier (bpe_encode_corpus / bpe_vocab_topk NEW, the
-#: trainer persist-fix recert, perplexity_tercile_split NEW, the
-#: unigram refactor recert) + 33 of the 34 r11 residents (tpch_q8
-#: evicted to fund the two extra changed slots — the comment that
-#: said "all 34" was wrong, ADVICE r15 item 1) — 50/50 green, in
-#: pinned order.
-_RECHECK_FIRST = [
-    # r17 window (EXACTLY 50 ids). Executed exactly as pinned at r16
-    # round end: the eight r12 residents FIRST (staleness 5 entering
-    # r17 — the oldest driver rows anywhere), then the r17
-    # changed-text tier (policy a), then the r13 cohort alphabetical
-    # with the remaining slots.
-    #
-    # POLICY REFINEMENT (r17, documented in BASELINE.md): policy (a)
-    # covers EXECUTABLE text — operator/helper code or oracle SQL,
-    # including refactors whose output is byte-identical (the r15/r16
-    # recert standard). Comment/docstring-only edits cannot change
-    # behavior and do NOT consume certification slots; they are
-    # logged here instead. r17 docstring-only edits: tpch_q2 / q9 /
-    # q14 / q16 ('%%'->'%' rendering fix, ADVICE r16 item 3) and the
-    # lineage-cut pointer rewordings inside otherwise-unchanged
-    # docstrings; every op whose body or transitive helper CODE
-    # changed is in the tier below.
-    # — staleness tier FIRST (policy b): the eight r12-cohort
-    #   residents that slipped the r16 window —
-    "streaming_view_purchase_join",
-    "text_lang_id",
-    "text_quality_score",
-    "text_simhash",
-    "text_token_count",
-    "video_frame_sample",
-    "vocab_oov_rate",
-    "window_moving_avg",
-    # — changed-text tier (policy a): VERDICT r16 item 4 factored the
-    #   hand-written localCheckpoint lineage-cut policy (+ its
-    #   cluster-deployment caveat) into functions.lineage.lineage_cut
-    #   and migrated every call-site in dedup/tpch/mining/scaled/
-    #   streaming-neardup + similarity_lsh_bucketed (the caveat-
-    #   paragraph copies all eliminated); plans are bit-identical
-    #   (the helper still localCheckpoints) but the impl text of
-    #   every op that transitively reaches a migrated site changed,
-    #   so each gets a recert slot (the r15/r16 byte-identical-recert
-    #   standard). tpch_q7 additionally RECALIBRATED (executable +
-    #   oracle change): the r17 suite-wide cross-SF certification
-    #   (VERDICT r16 item 5) caught its nation pair empty-vs-empty
-    #   at sf0.001; now NATION_18/NATION_19 (23/68/621 qualifying
-    #   rows at sf0.001/0.01/0.1).
-    #   dedup family (via _minhash_candidates / _capped_bands /
-    #   _neardup_edges / connected_components / _banded_prefix_pairs):
-    "dedup_minhash_lsh",
-    "minhash_jaccard_calibration",
-    "simhash_near_pairs",
-    "image_phash_neardup",
-    "audio_fingerprint_neardup",
-    "dedup_connected_components",
-    "dedup_incremental",
-    #   streaming near-dup (store build + maintenance batch cuts):
-    "streaming_neardup_probe",
-    "streaming_neardup_store_maintenance",
-    "streaming_neardup_store_compaction",
-    #   similarity (the bucket-table cut — one of the caveat copies):
-    "similarity_lsh_bucketed",
-    #   tpch (q7 recalibration; q11/q15 value/revenue-table cuts):
-    "tpch_q7",
-    "tpch_q11",
-    "tpch_q15",
-    #   mining (five eager cuts + the countmin grid cut):
-    "interval_concurrency_peak",
-    "assoc_rules_lift",
-    "brand_copurchase_triangles",
-    "pagerank_nation_trade",
-    "kmv_join_cardinality",
-    "streaming_countmin_replay",
-    #   scaled (the grouped-exact-quantile histogram cut feeds all
-    #   three scaled twins):
-    "median_fill_scaled",
-    "iqr_clip_scaled",
-    "group_quantiles_scaled",
-    #   r17 OPTIMIZATION-round changed tier (policy a): the exact-
-    #   quantile engine's histogram/boundary transport moved from
-    #   mapInPandas to mapInArrow (functions/quantiles._multi_pass_arrow
-    #   — bit-identical bucket math, measured 1.92 → 1.57 s/pass at 25
-    #   cols), so its three direct relational consumers recertify:
-    "median_fill",
-    "iqr_clip",
-    "quantile_profile",
-    #   and the similarity family's plan-build moved to one-parse SQL
-    #   expressions (similarity._dot_sql/_cent_array_sql/_best_cell/
-    #   _probe_cells_expr — the _lsh_buckets py4j-latency discipline
-    #   extended to the serve path) with the ADC / residual
-    #   code→centroid lookup now a dense O(1) element_at instead of a
-    #   per-term filter-lambda scan; every op reaching those helpers
-    #   recertifies (dedup_semantic_cluster reaches them too — it
-    #   moved up from the r13-cohort tier below):
-    "similarity_ivf_topk",
-    "similarity_pq_topk",
-    "similarity_ivf_pq_topk",
-    "similarity_ivf_pq_residual_topk",
-    "dedup_semantic_cluster",
-    # — r13-cohort tier (policy b: oldest-first; 11 of the 37
-    #   not-already-changed fit after the r17 optimization tier took
-    #   eight slots, alphabetical within the equal-staleness tie) —
-    "benford_law_check",
-    "bigram_cross_entropy",
-    "bigram_cross_entropy_hashed",
-    "bpe_pair_counts",
-    "c4_heuristic_filter",
-    "cdc_latest_compaction",
-    "contamination_ngram_check",
-    "corpus_curation",
-    "countmin_estimate",
-    "cusum_changepoint",
-    "dedup_common_spans",
-    # — r18 window plan (pinned now so the rotation stays
-    #   mechanical): FIRST the r13 residents that slipped this window
-    #   (staleness 5 entering r18, alphabetical: dedup_exact_text,
-    #   dedup_ngram_jaccard, doc_self_repetition, ewma_smoothing,
-    #   heavy_hitters_twopass, incremental_agg_update,
-    #   inverted_index_topk, kmv_distinct_sketch,
-    #   largest_remainder_alloc, mann_kendall_trend,
-    #   multimodal_decode_dispatch, multimodal_wav_decode,
-    #   sequence_pack_scaled, sequence_pack_stats, split_leakage_ngram,
-    #   streaming_hour_rollup, text_repetition_flags,
-    #   trend_group_avg_sort, truncation_loss_curve, two_level_agg,
-    #   user_event_paths, value_counts_topk, window_group_median_fill,
-    #   window_lag_value_delta, zscore_normalize), then r18
-    #   changed-text — the planned lineage-cut tranche 2
-    #   (split_leakage_lsh + record_id.with_record_id; affected ops:
-    #   split_leakage_lsh, global_sort_rowid, streaming_sessionization;
-    #   the r14 IVF/PQ family already recertified here in r17) — then
-    #   the r14 cohort alphabetical with the remaining slots.
-]
-
-
-_ordered = {n: _R[n] for n in _RECHECK_FIRST if n in _R}
-for _n, _rq in list(_R.items()):
-    _ordered.setdefault(_n, _rq)
-_R.clear()
-_R.update(_ordered)
+# Importing the operator modules populates the query registry, in import
+# order. The order the correctness run sees is computed on demand by
+# ``certification.correctness_order`` (``__spark_entry__.queries()``).
+from . import relational, scaled  # noqa: F401
+from . import prep, similarity, skew, multimodal  # noqa: F401
+from . import text, dedup, curation, advanced, events, joins  # noqa: F401
+from . import warehouse, tpch, mining  # noqa: F401

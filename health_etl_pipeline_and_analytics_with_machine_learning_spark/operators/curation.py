@@ -551,32 +551,23 @@ def split_leakage_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TEXT-level cross-split contamination audit: test-split documents
     that share a word-3-gram shingle with ANY train-split document —
     the standard n-gram decontamination check LLM pipelines run before
-    trusting held-out metrics (VERDICT r9 item 4; production corpora
-    use the same machinery at n = 13). Completes the leakage family:
-    :func:`~..similarity.split_leakage_check` and ``split_leakage_lsh``
-    audit EMBEDDING space; this one audits literal text reuse, and
-    :func:`contamination_ngram_check` audits against an external
-    benchmark slice rather than across the training split.
+    trusting held-out metrics (production corpora use the same
+    machinery at n = 13). :func:`~..similarity.split_leakage_check` and
+    ``split_leakage_lsh`` audit EMBEDDING space; this one audits literal
+    text reuse, and :func:`contamination_ngram_check` audits against an
+    external benchmark slice rather than across the training split.
 
-    Composes three certified primitives, imported rather than re-stated:
-    the md5 hash split (``hash_train_test_split``, keyed on doc_id
-    here), the shared ``text.word3_shingles`` pair, and the dedup
-    index's corpus-wide hot-shingle DF cap (> {_LEAKN_CAP!r}
-    occurrences ⇒ dropped on BOTH engines, so shares are computed over
-    the same capped shingle universe).
+    Composes the md5 hash split (``hash_train_test_split``, keyed on
+    doc_id), the shared ``text.word3_shingles`` pair, and the dedup
+    index's hot-shingle DF cap (> {_LEAKN_CAP!r} occurrences ⇒ dropped
+    on BOTH engines).
 
-    Output: one audit row per SOURCE of the test-side document — test
-    count, number of leaked test docs (≥ 1 shared capped shingle with
-    train), their share, and the worst offender's distinct shared-
-    shingle count (0 when the source is clean). The GATES (n_leaked,
-    max_shared, and the semi-join membership itself) are integer, so
-    no threshold ever sits on a rounding boundary; leaked_share is a
-    ROUND(int/int, 6) presentation column and carries the same
-    accepted cross-engine ROUND exposure as every other share column
-    (Spark BigDecimal HALF_UP vs DuckDB scaled half-away-from-zero —
-    divergence needs a quotient within ~1 ulp of a .xxxxxx5 boundary;
-    ADVICE r10 corrected an earlier docstring claim that this op had
-    no such exposure at all).
+    Output: one row per SOURCE of the test-side document — test count,
+    leaked test docs (≥ 1 shared capped shingle with train), their
+    share, and the worst offender's distinct shared-shingle count (0
+    when clean). The gates are integers; leaked_share is a ROUND(int/int,
+    6) presentation column with the usual cross-engine ROUND exposure
+    (HALF_UP vs half-away-from-zero within ~1 ulp of a boundary).
 
     Scale shape: NO pair materialization at all — the train side
     collapses to its DISTINCT shingle-hash set before the cross-split

@@ -583,28 +583,21 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash estimator calibration (r16): for every banded candidate
-    pair, compare the MinHash-ESTIMATED Jaccard (matching signature
-    slots / {N_MINHASH}) against the EXACT token-set Jaccard, rolled up
-    per matching-slot count — the measurement a production dedup
-    pipeline runs when tuning (bands, rows) geometry: it tells you, per
-    estimator reading, how many pairs you see, what their true
-    similarity is, and how far the estimate sits from truth
-    (E[est] = J per slot, so avg_abs_err ~ sqrt(J(1-J)/{N_MINHASH})
-    binomial noise when the estimator is healthy; a systematic gap
-    means the hash family or the shingling is broken for this corpus).
+    """MinHash estimator calibration: for every banded candidate pair,
+    compare the MinHash-ESTIMATED Jaccard (matching signature slots /
+    {N_MINHASH}) against the EXACT token-set Jaccard, rolled up per
+    matching-slot count — the measurement a dedup pipeline runs when
+    tuning (bands, rows) geometry (E[est] = J per slot, so avg_abs_err
+    ~ sqrt(J(1-J)/{N_MINHASH}) when the estimator is healthy; a
+    systematic gap means the hash family or the shingling is broken).
 
-    Scale shape: identical machinery to :func:`dedup_minhash_lsh` —
-    the signature pass is linear, candidates come from the banded
-    equi-join with hot-bucket suppression (never all-pairs; the r16
-    factoring shares the builders), the slot comparison is a
-    {N_MINHASH}-term codegen'd expression over the wide signature
-    table joined to the candidate list (two shuffle equi-joins on
-    doc id, both bounded by candidate count), the exact verify is the
-    same array_intersect the near-dup op pays, and the rollup is at
-    most {N_MINHASH}+1 rows. The signature table is lazily
-    checkpointed: it feeds BOTH the banding and the slot compare, and
-    Catalyst does not dedupe shared subplans (the r5b gotcha).
+    Scale shape: the machinery of :func:`dedup_minhash_lsh` — a linear
+    signature pass, banded equi-join candidates with hot-bucket
+    suppression, a {N_MINHASH}-term codegen'd slot comparison joined to
+    the candidate list (two equi-joins bounded by candidate count), the
+    same array_intersect verify, and a rollup of at most {N_MINHASH}+1
+    rows. The signature table feeds both the banding and the slot
+    compare, so it is lazily checkpointed.
 
     The oracle replays the IDENTICAL chain (shared verbatim via
     :func:`_minhash_chain_sql`) plus the slot/exact rollup; estimated
@@ -730,14 +723,9 @@ def _capped_bands(sig: DataFrame) -> DataFrame:
     and the join side; a fresh call gets a fresh RDD so repeated
     bench runs stay honest — policy + cluster caveat in
     :func:`~...functions.lineage.lineage_cut`), broadcast hot-bucket
-    cap (:func:`_cap_bands`).
-
-    History note (ADVICE r11 → two r12 review passes): a ``checkpoint=``
-    opt-out was added for the streaming store build, shown to re-run
-    the Arrow tally once per consumer, and then removed as DEAD once
-    streaming/neardup._store_bands moved to its own eager-inner-cut +
-    :func:`_cap_bands` composition — callers that cannot afford the
-    lazy cut should compose those primitives directly the same way."""
+    cap (:func:`_cap_bands`). A caller that cannot afford the lazy cut
+    composes :func:`_simhash_bands`, its own cut and :func:`_cap_bands`
+    directly, as streaming/neardup._store_bands does."""
     return _cap_bands(lineage_cut(_simhash_bands(sig)))
 
 
@@ -749,27 +737,21 @@ def _banded_hamming_pairs(
     """(doc_id, simhash) → near-dup candidate pairs: THE shared banded
     tail for all three modalities (`simhash_near_pairs` /
     `image_phash_neardup` / `audio_fingerprint_neardup`) — edit here,
-    never inline (r10 review find: three verbatim copies would have to
-    move in lockstep on any banding retune). Lazy-checkpointed band
-    explode (bands feed three consumers: the bucket-size pass and both
-    self-join sides; a fresh call gets a fresh RDD so repeated bench
-    runs stay honest — executor-loss/pre-AQE caveat as elsewhere),
-    broadcast hot-bucket cap, (bk, band_key) equi-self-join — never a
-    cross product — then the Hamming verify and top-50 presentation.
+    never inline. Lazy-checkpointed band explode (bands feed the
+    bucket-size pass and both self-join sides), broadcast hot-bucket
+    cap, (bk, band_key) equi-self-join — never a cross product — then
+    the Hamming verify and top-50 presentation.
 
-    PROBE MODE (r11, VERDICT r10 item 4): with ``probe`` given, ``sig``
-    is the historical signature STORE and ``probe`` a batch of NEW
-    signatures — the join becomes probe-bands × capped-store-bands
-    (doc_a = the new doc, doc_b = its store match; no doc_id ordering
-    constraint, the two sides are disjoint sets) — the incremental
-    near-dup shape streaming/neardup.py replays per micro-batch. The
-    hot-bucket cap stays on the STORE side only: a capped store bucket
-    bounds the join at ≤ cap rows PER PROBE BAND ROW, so candidate
-    volume is linear in the batch regardless of probe-side skew.
-    Oracle twin: `_BANDED_PROBE_SQL_TAIL`. ``sig_bands`` (r11 review)
-    lets a caller pass PRE-BANDED capped store rows instead of ``sig``
-    — the streaming probe materializes them once and reuses them every
-    micro-batch (the production form: a persisted banded store table).
+    PROBE MODE: with ``probe`` given, ``sig`` is the historical
+    signature STORE and ``probe`` a batch of NEW signatures; the join is
+    probe-bands × capped-store-bands (doc_a = the new doc, doc_b = its
+    store match), the shape streaming/neardup.py replays per
+    micro-batch. The cap stays on the STORE side: a capped store bucket
+    bounds the join at ≤ cap rows per probe band row, so candidate
+    volume is linear in the batch whatever the probe skew. Oracle twin:
+    `_BANDED_PROBE_SQL_TAIL`. ``sig_bands`` passes PRE-BANDED capped
+    store rows instead of ``sig`` (the streaming probe bands its store
+    once and reuses it every micro-batch).
     """
     if (sig is None) == (sig_bands is None):  # never assert: -O strips it
         raise ValueError("pass exactly one of sig / sig_bands")
@@ -827,7 +809,7 @@ _BANDED_PAIRS_SQL_TAIL = f""",
     """
 
 
-#: probe-mode oracle twin of :func:`_banded_hamming_pairs` (r11):
+#: probe-mode oracle twin of :func:`_banded_hamming_pairs`:
 #: appended after ``sig(doc_id, simhash)`` (the historical STORE) and
 #: ``probe(doc_id, simhash)`` (the new batch) CTEs, it replays banding
 #: on both sides, the STORE-side hot-bucket cap, the asymmetric
@@ -1186,8 +1168,7 @@ def entity_resolution_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming incremental near-dup (r11, VERDICT r10 item 4) — new-batch
-# documents probed against the historical banded signature store, the
+# Streaming incremental near-dup: new-batch
 # micro-batch twin of simhash_near_pairs the way streaming_dedup_replay
 # is the twin of dedup_exact_text / dedup_incremental.
 # --------------------------------------------------------------------------
@@ -1315,7 +1296,7 @@ def _banded_prefix_pairs(batch_bands: DataFrame, store_bands: DataFrame) -> Data
     )
 
 
-#: oracle twin of the MAINTAINED-store loop (r12, VERDICT r11 item 2):
+#: oracle twin of the MAINTAINED-store loop:
 #: appended after a ``sig(doc_id, simhash, src)`` CTE carrying every
 #: document's source number, it replays what the growing store makes
 #: true — a new doc (src >= store cutoff) pairs with ANY strictly
@@ -1418,13 +1399,11 @@ def streaming_neardup_store_maintenance(
 def streaming_neardup_store_compaction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Maintained-store COMPACTION, certified answer-preserving (r13,
-    VERDICT r12 item 3) — the OPTIMIZE step every appended table needs
-    at 100 TB: at-least-once retries leave duplicate band rows in the
-    persisted store, the probe absorbs them with a DISTINCT on every
-    read, and periodic compaction (a distinct rewrite, staged then
-    swapped) is what makes that read-side DISTINCT a no-op instead of
-    a per-batch tax forever.
+    """Maintained-store COMPACTION, certified answer-preserving — the
+    OPTIMIZE step every appended table needs: at-least-once retries
+    leave duplicate band rows in the store, the probe absorbs them with
+    a DISTINCT on every read, and periodic compaction (a distinct
+    rewrite, staged then swapped) makes that DISTINCT a no-op.
 
     This op runs the SAME maintained-store replay as
     ``streaming_neardup_store_maintenance`` but with the failure it

@@ -1749,7 +1749,7 @@ def fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = spread(o, "o_orderkey")
     aggs = []
     for a, b in _fd_pairs():
-        # NULL semantics pinned on BOTH engines (ADVICE r5): Spark's
+        # NULL semantics pinned on BOTH engines: Spark's
         # countDistinct(a, b) drops tuples with ANY null while DuckDB's
         # COUNT(DISTINCT (a, b)) keeps them — restrict every count to
         # rows where both columns are non-null so the FD verdicts agree

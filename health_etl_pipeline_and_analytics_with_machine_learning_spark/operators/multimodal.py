@@ -80,8 +80,7 @@ def _decode_one(payload: bytes) -> tuple[str, int, int, int, int, float]:
     (0, 0, n PCM frames, sample mean) — for mono PCM one audio frame IS
     one sample, so n_frames is the honest frame count; YUV4MPEG2 video
     (the writer's C444 profile, see _y4m_encode) maps into (width,
-    height, n video frames, plane-byte mean) — the r10 gap where a Y4M
-    payload fell to the opaque branch (VERDICT r10 item 2). A payload
+    height, n video frames, plane-byte mean). A payload
     whose magic matches but whose body fails spec validation
     (ValueError / struct truncation) is NOT a media file — e.g. text
     starting with "BM" — and falls through to the opaque branch, like a
@@ -139,9 +138,7 @@ def decode_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 # --------------------------------------------------------------------------
-# PPM (P6) roundtrip — third certified byte-level decode (r6 graduation
-# of the former rows-only multimodal_decode_stub, per VERDICT r5 item 4;
-# decode_features above dispatches to this parser on the 'P6' magic)
+# PPM (P6) roundtrip (decode_features dispatches here on 'P6')
 # --------------------------------------------------------------------------
 
 #: PPM geometry: dims cycle with doc_id (co-prime moduli, so the
@@ -574,13 +571,10 @@ def _wav_encode(doc_id: int, hex_digest: str) -> bytes:
 def _wav_header_walk(b: bytes) -> tuple[int, int]:
     """Validate the RIFF/fmt/data headers and return (sample_rate,
     n_samples) — the ONE WAV header walk BOTH readers consume
-    (:func:`_wav_parse` and :func:`_wav_fingerprint_parse`; r13 review
-    caught the fingerprint reader carrying its own unvalidated copy
-    with exactly the holes the patrol had just closed here).
+    (:func:`_wav_parse` and :func:`_wav_fingerprint_parse`).
 
-    Accept-only-what-you-implement (the r12 PPM/BMP doctrine, extended
-    by the r13 fuzz patrol): the reader implements exactly the
-    16-byte-fmt, mono, 16-bit-PCM layout the encoder writes.
+    Accept only what is implemented: exactly the 16-byte-fmt, mono,
+    16-bit-PCM layout the encoder writes.
     ``fmt_len`` is VALIDATED, not just read — every later offset (bits
     at 34, the data chunk at 36) is computed assuming a 16-byte fmt
     chunk, so an 18-byte WAVE_FORMAT_EX spelling (the most common real
@@ -726,8 +720,7 @@ def _mixed_encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas stage: give each doc a REAL container payload whose
     format cycles with doc_id (0 → PPM, 1 → BMP, 2 → WAV, 3 → Y4M) —
     the mixed corpus that forces decode_features to dispatch on magic
-    bytes. The Y4M stratum joined in r11 (VERDICT r10 item 2: until
-    then a Y4M payload fell to the dispatch's opaque branch)."""
+    bytes."""
     for pdf in batches:
         payloads = []
         for doc_id, hx in zip(pdf["doc_id"], pdf["hx"]):
@@ -855,14 +848,13 @@ def _mixed_encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("multimodal",),
 )
 def multimodal_decode_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The seam-closure op (VERDICT r6 item 4): certifies the
-    magic-dispatch DECODER itself, not just the per-format roundtrips.
-    Every document gets a real container payload whose format cycles
-    with doc_id (PPM / BMP / WAV / Y4M — the video stratum joined in
-    r11, closing VERDICT r10 item 2), and ``decode_features`` — the one
-    entry point a production pipeline would call on an unknown blob —
-    must sniff each magic, route to the right pure-stdlib parser, and
-    map format-specific geometry into the common feature schema.
+    """Certifies the magic-dispatch DECODER itself, not just the
+    per-format roundtrips. Every document gets a real container payload
+    whose format cycles with doc_id (PPM / BMP / WAV / Y4M), and
+    ``decode_features`` — the one entry point a production pipeline
+    would call on an unknown blob — must sniff each magic, route to the
+    right pure-stdlib parser, and map format-specific geometry into the
+    common feature schema.
 
     Certification is end-to-end and INDEPENDENT: DuckDB never sees a
     byte — it re-derives each branch's dims/size/mean from the doc_id
@@ -884,9 +876,7 @@ def multimodal_decode_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Perceptual image near-dup: aHash over decoded BMP pixels + banded
-# Hamming blocking (VERDICT r9 item 8 — composes the two certified
-# primitives: the byte-level BMP decode above and the simhash banding
-# machinery from operators/dedup.py)
+# Hamming blocking (the BMP decode above + dedup.py's simhash banding)
 # --------------------------------------------------------------------------
 
 #: aHash geometry: 60 sample points (house 60-bit signature width, same
@@ -898,13 +888,10 @@ def multimodal_decode_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: The banded pairing tail is IMPORTED whole — the Spark helper
 #: (`_banded_hamming_pairs`) and its oracle twin
 #: (`_BANDED_PAIRS_SQL_TAIL`) are THE single definitions in dedup.py
-#: shared by all three modalities (r10 review finds: first the frozen
-#: constant copies, then the three verbatim pipeline copies, would
-#: silently diverge on any banding retune).
-#: Import-order note: this pulls dedup (and its registrations) in
-#: during multimodal's import, ahead of its tier-4 slot; registry
-#: PREFIX order is still fully governed by operators/__init__'s
-#: _RECHECK_FIRST reorder, which is what the driver window reads.
+#: shared by all three modalities, so a banding retune reaches all
+#: three. Importing dedup here registers its ops before multimodal's;
+#: registry order does not matter (the correctness-run order is
+#: computed by ``certification.correctness_order``).
 from .dedup import (  # noqa: E402
     _BANDED_PAIRS_SQL_TAIL,
     _banded_hamming_pairs,
@@ -1068,11 +1055,8 @@ _AUDIO_FRAMES = _PHASH_BITS + 1
 
 def _wav_fingerprint_parse(b: bytes) -> int:
     """Decode a WAV payload's PCM samples via the SHARED
-    :func:`_wav_header_walk` (r13 review: this reader previously
-    carried its own copy of the walk with none of the fmt_len / codec /
-    channel / bit-depth / odd-length validation the fuzz patrol added —
-    hardening one of two parallel walks leaves the silent-misparse
-    class alive in the other) and fold them into the 60-bit
+    :func:`_wav_header_walk` (one validating walk for both readers)
+    and fold them into the 60-bit
     energy-delta fingerprint."""
     import numpy as np
 
@@ -1206,8 +1190,7 @@ def _y4m_encode(doc_id: int, hex_digest: str) -> bytes:
         # byte i of frame f is src[(i + f·OFF) % 32]: a C-speed slice
         # of the repeated digest starting at the rotation point —
         # equality with the per-byte form is pinned by the closed-form
-        # tests (r10 review find: the interpreted per-byte loop was
-        # most of this op's measured cost)
+        # tests
         r = (f * _Y4M_FRAME_OFF) % 32
         out += (src * ((r + fb) // 32 + 1))[r : r + fb]
     return bytes(out)
@@ -1303,9 +1286,8 @@ def _y4m_frame_sample_parse(
     return w, h, nf, len(b), sums, motion
 
 
-#: schema and row layout are GENERATED from _VIDEO_SAMPLES (r10 review
-#: find: a half-parameterized K desyncs schema/oracle silently on a
-#: retune) — the oracle below interpolates the same K everywhere
+#: schema and row layout are GENERATED from _VIDEO_SAMPLES, and the
+#: oracle below interpolates the same K, so a retune cannot desync them
 _VIDEO_SAMPLE_COLS = [f"s{j}" for j in range(_VIDEO_SAMPLES)]
 _VIDEO_SAMPLED = (
     "doc_id long, width int, height int, n_frames int, n_bytes long, "
@@ -1398,17 +1380,12 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel — shuffle-free at production split counts
     but the presentation sort (locally behind the measured bench-only
     fan-out below), identical plan family to `multimodal_wav_decode`.
-    Real videos are
-    orders of magnitude larger per blob; the plan is blob-count
-    parallel, and per-blob cost lives inside the batched UDF where a
-    real decoder (PyAV/ffmpeg) would slot in behind the same schema
-    without touching the plan."""
+    The plan is blob-count parallel; a real decoder (PyAV/ffmpeg) would
+    slot into the batched UDF behind the same schema."""
     d = load(spark, sf_dir, "documents")
     # fan-out still pays, barely, after the C-speed encode rewrite
     # (interleaved min-of-3 at sf0.1: 0.55 single vs 0.48 spread; it
-    # was 1.48 vs 0.74 with the original per-byte Python loop — the
-    # r10 review correctly called the shuffle a compensation for
-    # avoidable interpreter cost)
+    # was 1.48 vs 0.74 with a per-byte Python loop)
     src = _hashed_src(d, spark, fan_out=True)
     return src.mapInPandas(_y4m_frame_sample, schema=_VIDEO_SAMPLED).orderBy(
         "doc_id"

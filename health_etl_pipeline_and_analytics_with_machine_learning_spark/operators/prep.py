@@ -252,14 +252,9 @@ def text_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents.
 
     Words are the non-whitespace runs over the explicit ASCII
-    whitespace class (``text._WS_CHARS`` — r13 moved this op's inline
-    ``\\S+`` onto the shared class so both regex dialects parse the
-    identical set; r9 originally fixed the run shape): the previous
-    trim-then-split form let
-    edge tabs/newlines produce phantom EMPTY-STRING words on BOTH
-    engines — consistently oracle-green, but they depressed ttr,
-    inflated top_word_share, and let a tab-only document through the
-    space-only trim guard to be flagged as repetitive.
+    whitespace class (``text._WS_CHARS``), so both regex dialects parse
+    the identical set and edge tabs/newlines make no phantom empty
+    words (which would depress ttr and inflate top_word_share).
     """
     d = load(spark, sf_dir, "documents")
     # PROJECT the word array before the per-element lambdas (the

@@ -78,41 +78,22 @@ def round_cmp_sql(expr: str, dp: int = ROUND_DP) -> str:
 def spread(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
     """Keyed repartition that SELF-DISABLES on production layouts.
 
-    The driver testdata ships each table as one parquet split, so an
-    op whose heavy compute is a narrow stage (multi-distinct Expand,
+    The driver testdata ships each table as one parquet split, so an op
+    whose heavy compute is a narrow stage (multi-distinct Expand,
     Arrow-batched tally, banded-DP verify) would run on a single task
-    without an explicit spread. At real split counts the scan is
-    already parallel and the extra shuffle is pure cost — so skip it
-    when the input already has at least the target partition count.
-    This replaces the per-op "no-op to remove at scale" comments with
-    actual behavior; results are partition-count-invariant for every
-    caller (aggregates/tallies only).
+    without a spread. At real split counts the scan is already parallel
+    and the extra shuffle is pure cost, so skip it when the input
+    already has at least the target partition count. Results are
+    partition-count-invariant for every caller (aggregates/tallies).
 
-    The split-count probe is deliberately CHEAP (ADVICE r6): every call
-    site is scan-rooted, so ``df.inputFiles()`` (analysis only — no
-    physical planning, no RDD conversion) gives the file count as a
-    partition ESTIMATE, biased in both directions (ADVICE r7): large
-    files split further (underestimate), while many SMALL files pack
-    several per partition under maxPartitionBytes/openCostInBytes
-    (OVERESTIMATE — a 100-tiny-file input can report n_splits ≥ target
-    while the actual scan has far fewer partitions, skipping the
-    widening repartition). That miss is a perf heuristic only — results
-    are partition-count-invariant — and at production split counts
-    file sizes approach maxPartitionBytes, where the estimate is tight
-    and spread() correctly no-ops.
-    Non-file-rooted inputs (unit tests over ``spark.range``) fall back
-    to ``df.rdd.getNumPartitions()``, which forces physical planning
-    and reports the pre-AQE count — fine off the hot path.
-
-    Spark Connect (r11, the r11 review's catch on ADVICE r10): both
-    ``sparkContext`` and the ``df.rdd`` fallback raise on Connect
-    sessions, which made the per-call-site guards upstream dead code —
-    the guards live HERE now. On Connect the split-count probe degrades
-    to ``inputFiles`` only; a non-file-rooted Connect input skips the
-    probe and repartitions unconditionally (results are
-    partition-count-invariant for every caller, so the worst case is
-    one extra shuffle, never a crash). Classic-Spark behavior is
-    bit-identical to before.
+    The split count is estimated cheaply from ``df.inputFiles()``
+    (analysis only). It is biased both ways: large files split further,
+    and many small files pack several per partition, so a
+    100-tiny-file input can skip a widening it needed. That miss costs
+    speed only. Inputs not rooted in files (``spark.range`` in tests)
+    fall back to ``df.rdd.getNumPartitions()``. On Spark Connect, where
+    ``sparkContext`` and ``df.rdd`` raise, only ``inputFiles`` is
+    probed and a non-file input repartitions unconditionally.
     """
     try:
         default_par = df.sparkSession.sparkContext.defaultParallelism
@@ -154,7 +135,7 @@ def epoch_us_utc(col):
     wall times inside a spring-forward GAP (nonexistent local times,
     at most one hour per year) normalize forward by the gap width on
     the Spark side while DuckDB reads them naively. The driver session
-    is UTC (proved in r5), so this edge never reaches certification;
+    is UTC, so this edge never reaches certification;
     it is documented rather than papered over. Use this — never a bare
     ``unix_micros``/``cast("long")`` — wherever an op emits or compares
     epoch-derived numbers.

@@ -578,9 +578,8 @@ def iqr_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: quantile_profile geometry: every numeric lineitem measure × a probe
 #: set that brackets the engine's numeric edges — deep tails (0.01/
 #: 0.99), the quartile core, and the near-1 boundary prob whose
-#: fractional rank collapses under a premature 1-based shift (the r7
-#: Hypothesis counterexample class, BASELINE.md certification
-#: invariant 6)
+#: fractional rank collapses under a premature 1-based shift
+#: (certification invariant 6)
 _PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 _PROFILE_PROBS = (0.01, 0.25, 0.5, 0.75, 0.99, 0.9999999999999999)
 

@@ -292,8 +292,7 @@ def _probe_cells_expr(arr_sql: str, v: str, vv: str) -> Column:
     ``N_PROBE`` — all inside ONE narrow array expression (sort the
     struct array). ``v``/``vv`` name the query-vector column and its
     precomputed self-dot. Shared by the flat IVF op and the composed
-    IVF-ADC op (r14 review: the composed op started as a verbatim
-    copy of this expression)."""
+    IVF-ADC op."""
     d2 = _d2s_sql(vv, v, "c")
     return F.expr(
         f"slice(array_sort(transform({arr_sql},"
@@ -391,9 +390,7 @@ def _kmeans_cte_sql(
     textual statement of the pinned determinism contract (md5 sample,
     lowest-vec_id init, round_cmp-pinned argmin with cell tiebreak,
     round_cmp(·, 9) mean update), serving the IVF, semantic-dedup, AND
-    per-subspace PQ fits (r13 review: the PQ chain started as a textual
-    near-copy — a future change to any pinned rule had to land in two
-    places in lockstep). Returns (cte_body, final_centroid_table_name).
+    per-subspace PQ fits. Returns (cte_body, final_centroid_table_name).
 
     ``prefix`` namespaces every CTE so several chains coexist in one
     query; ``vsel`` is the sample's vector projection (a subspace fit
@@ -445,8 +442,7 @@ def _ivf_assign_probe_ctes(assigned_cols: str = "vec_id, v, cell") -> str:
     statement of the pinned coarse-quantizer serve contract (round_cmp
     d2 argmin with cell tiebreak for assignment, rn <= {N_PROBE} for
     the probe list), shared by the flat IVF oracle and the composed
-    IVF-ADC oracle (r14 review: the composed oracle started as a
-    textual copy). ``assigned_cols`` is the assignment projection —
+    IVF-ADC oracle. ``assigned_cols`` is the assignment projection —
     the flat op re-scores raw vectors so it carries ``v``; the
     composed op scores codes and needs only ``vec_id, cell``."""
     return f"""
@@ -981,17 +977,15 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def split_leakage_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test leakage audit blocked on the ENGINEERED LSH bucket
-    key — the certified production twin of :func:`split_leakage_check`
-    (VERDICT r8 item 3). The label-blocked audit's Σ|block|² bound is
-    data-dependent (one hot label pairs quadratically); here candidates
-    come from the md5-hyperplane buckets :func:`similarity_lsh_bucketed`
-    certifies ({_LSH_TABLES} tables × {_LSH_K} planes, cell {_LSH_LEN}),
-    so block sizes are set by index geometry, not by the label
-    distribution — and the audit sees cross-LABEL leaks the label-
-    blocked variant is blind to. Approximate by construction (measured
-    candidate recall at the {_LEAK_COSINE} bar: 76/90 ≈ 84% at sf0.01,
-    including the corpus-max pair; tests/test_llm_ops.py pins subset +
-    recall-floor against the brute-force audit).
+    key — the certified production twin of :func:`split_leakage_check`.
+    The label-blocked audit's Σ|block|² bound is data-dependent; here
+    candidates come from the md5-hyperplane buckets
+    :func:`similarity_lsh_bucketed` certifies ({_LSH_TABLES} tables ×
+    {_LSH_K} planes, cell {_LSH_LEN}), so block sizes are set by index
+    geometry, and the audit sees cross-LABEL leaks too. Approximate by
+    construction (candidate recall at the {_LEAK_COSINE} bar: 76/90 ≈
+    84% at sf0.01; tests/test_llm_ops.py pins subset + recall floor
+    against the brute-force audit).
 
     Output: one row per label (of the TEST-side vector — the document
     whose held-out status is contaminated): split sizes, the number of
@@ -1002,17 +996,10 @@ def split_leakage_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN op; the candidate join shuffles on (table, bucket-key); pair
     dedup across the {_LSH_TABLES} tables is one aggregation keyed on
     the pair id and carries ONLY the two ids — the 64-dim vectors are
-    joined back AFTER dedup from the corpus table (r9 bench finding:
-    carrying both vectors through the dedup shuffle moved ~420 MB for
-    408k candidate pairs at sf0.1; skinny dedup + re-attach measured
-    5.7 → 3.4 s, and the remaining cost is simply #candidates × the
-    ~6 µs/pair cosine every pair op here pays — this near-isotropic
-    synthetic corpus lets the coarse buckets prune only ~39% of the
-    cross-split pairs, where clustered production embeddings prune
-    most). The
-    shared bucket subtree feeds both join sides, so it is lineage-cut
-    once (same measured localCheckpoint win and the same single-node
-    caveat as similarity_lsh_bucketed — see that op)."""
+    joined back AFTER dedup from the corpus table (carrying both
+    vectors through the dedup shuffle moved ~420 MB for 408k pairs at
+    sf0.1; skinny dedup + re-attach measured 5.7 → 3.4 s). The shared
+    bucket subtree feeds both join sides, so it is lineage-cut once."""
     e = _emb(spark, sf_dir).withColumn(
         "tr",
         F.substring(
@@ -1086,7 +1073,7 @@ def split_leakage_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Product quantization (r13) — the third classic ANN index family next
+# Product quantization — the third classic ANN index family next
 # to IVF cells and LSH buckets, and the MEMORY-scale path: the corpus is
 # stored as M-byte codes (one codebook index per subspace) instead of
 # dim×8-byte raw vectors, and queries score against code-indexed
@@ -1105,13 +1092,10 @@ _PQ_SAMPLE_HEX = _IVF_SAMPLE_HEX  # same 30% md5-hash fit sample
 #: Tuned on the driver corpus like the LSH geometry: random near-unit
 #: vectors are close to isotropic, which bounds ANY quantizer's ranking
 #: power. Measured recall@5 with these codebooks: 0.38 at 4×TOP_K,
-#: 0.68 at 10×, 0.82 at 20× (adopted, r14 — VERDICT r13 flagged the
-#: 10× recall as low-ish and the re-rank cost is |queries|×shortlist,
-#: trivial at any setting), 0.92 at 30×; the COMPOSED IVF-ADC op
-#: saturates at ≈0.6 from 20× up — its ceiling is IVF cell membership
-#: (probes recall 0.64), not the shortlist. K=32 codebooks only help
-#: at the smaller shortlists. On genuinely clustered production
-#: embeddings the identical geometry shortlists far more sharply.
+#: 0.68 at 10×, 0.82 at 20× (adopted; the re-rank cost is
+#: |queries|×shortlist, trivial at any setting), 0.92 at 30×; the
+#: COMPOSED IVF-ADC op saturates at ≈0.6 from 20× up — its ceiling is
+#: IVF cell membership (probes recall 0.64), not the shortlist.
 _PQ_SHORTLIST = 20 * TOP_K
 
 
@@ -1282,8 +1266,7 @@ def _pq_slice_proj(e: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
 def _pq_encode(
     sl: DataFrame, arrs_sql: list[str], extra: tuple[str, ...] = ()
 ) -> DataFrame:
-    """The ONE statement of the PQ encode contract (r14 review: the
-    encode select had grown three copies): over a
+    """The ONE statement of the PQ encode contract: over a
     :func:`_pq_slice_proj`-shaped frame, emit ``vec_id`` (+ ``extra``
     passthrough columns) and ``code{{m}}`` = the argmin codebook entry
     per subspace slice — a narrow scan, codebooks folded in as
@@ -1416,16 +1399,12 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# IVF-ADC (r14) — the composed serve path the PQ op's docstring
-# promises: the IVF coarse quantizer prunes the corpus to probed-cell
-# members, PQ-ADC ranks ONLY inside them from the 8-byte code table,
-# and exact cosine refines the shortlist. This is the architecture of
-# every production billion-vector ANN stack (FAISS IVFADC, SCANN,
-# Milvus IVF_PQ): cells bound WHICH vectors are scored, codes bound
-# WHAT is read per scored vector. Both halves reuse the certified fits
-# verbatim (the coarse centroids ARE similarity_ivf_topk's, the
-# codebooks ARE similarity_pq_topk's — cache-shared), so the oracle is
-# a CTE merge of the two certified chains.
+# IVF-ADC — the composed serve path: the IVF coarse quantizer prunes the
+# corpus to probed-cell members, PQ-ADC ranks ONLY inside them from the
+# 8-byte code table, and exact cosine refines the shortlist (the FAISS
+# IVFADC / SCANN / Milvus IVF_PQ architecture). Both halves reuse the
+# certified fits (similarity_ivf_topk's centroids, similarity_pq_topk's
+# codebooks), so the oracle is a CTE merge of the two certified chains.
 # --------------------------------------------------------------------------
 
 
@@ -1527,16 +1506,12 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Residual-encoded IVF-ADC (r14) — the refinement the plain composed op
-# deliberately omits: production IVFADC (FAISS IVF_PQ, SCANN, Milvus)
-# quantizes the RESIDUAL v − centroid[cell], not the raw vector,
-# because residuals concentrate near zero once the coarse quantizer has
-# explained the cell structure — the same codebook budget spends its
-# resolution where the remaining variance actually is. The price is
-# that the query side must be re-expressed PER PROBED CELL (the query's
-# residual differs in every cell it probes), which is why this is a
-# separate certified op and not a flag on the plain one: the probe
-# row count, the ADC table shape, and the oracle chain all change.
+# Residual-encoded IVF-ADC: production IVFADC quantizes the RESIDUAL
+# v − centroid[cell], not the raw vector, because residuals concentrate
+# near zero once the coarse quantizer has explained the cell structure.
+# The query side must then be re-expressed PER PROBED CELL, so the probe
+# row count, the ADC table shape and the oracle chain all differ from
+# the plain composed op's: a separate certified op, not a flag.
 # --------------------------------------------------------------------------
 
 

@@ -30,30 +30,18 @@ ALPHA_TOKENIZE_SQL = (
 
 # --------------------------------------------------------------------------
 # The SHARED whitespace normalizer + token-count pairs — the explicit
-# ASCII-whitespace-class form. History: the original pair spelled
-# whitespace as each dialect's \s, but Java's (Spark) \s is
-# [ \t\n\x0B\f\r] while RE2's (DuckDB) LACKS \x0B — the one divergent
-# character the r10 edge audit found (corpus-guarded until fixed).
-# Writing the class OUT makes both dialects parse the identical set, so
-# twins built from it agree on EVERY input, vertical tab included; on
-# the Spark side the explicit class is bit-identical to \s (Java
-# semantics chosen: \x0B IS whitespace — pinned by
-# test_ascii_class_equals_java_whitespace_on_spark). The burn-down
-# shipped in two tranches (r12: simhash_sig + riders, doc_fingerprint,
-# text_token_count, text_quality_score, vocab_oov_rate,
-# source_vocab_overlap; r13: the 15 remaining consumers +
-# text_repetition_flags's inline \S+), after which the legacy \s-based
-# pair was DELETED — every whitespace tokenization in the repo now
-# consumes these definitions. Edit here, never inline.
+# ASCII-whitespace-class form. Java's (Spark) \s is [ \t\n\x0B\f\r]
+# while RE2's (DuckDB) lacks \x0B; writing the class OUT makes both
+# dialects parse the identical set, so twins built from it agree on
+# every input, vertical tab included (Java semantics: \x0B IS
+# whitespace — pinned by test_ascii_class_equals_java_whitespace_on_spark).
+# Every whitespace tokenization in the repo consumes these definitions.
+# Edit here, never inline.
 #
-# Token-count definition: the number of non-whitespace runs. The r9
-# hoist's original trim-guard-plus-split form miscounted edges: SQL
-# ``trim`` strips SPACES only, so ANY leading/trailing tab/newline
-# survived the trim and split into a phantom empty-string token —
-# tab-only text counted 2, ``"\tfoo"`` counted 2 — consistently on
-# both engines, so oracles stayed green while the count lied. The
-# run-count form needs no guard at all: 0 for empty/whitespace-only,
-# one per actual word when edge whitespace is non-space.
+# Token count = the number of non-whitespace runs: 0 for empty or
+# whitespace-only text, one per word, with no trim guard (SQL ``trim``
+# strips spaces only, so a trim-then-split form counts a phantom token
+# for edge tabs/newlines).
 # --------------------------------------------------------------------------
 
 #: the class body — ONE source string interpolated into BOTH dialects'
@@ -309,26 +297,20 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def simhash_sig(d: DataFrame, spark: SparkSession) -> DataFrame:
     """(doc_id, text, …) → (doc_id, simhash): the 60-bit SimHash
-    pipeline over a documents-shaped DataFrame. ONE definition (r11)
-    shared by ``text_simhash`` (whole corpus, presentation-sorted),
-    ``dedup.simhash_near_pairs`` (via text_simhash), and the streaming
-    near-dup probe's per-micro-batch signatures
-    (streaming/neardup.py) — a second copy of the tally would drift on
-    any retune.
+    pipeline over a documents-shaped DataFrame, shared by
+    ``text_simhash``, ``dedup.simhash_near_pairs`` (via text_simhash)
+    and the streaming near-dup probe's per-micro-batch signatures.
 
     Scale shape: token hashes stay JVM-side (md5 in a narrow expression
     — the determinism contract with the oracle); the 60-way bit tally
-    is pure integer math with NO data-dependent branching, so it runs
-    as a vectorized Arrow-batched ``mapInArrow`` — per bit, one
-    shift/mask over the batch's FLATTENED token-hash buffer plus one
-    offsets-driven segment sum (r17; the r11 form reduced a
-    (tokens × 60) matrix per document in a Python loop). The doc's
-    token array never leaves its row: ZERO shuffle. Measured at sf0.1
-    (32 cores): 0.6 s for the r11 per-doc form vs 1.33 s for
-    explode(tokens)×60 rows through two doc_id-keyed partial-agg
-    shuffles, 2.1 s for interpreted higher-order-lambda tallies, 3.5 s
-    for 60 conditional SUMs in one wide groupBy; the flattened form
-    removes the remaining per-doc Python overhead from the winner.
+    is pure integer math with no data-dependent branching, so it runs
+    as a vectorized ``mapInArrow``: per bit, one shift/mask over the
+    batch's flattened token-hash buffer plus one offsets-driven segment
+    sum. The token array never leaves its row: ZERO shuffle. Measured
+    at sf0.1 (32 cores), a per-doc Python tally took 0.6 s against
+    1.33 s for explode(tokens)×60 rows through two partial-agg
+    shuffles, 2.1 s for higher-order-lambda tallies and 3.5 s for 60
+    conditional SUMs in one wide groupBy.
     """
     import numpy as np
     import pyarrow as pa
@@ -367,14 +349,11 @@ def simhash_sig(d: DataFrame, spark: SparkSession) -> DataFrame:
                 names=["doc_id", "simhash"],
             )
 
-    # the testdata ships one parquet split per table, so the narrow
-    # compute would land on ONE task; spread (doc_id, norm) across a
-    # BOUNDED number of tasks first (8 measured best at sf0.1 — wider
-    # widths pay more per-task/Arrow overhead than they recover on this
-    # overhead-bound corpus). At 100 TB the source has thousands of
-    # natural splits and this repartition is a no-op to remove, not a
-    # plan change. sparkContext raises on Spark Connect sessions
-    # (ADVICE r10) — same fixed fallback as the pipeline env probe.
+    # one parquet split per table would put the narrow compute on ONE
+    # task: spread (doc_id, norm) over a BOUNDED number of tasks (8
+    # measured best at sf0.1; wider pays more per-task Arrow overhead).
+    # A no-op to remove at production split counts. sparkContext raises
+    # on Spark Connect, hence the fixed fallback.
     try:
         par = spark.sparkContext.defaultParallelism
     except Exception:  # pragma: no cover - Connect-only path
@@ -1011,10 +990,8 @@ def _bpe_merge_fold(s, l: str, r: str):
 
 
 #: the char→symbol-string "symbolize" step ('word' → 'w o r d') as ONE
-#: cross-engine pair — the r15 review found seven inline copies (three
-#: in this module, one in dump_plans, two in tests, plus the two oracle
-#: CTEs), the exact drift class :func:`_word_freq_cte` was factored to
-#: close in r14. Edit here, never inline.
+#: cross-engine pair, used by this module's trainer, encoder and oracle
+#: CTEs and by the tests. Edit here, never inline.
 _BPE_SYMBOLIZE_SQL = "trim(regexp_replace(w, '(.)', '\\1 ', 'g'))"
 
 

@@ -1,8 +1,7 @@
-"""Shared oracle-output type-class maps (ADVICE r6: one source of
-truth for the dev-loop script AND the parity gate, so the two can't
-drift).
+"""Shared oracle-output type-class maps: one source of truth for
+``scripts/drive_entry.py`` and the parity gate, so the two can't drift.
 
-Round-5 lesson: the driver fetches DuckDB results through
+The driver fetches DuckDB results through
 pandas/Arrow, where HUGEINT/DECIMAL become float64/decimal while Spark
 emits int64 — so every oracle output column must share Spark's numeric
 CLASS, not merely compare equal under ``fetchall()`` (which converts

@@ -8,9 +8,9 @@ Architecture notes (scale-first):
   codegen'd, no shuffle, no UDFs (SURVEY §4.2).
 - Column statistics the reference computes eagerly (medians, IQR
   quantiles) are likewise computed eagerly here — on the
-  DISTRIBUTED-EXACT selection engine (functions.quantiles, r9: the
-  builtin percentile's single-task value buffer was both the measured
-  local bottleneck and the 100 TB OOM) — then collected to the driver
+  DISTRIBUTED-EXACT selection engine (functions.quantiles; the builtin
+  percentile's single-task value buffer is both a local bottleneck and
+  the 100 TB OOM), then collected to the driver
   and re-embedded as literals. That is metadata-scale traffic (a
   handful of doubles) and deliberately so: embedding them lazily as
   cross-joined subplans duplicates the whole upstream plan per
@@ -148,12 +148,10 @@ def _global_quantiles(
     NaN-majority column) are mapped to None = "no fill value", matching
     the builtin's null-on-empty.
 
-    INTENTIONAL behavior change vs the pre-r9 builtin path (ADVICE r9):
-    when a column's median is NaN (NaN-majority column), the old
-    ``F.median`` fill wrote that NaN into the nulls; mapping it to None
-    leaves nulls null instead — no row gains a NaN it didn't have, and
-    downstream IS-NULL accounting stays truthful (this is also pandas'
-    behavior: ``fillna(nan)`` is a no-op). Pinned by
+    A NaN median (NaN-majority column) means no fill: nulls stay null
+    (``F.median`` would write the NaN into them), so no row gains a NaN
+    and IS-NULL accounting stays truthful, as with pandas'
+    ``fillna(nan)``. Pinned by
     tests/test_pipeline_structure.py::test_nan_median_means_no_fill."""
     res = exact_quantiles_multi(df, col_probs)
     import math
@@ -486,12 +484,8 @@ def _probe_executor_python_env(spark: SparkSession) -> None:
 
     def _probe(batches):
         # each probed import is wrapped so ANY failure to import the
-        # module — including a broken transitive dependency (e.g.
-        # pandas present but dateutil missing) — surfaces under an
-        # unambiguous sentinel the driver-side rebrand can anchor on
-        # (r11 review: a bare import left transitive failures reading
-        # as 'No module named dateutil', which no anchored form naming
-        # the probed modules can match)
+        # module, a broken transitive dependency included, surfaces
+        # under the sentinel the driver-side rebrand anchors on
         import importlib
 
         for _mod in ("numpy", "pandas", "pyarrow"):
@@ -515,20 +509,14 @@ def _probe_executor_python_env(spark: SparkSession) -> None:
         spark.range(n).repartition(n).mapInPandas(_probe, "id long").count()
     except Exception as exc:  # pragma: no cover - env-dependent
         # Rebrand ONLY failures of the probe's OWN three imports — a
-        # preempted executor, a transient shuffle error, or an
-        # exception that merely ECHOES the word 'ImportError' in a log
-        # line must propagate as itself, not as bogus install
-        # instructions (r10 review find on the first version; ADVICE
-        # r10 tightened the loose substring match; the r11 review then
-        # showed any traceback-form regex misses TRANSITIVE dependency
-        # breakage, e.g. pandas present but dateutil missing — so the
-        # probe function wraps its imports under the
-        # 'executor-env-probe:' sentinel). TWO anchored forms rebrand:
-        # the sentinel (covers transitive breakage, echo-proof), and
-        # the raw missing-module traceback naming one of the three —
-        # because when pandas/pyarrow are absent OUTRIGHT, the pyspark
-        # WORKER BOOTSTRAP (Arrow serializer imports) dies before the
-        # sentinel wrapper ever runs.
+        # preempted executor, a transient shuffle error, or an exception
+        # that merely ECHOES 'ImportError' must propagate as itself.
+        # TWO anchored forms rebrand: the 'executor-env-probe:' sentinel
+        # the probe wraps its imports in (covers transitive breakage,
+        # e.g. pandas present but dateutil missing), and the raw
+        # missing-module traceback naming one of the three — when
+        # pandas/pyarrow are absent outright, the pyspark worker
+        # bootstrap dies before the sentinel wrapper runs.
         import re
 
         msg = f"{type(exc).__name__}: {exc}"
@@ -569,19 +557,13 @@ def clean_health_dataset(
     remains available via df.write.csv).
 
     Executor-side requirements: the eager statistics ride the
-    selection engine's Arrow transport (functions.quantiles._multi_pass,
-    mapInPandas since r9), so every EXECUTOR Python env needs
-    pandas + pyarrow + numpy — previously this path was pure JVM
-    expressions (ADVICE r9). Probed eagerly here — on the EXECUTORS,
-    via a tiny mapInPandas job, since driver and executor Python envs
-    commonly differ on YARN/K8s (r10 review find: a driver-only import
-    check passes exactly where the failure happens) — so a cluster
-    missing them fails at entry with a clear message, not mid-job
-    inside stage_year/stage_missing. The probe result is cached on the
-    SparkSession, so repeated pipeline calls in one session pay it
-    once; it reaches however many executors pick up its tasks (one per
-    default-parallelism slot) — representative, not exhaustive, which
-    is the best any entry-time check can do."""
+    selection engine's Arrow transport (functions.quantiles._multi_pass),
+    so every EXECUTOR Python env needs pandas + pyarrow + numpy. They
+    are probed here on the executors (a tiny mapInPandas job; driver
+    and executor envs often differ on YARN/K8s), so a cluster missing
+    them fails at entry with a clear message, not mid-job. The result
+    is cached on the SparkSession; the probe reaches the executors that
+    pick up its tasks — representative, not exhaustive."""
     _probe_executor_python_env(spark)
     raw = read_csv_raw(spark, csv_path)
     cleaned = clean_health_dataframe(

@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import artifacts
 from ..operators.registry import events_ts, table_schema
-from .replay import mkdtemp, run_bounded
+from .replay import ReplayDir, run_bounded
 from .sessionize import _fmt_wall, _wall_ts
 
 
@@ -35,15 +36,24 @@ def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> Dat
     directory of symlinks — which is also exactly how continuous ingest
     would land files in production. ``copies > 1`` symlinks the file
     multiple times to simulate at-least-once redelivery (every event
-    duplicated), the input the streaming dedup twin exists for."""
+    duplicated), the input the streaming dedup twin exists for. The
+    directory is a replay slot of :func:`artifacts.memo`, shared by
+    every read with the same ``copies``."""
     import os
 
     src = os.path.join(sf_dir, "events.parquet")
     watch_dir = src
     if os.path.isfile(src):
-        watch_dir = mkdtemp("events_stream_")
-        for i in range(copies):
-            os.symlink(src, os.path.join(watch_dir, f"events_{i}.parquet"))
+
+        def link(out: str) -> None:
+            for i in range(copies):
+                os.symlink(src, os.path.join(out, f"events_{i}.parquet"))
+
+        watch_dir = artifacts.memo(
+            spark, "events_stream", sf_dir, "events", (copies,),
+            lambda: ReplayDir.new("events_stream", link),
+            ReplayDir.on_disk, ReplayDir.remove,
+        ).path
     schema = table_schema(spark, sf_dir, "events")
     return events_ts(spark.readStream.schema(schema).parquet(watch_dir))
 

@@ -1,27 +1,32 @@
 """Driver-mimic: verify the __spark_entry__ contract end-to-end.
 
-Run FROM /root/repo with PYTHONPATH=/root/repo:
+Run from the repo root with the repo on PYTHONPATH (executor Python
+workers import the package from there):
 
-    PYTHONPATH=/root/repo python scripts/drive_entry.py [op ...]
+    PYTHONPATH=. python scripts/drive_entry.py [op ...]   [SF_DIR=<scale-factor dir>]
 
 With no args: entry() smoke at sf0.001, then EVERY queries() entry vs
-its oracle_sql() in DuckDB at sf0.01 (column names, row count,
-order-insensitive values at 9dp). With args: only the named ops (the
-fast inner loop while authoring). Exits 1 on any MISMATCH. This is the
-/verify skill's recipe — committed here so the gate survives /tmp
-wipes and machine resets.
+its oracle_sql() in DuckDB at $SF_DIR (column names, row count,
+order-insensitive values at 9dp, and the numeric class of every oracle
+column against Spark's, ``oracle_types.class_mismatches``). With args:
+only the named ops (the fast inner loop while authoring). Exits 1 on
+any MISMATCH. This is the /verify skill's recipe.
 """
 import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import __spark_entry__ as E
 from pyspark.sql import SparkSession
 
-SF01 = "/root/testdata/sf0.01"
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.oracle_types import (
+    class_mismatches,
+)
+
+SF01 = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -42,7 +47,6 @@ rows = res.collect()
 print(f"entry(): {len(rows)} rows, schema={[f.name for f in res.schema.fields]}")
 # the flagship filter_group_avg_topk query is non-empty at sf0.001 —
 # a zero-row entry() means the pipeline broke, not that data is thin
-# (ADVICE r15 item 4: `>= 0` was vacuously true)
 assert len(rows) > 0
 
 con = duckdb.connect()
@@ -86,9 +90,16 @@ for name, fn in queries.items():
     try:
         o = con.execute(sql)
         o_cols = [d[0] for d in o.description]
+        type_errs = class_mismatches(o.description, sdf.schema)
         o_rows = o.fetchall()
     except Exception as ex:
         print(f"{name}: ORACLE ERROR {type(ex).__name__}: {ex}")
+        n_fail += 1
+        continue
+    if type_errs:
+        # fetchall() turns HUGEINT into a Python int; a pandas/Arrow
+        # fetch gives float64/decimal, so the class must match too
+        print(f"{name}: TYPE MISMATCH {type_errs}")
         n_fail += 1
         continue
     if sorted(s_cols) != sorted(o_cols):

@@ -4,7 +4,7 @@ arbitrary row counts.
 The ETL (`pipeline.clean_health_dataset`) is pinned for CORRECTNESS
 against the real 10k-row reference dataset (tests/test_pipeline_
 reference.py), but that file is fixed-size: benching the 24-column
-expression chain at sf0.1-equivalent volume (VERDICT r8 item 7) needs a
+expression chain at sf0.1-equivalent volume needs a
 ~600k-row input with the same dirt. This generator scales the
 documented recipe — corrupt country/disease names, apostrophe-prefixed
 numerics, NA tokens, high-NULL-rate columns, zero denominators,
@@ -189,8 +189,8 @@ _RECIPE_VERSION = 2
 
 
 #: cache lives UNDER THE REPO (gitignored), not in the shared
-#: world-writable /tmp (ADVICE r9: a foreign or tampered /tmp file with
-#: the right name would silently feed the benchmark). Row-count
+#: world-writable /tmp, where a foreign file with the right name would
+#: silently feed the benchmark. Row-count
 #: validation below guards the remaining failure mode (a cache file
 #: truncated by something other than our own tmp+rename writes).
 _DEFAULT_CACHE_DIR = os.path.join(

@@ -1,28 +1,18 @@
-"""One-off scaling-exponent probe (VERDICT r16 item 2).
+"""Scaling-exponent probe: a measured t(10x)/t(1x) ratio per expensive
+op, next to the plan-shape pins and the 600k-row measurements.
 
-Every 100 TB claim in the repo is a plan-shape argument pinned by
-tests plus a 600k-row measurement; this probe adds the missing
-evidence class: a measured t(10x)/t(1x) ratio per expensive op.
+It builds a scratch 10x corpus (~6M lineitem rows) under /tmp, never
+touching the source tables, then times the ops at both scales with
+bench.py's method (a warm-up lap, then min-of-N fresh-plan laps). A
+linear op lands near 10x (below when a fixed cost amortizes, a little
+above when a sort or a spill bites); well above ~12x is a
+superlinearity to investigate.
 
-It builds a scratch 10x corpus (~6M lineitem rows — one decade above
-sf0.1) in /tmp — NEVER touching the read-only /root/testdata — then
-times the top-expensive registry ops at both scales with bench.py's
-methodology (per-op warm-up lap, then min-of-N fresh-plan laps) and
-reports the ratio. A linear-scaling op lands near 10x (sub-10x when a
-fixed cost — quantizer fit, store init, planning — amortizes;
-mildly above when an n log n sort or a spill boundary bites);
-anything well above ~12x is a superlinearity to investigate.
-
-Corpus model ("10x more data", not "10x hotter keys"): each source
-table is replicated 10x with copy-local key offsets and a per-copy
-token/vector perturbation, so WITHIN-copy structure (dup-cluster
-sizes, shingle hotness, session shapes, value distributions) matches
-sf0.1 exactly while ACROSS copies nothing collides — dup clusters,
-sessions, and LSH buckets grow in NUMBER with corpus size, not in
-size, which is how a real corpus scales (hot-key growth is the skew
-ladder's concern, measured separately by the salted ops). Dimension
-tables stay fixed (a 10x fact scan fans onto the same dims — the
-production shape).
+Corpus model ("10x more data", not "10x hotter keys"): each fact table
+is replicated 10x with copy-local key offsets and a per-copy
+token/vector perturbation, so dup clusters, sessions and LSH buckets
+grow in NUMBER, not in size, as in a real corpus (hot-key growth is
+the salted ops' concern). Dimension tables stay fixed.
 
 Usage (idle box; ~45 min):
 
@@ -47,7 +37,7 @@ SRC = "/root/testdata/sf0.1"
 DST = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_sf1")
 FACTOR = 10
 
-#: the top of BENCH_LOCAL.json's cost ranking (r16 artifact) — every
+#: the top of BENCH_LOCAL_c8.json's cost ranking — every
 #: op over ~2 s — plus the ETL entry, handled specially below.
 DEFAULT_OPS = [
     "streaming_neardup_store_maintenance",

@@ -71,9 +71,7 @@ def duck():
     con.close()
 
 
-# ONE canon protocol repo-wide: reuse test_oracle_parity's (r16 review
-# caught this file carrying a verbatim fork of it — the drifting-copy
-# class the shared assert_matches_oracle helper exists to prevent)
+# ONE canon protocol repo-wide: test_oracle_parity's
 from test_oracle_parity import canon as _canon  # noqa: E402
 
 
@@ -96,8 +94,8 @@ def test_no_hugeint_oracle_outputs(spark, duck):
 
 
 def test_dst_zone_epoch_contract(spark, tmp_path):
-    """Pin epoch_us_utc's behavior under a DST session zone (ADVICE r6:
-    the NTZ→TIMESTAMP cast resolves the offset at local wall time,
+    """Pin epoch_us_utc's behavior under a DST session zone (the
+    NTZ→TIMESTAMP cast resolves the offset at local wall time,
     from_utc_timestamp at the instant — so DST zones COULD diverge).
 
     Empirical contract, asserted here with synthetic events placed
@@ -189,69 +187,3 @@ def test_hostile_session_parity(spark, duck):
     finally:
         spark.conf.set("spark.sql.session.timeZone", saved_tz)
         spark.conf.set("spark.sql.ansi.enabled", saved_ansi)
-
-
-def test_bench_pick_reference_walks_past_same_round_and_bad_blobs(tmp_path):
-    """The bench artifact's cross-round reference selection (r15,
-    ADVICE r14): from a history of [malformed blob, same-round
-    artifact, older-round artifact], pick_reference must skip the
-    unreadable commit, skip the current round's own artifact (the
-    final-HEAD commit that made a plain HEAD read self-compare), and
-    land on the older round's — and return (None, None) when only the
-    current round's artifacts exist."""
-    import json
-    import subprocess
-
-    from bench import pick_reference
-
-    import os
-
-    # inherit the caller's env (git may live anywhere) but pin identity
-    # and neutralize host gitconfig (gpgsign/hooksPath would break the
-    # scratch commits)
-    env = dict(
-        os.environ,
-        GIT_AUTHOR_NAME="t",
-        GIT_AUTHOR_EMAIL="t@t",
-        GIT_COMMITTER_NAME="t",
-        GIT_COMMITTER_EMAIL="t@t",
-        GIT_CONFIG_GLOBAL="/dev/null",
-        GIT_CONFIG_SYSTEM="/dev/null",
-    )
-
-    def git(repo, *args):
-        subprocess.run(
-            ["git", *args], cwd=repo, check=True, capture_output=True, env=env
-        )
-
-    def commit(repo, content: str):
-        (tmp_path / repo / "BENCH_LOCAL.json").write_text(content)
-        git(tmp_path / repo, "add", "BENCH_LOCAL.json")
-        git(tmp_path / repo, "commit", "-qm", "x")
-
-    repo = str(tmp_path / "scratch")
-    (tmp_path / "scratch").mkdir()
-    git(repo, "init", "-q")
-
-    commit("scratch", json.dumps({"producing_round": 14, "sentinel_mid": 0.4,
-                                  "queries": {"q": 1.0}}))
-    commit("scratch", json.dumps({"producing_round": 15, "sentinel_mid": 0.5,
-                                  "queries": {"q": 1.1}}))
-    commit("scratch", '{"truncated": ')  # the BENCH_r05-style clipped blob
-
-    ref, commit_hash = pick_reference(repo, 15)
-    assert ref is not None and commit_hash
-    assert ref["producing_round"] == 14 and ref["sentinel_mid"] == 0.4
-
-    # legacy artifacts without the field qualify as other-round
-    commit("scratch", json.dumps({"sentinel_mid": 0.3, "queries": {"q": 0.9}}))
-    ref2, _ = pick_reference(repo, 15)
-    assert ref2["sentinel_mid"] == 0.3 and "producing_round" not in ref2
-
-    # only same-round artifacts → no reference, not a crash
-    repo2 = str(tmp_path / "scratch2")
-    (tmp_path / "scratch2").mkdir()
-    git(repo2, "init", "-q")
-    commit("scratch2", json.dumps({"producing_round": 15, "sentinel_mid": 0.5,
-                                   "queries": {"q": 1.0}}))
-    assert pick_reference(repo2, 15) == (None, None)

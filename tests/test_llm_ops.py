@@ -67,12 +67,10 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
 def test_pq_topk_recall_and_structure_vs_bruteforce(spark):
     """PQ-ADC with exact re-rank must recover a healthy fraction of the
     exact top-k — FLOOR-BOUNDED at 0.75 (measured 0.82 on this
-    near-isotropic corpus at the certified 20×TOP_K shortlist;
-    VERDICT r13: the oracle certifies the ADC math, not the recall
-    level, so without this floor a geometry 'optimization' could
-    silently gut answer quality) — be deterministic from a COLD fit
-    cache (the repeat run must re-fit the per-subspace codebooks, not
-    trivially reuse memoized ones; ADVICE r13), and obey the refine
+    near-isotropic corpus at the certified 20×TOP_K shortlist; the
+    oracle certifies the ADC math, not the recall level), be
+    deterministic from a COLD fit cache (the repeat run re-fits the
+    codebooks), and obey the refine
     contract: every reported cosine must EQUAL the brute-force cosine
     for that (query, neighbor) pair (the re-rank is exact; only the
     shortlist membership is approximate)."""
@@ -372,7 +370,7 @@ def test_semantic_dedup_reps_are_cluster_argmin(spark):
 
 
 def test_hot_shingle_cap_suppresses_stop_phrase_candidates(spark):
-    """VERDICT r6 item 2: a stop-phrase shingle shared by more docs than
+    """A stop-phrase shingle shared by more docs than
     SHINGLE_DF_CAP must be dropped from the inverted index — above the
     cap it would generate k² candidate pairs while discriminating
     nothing. Genuine near-dups sharing sub-cap shingles must survive."""
@@ -773,7 +771,7 @@ def test_self_repetition_shingles_lockstep_with_dedup_index(spark):
 
 
 def test_split_leakage_ngram_flags_planted_cross_split_overlap(spark):
-    """VERDICT r9 item 4: the text-level cross-split audit must flag a
+    """The text-level cross-split audit must flag a
     test doc that shares a word-3-gram with a train doc, leave clean /
     shingle-less test docs unflagged, and ignore a hot shingle shared
     by more docs than the DF cap (it discriminates nothing)."""
@@ -1513,8 +1511,7 @@ def test_banded_maint_tail_matches_oracle_property(spark):
 
 
 def test_y4m_header_fuzz():
-    """Hypothesis patrol over _y4m_header (r12, VERDICT r11 item 7 —
-    the dispatch's newest magic was its least-fuzzed): for arbitrary
+    """Hypothesis patrol over _y4m_header: for arbitrary
     junk bytes AND adversarial header-shaped inputs, the parser either
     returns a well-formed (w, h, frame_bytes, data_start) with positive
     dimensions, or raises ValueError (the class the dispatch's opaque
@@ -1631,8 +1628,7 @@ def test_container_parser_fuzz_ppm_bmp_wav():
         + struct.pack("<H", bits)
         + struct.pack("<4sI", data_id, dlen)
         + tail,
-        # r13 WAV deep-patrol (VERDICT r12 item 6 — WAV was the least-
-        # fuzzed container): junk fmt ids, WAVE_FORMAT_EX-style fmt
+        # junk fmt ids, WAVE_FORMAT_EX-style fmt
         # lengths, non-PCM codecs, stereo, wrong bit depths, junk data
         # ids, odd data lengths, and truncation at every boundary via
         # the free tail length
@@ -1882,7 +1878,7 @@ def test_perplexity_tercile_split_properties(spark):
 
 
 def test_bpe_oracles_survive_merge_exhaustion(spark, tmp_path):
-    """r15 review regression: on a corpus whose pair counts exhaust
+    """On a corpus whose pair counts exhaust
     before {_BPE_MERGES} rounds (here: one two-char word — after 'ab'
     merges, every word is a single symbol and no pair remains), the
     Spark loop breaks early and the remaining rounds are identity. The
@@ -1973,7 +1969,7 @@ def test_bpe_merge_fold_is_canonical_and_cross_engine_identical(spark):
 
 
 def test_bpe_roundtrip_invariant_oracle_side():
-    """VERDICT r15 item 5: the encode path's per-row partition
+    """The encode path's per-row partition
     invariant — after ALL merges, concatenating a word's symbols
     reproduces the word exactly (merges regroup characters, never
     rewrite them) — asserted on the ORACLE side too. The Spark side is

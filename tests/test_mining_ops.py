@@ -229,7 +229,7 @@ def test_jsd_pairs_in_unit_range_and_symmetric_keys(spark):
 
 
 def test_theil_sen_median_rank_selection_even_and_odd(spark):
-    """The r6 integer-division fix (ADVICE r5): for EVEN pair counts the
+    """For EVEN pair counts the
     sen slope must be the MEAN of the two middle order statistics, not
     the upper one alone. Replays the op's rank-selection expression on
     synthetic slope sets where the answer is known in closed form."""

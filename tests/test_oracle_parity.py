@@ -100,11 +100,9 @@ def test_rows_only_queries_run(spark):
 #: factor — sf_dir is a real parameter (the /verify gotcha list: "run a
 #: query at sf0.001 too"), and a second SF catches anything the sf0.01
 #: hash can mask (e.g. a LIMIT whose tiebreak only bites when the
-#: result overflows it, or a filter that happens to be empty-vs-empty).
-#: r16 seeded this with the eight new TPC-H ops; VERDICT r16 item 5
-#: makes it the suite-wide invariant: ALL 22 TPC-H shapes (every one
-#: carries adapted, data-calibrated predicates) plus the
-#: threshold-calibrated LLM-pipeline ops.
+#: result overflows it, or a filter that happens to be empty-vs-empty):
+#: all 22 TPC-H shapes (each carries adapted, data-calibrated
+#: predicates) plus the threshold-calibrated LLM-pipeline op.
 CROSS_SF_QUERIES = [
     "minhash_jaccard_calibration",
     *[f"tpch_q{i}" for i in range(1, 23)],

@@ -75,8 +75,7 @@ def test_health_raw_generator_is_deterministic_and_dirty(tmp_path):
 
 
 def test_nan_median_means_no_fill(spark):
-    """ADVICE r9: pin the NaN-median edge case as an INTENTIONAL
-    behavior change. A NaN-majority column's exact median is NaN; the
+    """A NaN-majority column's exact median is NaN; the
     engine wrapper maps it to None = "no fill", so nulls stay null
     (matching pandas, where fillna(NaN) is a no-op) instead of being
     overwritten with NaN as the old builtin F.median path did."""
@@ -99,7 +98,7 @@ def test_nan_median_means_no_fill(spark):
 
 
 def test_env_probe_rebrands_only_anchored_missing_module_failures():
-    """ADVICE r10 + r11 review: the executor-env probe must rebrand a
+    """The executor-env probe must rebrand a
     failure into install instructions ONLY when the exception text
     carries the probe's own 'executor-env-probe:' sentinel naming one
     of the three probed modules — an error that merely echoes the word

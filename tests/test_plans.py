@@ -971,12 +971,9 @@ def test_ivf_pq_topk_plan_is_cell_pruned_hash_join_only(spark):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     # ≥1 broadcast hash join KEYED ON THE COARSE CELL (the pruning
-    # key, not vec_id) — the load-bearing property. ADVICE r14: the
-    # original exact-count pin (== 3: ADC + the refine's two
-    # point-lookups) was brittle against harmless plan-text drift
-    # across Spark/AQE versions; the negatives above plus the cell key
-    # catch every real regression (a BNLJ/cartesian/shuffle sneak-in,
-    # or the ADC scan losing its membership bound).
+    # key, not vec_id). No exact join count: with the negatives above,
+    # the cell key catches every real regression without pinning
+    # plan-text details that drift across Spark/AQE versions.
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) >= 1
     assert re.search(r"Left keys \[1\]: \[cell#\d+\]", plan), plan
 
@@ -1046,14 +1043,13 @@ def test_ivf_pq_residual_plan_matches_composed_serve_shape(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    # ≥1 cell-keyed broadcast hash join (ADVICE r14: exact-count pin
-    # loosened — see the composed-op test above for the rationale)
+    # ≥1 cell-keyed broadcast hash join (see the composed-op test)
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) >= 1
     assert re.search(r"Left keys \[1\]: \[cell#\d+\]", plan), plan
 
 
 def test_bpe_train_round_plan_is_single_shuffle_over_cached_vocab(spark):
-    """r15 BPE-trainer plan pin (VERDICT r14 item 3): each training
+    """BPE-trainer plan pin: each training
     round's pair-count statistic must be (a) ONE partial-aggregated
     count shuffle — the map-side combine is what keeps shuffle volume
     at |distinct pairs|, not |vocab| — and (b) computed over the CACHED
@@ -1206,8 +1202,6 @@ def test_perplexity_tercile_plan_thresholds_broadcast_no_doc_sort(spark):
     # …so pin the pre-checkpoint stage through the op's own factored
     # helper: scoring + the doc_id join-back of (source, n_chars) —
     # no cartesian, and every scan pruned to the consumed columns
-    # (r15 review: the first pin only covered the bare scoring helper,
-    # leaving the join-back stage unasserted)
     stage = T._tercile_xe(spark, SF_SMOKE)
     assert "CartesianProduct" not in join_strategies(stage)
     for cols in read_schemas(stage):
@@ -1348,3 +1342,30 @@ def test_minhash_calibration_reuses_banded_machinery(spark):
     assert "BroadcastNestedLoopJoin" not in js
     assert "BroadcastHashJoin" in js  # the hot-bucket cap join
     assert any("avg" in f or "count" in f for f in partial_agg_functions(df))
+
+
+def test_incremental_agg_update_merges_two_partial_aggs(spark):
+    # base and delta roll up separately (each partial-aggregated) and
+    # merge in a second aggregation over their union; no shuffled join
+    import re
+
+    df = q("incremental_agg_update", spark)
+    plan = formatted_plan(df)
+    assert re.search(r"^\(\d+\) Union", plan, flags=re.MULTILINE), plan
+    assert not {"SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"} & set(
+        join_strategies(df)
+    )
+    assert partial_agg_functions(df)
+
+
+def test_tpch_q8_broadcasts_every_dim_in_one_agg_pass(spark):
+    # eight tables (nation twice under two roles): every dimension
+    # broadcast; market share is one conditional-sum aggregate, so the
+    # only exchanges are the aggregate's and the presentation sort's
+    import re
+
+    df = q("tpch_q8", spark)
+    plan = formatted_plan(df)
+    assert set(join_strategies(df)) == {"BroadcastHashJoin"}, join_strategies(df)
+    assert len(re.findall(r"^\(\d+\) BroadcastHashJoin", plan, flags=re.MULTILINE)) == 7
+    assert count_exchanges(df) == 2, plan

@@ -443,11 +443,10 @@ def test_rank_math_column_forms_match_python_forms(cases):
 
 
 # --------------------------------------------------------------------------
-# r10: the hybrid transport (JVM explode ≤ JVM_TRANSPORT_MAX_COLS
-# columns, Arrow above). The registry consumers and the suites above
-# all use ≤4 columns and therefore exercise only the JVM branch (r10
-# review find) — these tests force BOTH branches and pin bit-equality
-# between them, including the -0.0 aggregation-key normalization.
+# The hybrid transport (JVM explode ≤ JVM_TRANSPORT_MAX_COLS columns,
+# Arrow above). The suites above use ≤4 columns (JVM branch only);
+# these tests force BOTH branches and pin bit-equality between them,
+# including the -0.0 aggregation-key normalization.
 
 
 def _both_transports(df, col_probs):
@@ -535,7 +534,7 @@ def test_transports_bit_identical_property(values, probs):
 
 
 def test_natural_dispatch_boundary_eight_vs_nine_columns(spark):
-    """VERDICT r10 item 5: the 8-vs-9-column boundary exercised through
+    """The 8-vs-9-column boundary exercised through
     the REAL dispatch (no monkeypatching) — an 8-column call rides the
     JVM explode, adding one more column tips the SAME request onto the
     Arrow transport, and the eight shared columns' results must not

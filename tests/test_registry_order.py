@@ -1,203 +1,117 @@
-"""Registry-order pins.
-
-The driver's per-round correctness run checks a bounded PREFIX of the
-registry (50 entries), and `__spark_entry__.queries()` emits registry
-insertion order verbatim — so ordering is part of the external
-verification contract, not cosmetics. These tests pin the round-17
-window under the formalized policy (VERDICT r6 item 3): every op whose
-impl/oracle text changed gets a slot, then oldest-driver-certification
-first.
-
-Rotation history (which green residents fund which new slots) lives in
-the comment block of ``operators/__init__.py:_RECHECK_FIRST``.
-"""
+"""The order ``__spark_entry__.queries()`` lists the ops in: an external
+correctness run checks only a prefix of it, so ops changed since their
+last certification lead, then the oldest certified
+(``certification.correctness_order``)."""
 
 from __future__ import annotations
 
-import health_etl_pipeline_and_analytics_with_machine_learning_spark.operators as ops
+import glob
+import json
+import os
+import shutil
+
+import pytest
+
+import __spark_entry__ as E
+from health_etl_pipeline_and_analytics_with_machine_learning_spark import (
+    certification as C,
+)
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
     REGISTRY,
 )
 
-WINDOW = 50
 
-#: staleness tier — the eight r12-cohort residents that slipped the
-#: r16 window (staleness 5 entering r17, the oldest driver rows
-#: anywhere), alphabetical.
-ROUND17_STALE_IDS = [
-    "streaming_view_purchase_join",
-    "text_lang_id",
-    "text_quality_score",
-    "text_simhash",
-    "text_token_count",
-    "video_frame_sample",
-    "vocab_oov_rate",
-    "window_moving_avg",
-]
-
-#: changed-text tier — fresh driver rows REQUIRED (policy a). r17's
-#: change is the lineage-cut factoring (VERDICT r16 item 4): every op
-#: whose body or transitive helper CODE now routes through
-#: functions.lineage.lineage_cut recertifies (plans bit-identical;
-#: the r15/r16 byte-identical-recert standard), plus tpch_q7 whose
-#: nation pair was RECALIBRATED (executable + oracle change) after
-#: the suite-wide cross-SF certification caught it empty-vs-empty at
-#: sf0.001. Docstring-only edits (the %%-fix ops) consume no slots
-#: per the r17 policy refinement in operators/__init__.py.
-ROUND17_CHANGED_IDS = [
-    "dedup_minhash_lsh",
-    "minhash_jaccard_calibration",
-    "simhash_near_pairs",
-    "image_phash_neardup",
-    "audio_fingerprint_neardup",
-    "dedup_connected_components",
-    "dedup_incremental",
-    "streaming_neardup_probe",
-    "streaming_neardup_store_maintenance",
-    "streaming_neardup_store_compaction",
-    "similarity_lsh_bucketed",
-    "tpch_q7",
-    "tpch_q11",
-    "tpch_q15",
-    "interval_concurrency_peak",
-    "assoc_rules_lift",
-    "brand_copurchase_triangles",
-    "pagerank_nation_trade",
-    "kmv_join_cardinality",
-    "streaming_countmin_replay",
-    "median_fill_scaled",
-    "iqr_clip_scaled",
-    "group_quantiles_scaled",
-    # r17 OPTIMIZATION-round additions (policy a): the exact-quantile
-    # engine's Arrow transport moved to mapInArrow (bit-identical
-    # bucket math) — its three direct relational consumers recertify;
-    # the similarity family's plan-build moved to one-parse SQL
-    # expressions with a dense O(1) ADC code→centroid lookup — every
-    # op reaching those helpers recertifies (dedup_semantic_cluster
-    # reaches them too, so it moved UP from the cohort tier).
-    "median_fill",
-    "iqr_clip",
-    "quantile_profile",
-    "similarity_ivf_topk",
-    "similarity_pq_topk",
-    "similarity_ivf_pq_topk",
-    "similarity_ivf_pq_residual_topk",
-    "dedup_semantic_cluster",
-]
-
-#: oldest-first refresh: 11 of the 37 not-already-changed r13-cohort
-#: residents (staleness 4 entering r17), alphabetical; the tail
-#: (dedup_exact_text .. zscore_normalize, 25 ids) slips to lead the
-#: r18 window per the pinned plan — the r17 optimization tier's eight
-#: slots displaced eight of the nineteen originally planned.
-ROUND17_R13_COHORT_IDS = [
-    "benford_law_check",
-    "bigram_cross_entropy",
-    "bigram_cross_entropy_hashed",
-    "bpe_pair_counts",
-    "c4_heuristic_filter",
-    "cdc_latest_compaction",
-    "contamination_ngram_check",
-    "corpus_curation",
-    "countmin_estimate",
-    "cusum_changepoint",
-    "dedup_common_spans",
-]
+def _fp(name: str, root: str = C.ROOT) -> str:
+    rq = REGISTRY[name]
+    return C.fingerprint(root, rq.fn.__module__, rq.fn.__name__, rq.oracle)
 
 
-def test_r17_window_is_exactly_the_planned_fifty():
-    prefix = list(REGISTRY)[:WINDOW]
-    planned = ROUND17_STALE_IDS + ROUND17_CHANGED_IDS + ROUND17_R13_COHORT_IDS
-    assert len(planned) == WINDOW
-    assert prefix == planned, [
-        (i, a, b) for i, (a, b) in enumerate(zip(prefix, planned)) if a != b
-    ]
+def _by_age(names) -> list[str]:
+    rounds = C.certified_rounds()
+    return sorted(names, key=lambda n: (rounds.get(n, 0), n))
 
 
-def test_recheck_list_fits_the_window():
-    """ADVICE r7 item 5: the r7 list held 54 ids against a 50-slot
-    window, silently starving the last four — the list must never
-    exceed the window again."""
-    assert len(ops._RECHECK_FIRST) <= WINDOW
-
-
-def test_no_registry_entry_left_unchecked_after_r17():
-    """Every registry id either has a driver row from r1–r16 or sits in
-    the r17 window — no op can reach the judge without certification."""
-    import glob
-    import json
-    import os
-
-    seen = set()
-    for f in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json"))):
-        seen |= set(json.load(open(f)))
-    prefix = set(list(REGISTRY)[:WINDOW])
-    never = [n for n in REGISTRY if n not in seen and n not in prefix]
-    assert not never, f"ids with no driver row and no r17 slot: {never}"
-
-
-def test_r17_window_covers_every_pre_r13_certification():
-    """The oldest-first policy invariant: after r17 lands green, no
-    op's latest driver certification is older than round 13, and
-    exactly TWENTY-FIVE r13 rows remain outside the window — the
-    alphabetical cohort tail displaced by the 31-op changed tier
-    (lineage-cut recerts + the q7 recalibration + the r17
-    optimization tier); they lead the r18 window per the pinned plan
-    (the same bounded-staleness eviction as the r12 tail in r16)."""
-    import glob
-    import json
-    import os
-
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(f)[len("CORRECTNESS_r") : -len(".json")].lstrip("0") or "0")
-        for op_name in json.load(open(f)):
-            latest[op_name] = max(latest.get(op_name, 0), rnd)
-    prefix = set(list(REGISTRY)[:WINDOW])
-    pre_r13 = [n for n in REGISTRY if latest.get(n, 0) <= 12 and n not in prefix]
-    assert not pre_r13, f"pre-r13 certifications left outside the r17 window: {pre_r13}"
-    r13_left = sorted(n for n in REGISTRY if latest.get(n, 0) == 13 and n not in prefix)
-    assert r13_left == [
-        "dedup_exact_text",
-        "dedup_ngram_jaccard",
-        "doc_self_repetition",
-        "ewma_smoothing",
-        "heavy_hitters_twopass",
-        "incremental_agg_update",
-        "inverted_index_topk",
-        "kmv_distinct_sketch",
-        "largest_remainder_alloc",
-        "mann_kendall_trend",
-        "multimodal_decode_dispatch",
-        "multimodal_wav_decode",
-        "sequence_pack_scaled",
-        "sequence_pack_stats",
-        "split_leakage_ngram",
-        "streaming_hour_rollup",
-        "text_repetition_flags",
-        "trend_group_avg_sort",
-        "truncation_loss_curve",
-        "two_level_agg",
-        "user_event_paths",
-        "value_counts_topk",
-        "window_group_median_fill",
-        "window_lag_value_delta",
-        "zscore_normalize",
-    ], f"unplanned r13 evictions: {r13_left}"
-
-
-def test_recheck_ids_lead_the_registry():
-    names = list(REGISTRY)
-    for i, n in enumerate(ops._RECHECK_FIRST):
-        assert names[i] == n, (n, names[:5])
+@pytest.fixture
+def write_ledger(tmp_path, monkeypatch):
+    """Point the order at a ledger under ``tmp_path``."""
+    path = tmp_path / "CERTIFIED.json"
+    monkeypatch.setattr(C, "LEDGER", str(path))
+    return lambda ledger: path.write_text(json.dumps(ledger))
 
 
 def test_every_registered_query_has_fn_and_consistent_oracle_keys():
-    import __spark_entry__ as e
-
-    q = e.queries()
-    o = e.oracle_sql()
-    assert list(q) == list(REGISTRY)
+    # every op exactly once; the oracle keys are a subset
+    order = C.correctness_order()
+    assert len(order) == len(set(order)) == len(REGISTRY)
+    q, o = E.queries(), E.oracle_sql()
+    assert list(q) == order and set(q) == set(REGISTRY)
     assert set(o) <= set(q)
     for name, sql in o.items():
         assert sql and sql.strip(), name
+
+
+def test_unchanged_ops_run_oldest_certified_first(write_ledger):
+    write_ledger({n: _fp(n) for n in REGISTRY})
+    assert C.correctness_order() == _by_age(REGISTRY)
+
+
+def test_changed_ops_lead_the_order(write_ledger):
+    ledger = {n: _fp(n) for n in REGISTRY}
+    changed = ["zscore_normalize", "tpch_q1"]
+    ledger["zscore_normalize"] = "0" * 40
+    del ledger["tpch_q1"]  # never certified counts as changed
+    write_ledger(ledger)
+    order = C.correctness_order()
+    assert order[:2] == _by_age(changed)
+    assert order[2:] == _by_age(set(REGISTRY) - set(changed))
+
+
+def test_failed_and_errored_rows_do_not_certify(monkeypatch):
+    early = os.path.join(C.ROOT, "CORRECTNESS_r0[1-5].json")
+    rows = [
+        (int(f[-7:-5]), op, row)
+        for f in glob.glob(early)
+        for op, row in json.load(open(f)).items()
+    ]
+    failed = [(r, op) for r, op, row in rows if row["hash_match"] is not True or row["err"]]
+    assert sum(1 for *_, row in rows if row["err"]) == 16
+    assert sum(1 for *_, row in rows if row["hash_match"] is False) == 4
+
+    monkeypatch.setattr(C, "RUNS", early)
+    rounds = C.certified_rounds()
+    assert all(rounds.get(op) != r for r, op in failed)
+    monkeypatch.setattr(C, "RUNS", os.path.join(C.ROOT, "CORRECTNESS_r0[23].json"))
+    rounds = C.certified_rounds()
+    assert "similarity_ivf_topk" not in rounds  # errored in both
+    assert rounds["eq_filter_group_agg"] == 2  # errored in r03
+
+
+def test_fingerprint_ignores_comments_and_docstrings_but_not_helper_code(tmp_path):
+    op = "salted_skew_agg"  # reaches registry.load
+    shutil.copytree(
+        os.path.join(C.ROOT, C.PKG), tmp_path / C.PKG,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    reg = tmp_path / C.PKG / "operators" / "registry.py"
+    src = reg.read_text()
+    before = _fp(op, str(tmp_path))
+    assert before == _fp(op)
+
+    ret = '    return events_ts(df) if table == "events" else df\n'
+    doc = "Read one of the driver's parquet tables"
+    assert ret in src and doc in src
+    for edit in (src.replace(ret, "    # a comment\n" + ret), src.replace(doc, "Read a table")):
+        reg.write_text(edit)
+        assert _fp(op, str(tmp_path)) == before
+
+    reg.write_text(src.replace(ret, ret.replace('== "events"', 'in ("events",)')))
+    assert _fp(op, str(tmp_path)) != before
+
+
+def test_every_op_has_a_certifying_row_or_leads_the_order():
+    rounds = C.certified_rounds()
+    with open(C.LEDGER) as f:
+        ledger = json.load(f)
+    changed = {n for n in REGISTRY if _fp(n) != ledger.get(n)}
+    assert {n for n in REGISTRY if n not in rounds} <= changed
+    assert set(C.correctness_order()[: len(changed)]) == changed

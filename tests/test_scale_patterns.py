@@ -355,8 +355,8 @@ def test_spread_self_disables_on_already_parallel_input(spark):
 def test_spread_probes_file_count_without_rdd_conversion(spark, tmp_path):
     """On scan-rooted input the split probe is inputFiles() — a multi-
     file source self-disables, the single-file driver layout widens
-    (ADVICE r6: the rdd.getNumPartitions probe forced a full physical
-    planning pass inside every benched query build)."""
+    (``rdd.getNumPartitions`` would force a physical planning pass
+    inside every query build)."""
     from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
         spread,
     )

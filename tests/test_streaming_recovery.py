@@ -262,7 +262,7 @@ def test_store_compaction_is_answer_preserving(spark, tmp_path):
 
 
 def test_maintenance_replay_survives_an_empty_micro_batch(spark, tmp_path):
-    """VERDICT r12 item 7: a micro-batch with ZERO accepted docs must
+    """A micro-batch with ZERO accepted docs must
     flow through the STREAMING maintenance path end-to-end (the
     min_src-None guard in _probe_and_grow was previously exercised only
     at the unit layer) — an empty chunk file spliced into the replay
@@ -403,10 +403,9 @@ def test_compaction_swap_is_crash_safe_at_every_point(spark, tmp_path):
 
 
 def test_store_lifecycle_interleaving_patrol(spark):
-    """Hypothesis patrol over the seam the compaction op opened in the
-    store lifecycle (VERDICT r13 item 5): the crash-point test above
-    walks SEQUENTIAL crash points of one compaction, but nothing
-    exercised compactions/crashes INTERLEAVED with appends. Drive the
+    """Hypothesis patrol over compactions and crashes INTERLEAVED with
+    store appends (the crash-point test above walks sequential crash
+    points of one compaction). Drive the
     maintenance loop batch-by-batch (three contiguous multi-source
     batches over the ten ingest sources — the certified batch shape)
     with a Hypothesis-chosen lifecycle action in every gap:

@@ -11,6 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.functions import artifacts
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
     REGISTRY,
     load,
@@ -64,12 +65,19 @@ def test_chunker_dirs_are_registered_and_reaped(spark, tmp_path, monkeypatch):
         read_events_stream,
     )
 
+    # repeated reads share one watch dir; a reaped one refills
+    artifacts.evict("events_stream", SF_SMOKE)
+    read_events_stream(spark, SF_SMOKE)
     read_events_stream(spark, SF_SMOKE)
     (watch,) = [d for d in replay._TMP_DIRS if "events_stream_" in d]
 
     replay._reap_tmp_dirs()
     assert not os.path.exists(chunks.path) and not os.path.exists(watch)
     assert replay._TMP_DIRS == []
+    read_events_stream(spark, SF_SMOKE)
+    (refilled,) = replay._TMP_DIRS
+    assert refilled != watch and os.listdir(refilled) == ["events_0.parquet"]
+    replay._reap_tmp_dirs()
 
 
 def _sf_copy(tmp_path, table: str) -> str:

@@ -1,4 +1,4 @@
-"""Dialect-parity pins for the shared text helpers hoisted in r9
+"""Dialect-parity pins for the shared text helpers
 (text.ascii_token_count / ASCII_TOKEN_COUNT_SQL, text.word3_shingles /
 word3_shingles_sql, text._bigram_pairs / _BIGRAM_PAIRS_SQL).
 
@@ -8,15 +8,8 @@ cases the corpus may never contain — empty text, whitespace-only text,
 exotic whitespace runs, 1/2/3-token boundaries, repeated shingles —
 and assert the Spark expression and the DuckDB twin agree exactly.
 Same patrol shape as the rank_math lockstep test: one definition, two
-executions, one test.
-
-History: until r13 the repo carried TWO whitespace pairs — a legacy
-``\\s``-based one (Java's \\s contains \\x0B, RE2's does not — a
-known, corpus-guarded cross-dialect divergence) and the explicit
-ASCII-class one. The two-tranche burn-down (r12 + r13) migrated every
-consumer onto the explicit class and deleted the legacy pair; the
-divergence pin that documented the \\x0B gap was deleted with it, and
-the agreement pins below are what remain."""
+executions, one test. Every whitespace tokenization uses the
+explicit ASCII class, so these agreement pins cover them all."""
 
 from __future__ import annotations
 
@@ -185,7 +178,7 @@ def test_alpha_tokenize_dialects_agree_on_edges(spark, ducked):
 
 
 # --------------------------------------------------------------------------
-# r10 edge audit (VERDICT r9 item 7): exotic-whitespace dialect probes.
+# Exotic-whitespace dialect probes.
 # Java (Spark) \s is the ASCII set [ \t\n\x0B\f\r]; RE2 (DuckDB) \s is
 # [ \t\n\f\r] — NO \x0B; Python re \s adds \x1C-\x1F and all Unicode
 # spaces. Three regimes, probed explicitly below.
