@@ -29,10 +29,10 @@ def test_stream_matches_batch(spark):
     assert len(s_rows) > 0
 
 
-def test_streaming_csv_ingest_matches_batch_rowwise(spark, tmp_path):
-    """Streaming the dirty reference CSV through the stateless cleaning
-    phase must produce exactly the batch stage_rowwise output."""
-    import os
+def test_streaming_csv_ingest_matches_batch_rowwise(spark, tmp_path, raw_health_csv):
+    """Streaming the dirty raw CSV (the reference dataset or the
+    FIXTURES.md §1 file) through the stateless cleaning phase must
+    produce exactly the batch stage_rowwise output."""
     import shutil
 
     from health_etl_pipeline_and_analytics_with_machine_learning_spark.pipeline import (
@@ -45,15 +45,9 @@ def test_streaming_csv_ingest_matches_batch_rowwise(spark, tmp_path):
         csv_ingest_stream,
     )
 
-    src = "/root/reference/Global Health Dataset.csv"
-    if not os.path.exists(src):
-        import pytest
-
-        pytest.skip("reference dataset not present")
-
     landing = tmp_path / "landing"
     landing.mkdir()
-    shutil.copy(src, landing / "part1.csv")
+    shutil.copy(raw_health_csv, landing / "part1.csv")
 
     schema = csv_ingest_stream.raw_csv_schema(spark, str(landing / "part1.csv"))
     stream = csv_ingest_stream.clean_stream(
@@ -64,7 +58,7 @@ def test_streaming_csv_ingest_matches_batch_rowwise(spark, tmp_path):
     )
 
     streamed = spark.read.parquet(str(tmp_path / "silver"))
-    batch = stage_rowwise(read_csv_raw(spark, src))
+    batch = stage_rowwise(read_csv_raw(spark, raw_health_csv))
     assert streamed.count() == batch.count()
     # spot-compare the cleaned country census — full-column equality
     s_census = dict(streamed.groupBy("Country").count().collect())

@@ -19,8 +19,6 @@ from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sil
     stream_bronze_ingest,
 )
 
-REFERENCE_CSV = "/root/reference/Global Health Dataset.csv"
-
 
 def _canon(df):
     pdf = df.toPandas()
@@ -33,24 +31,25 @@ def _canon(df):
     )
 
 
-def test_streamed_bronze_equals_batch_rowstage(spark, tmp_path):
+def test_streamed_bronze_equals_batch_rowstage(spark, tmp_path, raw_health_csv):
     bronze = stream_bronze_ingest(
-        spark, REFERENCE_CSV, str(tmp_path / "bronze"), n_chunks=4
+        spark, raw_health_csv, str(tmp_path / "bronze"), n_chunks=4
     )
-    batch = stage_rowwise(read_csv_raw(spark, REFERENCE_CSV))
+    batch = stage_rowwise(read_csv_raw(spark, raw_health_csv))
     assert bronze.count() == batch.count()
     assert sorted(bronze.columns) == sorted(batch.columns)
     a, b = _canon(bronze), _canon(batch)
     assert a.equals(b)
 
 
-def test_streamed_bronze_preserves_non_utf8_bytes(spark, tmp_path):
-    # the dataset is NOT valid UTF-8 (byte 0xA5); the chunk writer must
-    # pass raw bytes through so the latin1 read sees the same cells
+def test_streamed_bronze_preserves_non_utf8_bytes(spark, tmp_path, raw_health_csv):
+    # the input (the reference CSV or the FIXTURES.md §1 CSV) is NOT
+    # valid UTF-8: both carry the byte 0xA5; the chunk writer must pass
+    # raw bytes through so the latin1 read sees the same cells
     bronze = stream_bronze_ingest(
-        spark, REFERENCE_CSV, str(tmp_path / "bronze2"), n_chunks=3
+        spark, raw_health_csv, str(tmp_path / "bronze2"), n_chunks=3
     )
-    batch = stage_rowwise(read_csv_raw(spark, REFERENCE_CSV))
+    batch = stage_rowwise(read_csv_raw(spark, raw_health_csv))
     col = "Country"
     a = {r[0] for r in bronze.select(col).distinct().collect()}
     b = {r[0] for r in batch.select(col).distinct().collect()}

@@ -20,8 +20,6 @@ from health_etl_pipeline_and_analytics_with_machine_learning_spark.jobs.webapp i
     make_server,
 )
 
-REFERENCE_CSV = "/root/reference/Global Health Dataset.csv"
-
 SECTIONS = [
     "overview",
     "deadliest_diseases",
@@ -34,8 +32,8 @@ SECTIONS = [
 
 
 @pytest.fixture(scope="module")
-def served(spark):
-    app = DashboardApp(spark, REFERENCE_CSV)
+def served(spark, raw_health_csv):
+    app = DashboardApp(spark, raw_health_csv)
     server = make_server(app, port=0)
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
@@ -97,10 +95,10 @@ def test_dashboard_filters_apply_with_reference_exceptions(served):
     assert got["correlation_with_mortality"] == base_corr
 
 
-def test_upload_swaps_dataset(served, tmp_path):
+def test_upload_swaps_dataset(served, tmp_path, raw_health_csv):
     app, base = served
     sub_csv = tmp_path / "sub.csv"
-    with open(REFERENCE_CSV, "rb") as f:
+    with open(raw_health_csv, "rb") as f:
         head = f.read().splitlines(keepends=True)[:301]
     sub_csv.write_bytes(b"".join(head))
     req = urllib.request.Request(
@@ -112,8 +110,9 @@ def test_upload_swaps_dataset(served, tmp_path):
     assert meta["years"], "upload produced no data"
     got = _get(base, "/api/dashboard")
     assert got["overview"][0]["total_records"] <= 300
-    # restore the full dataset for other tests in the module
-    app.upload(REFERENCE_CSV)
+    # restore the full input (the reference CSV or the FIXTURES.md §1
+    # CSV, both with the 0xA5 byte) for other tests in the module
+    app.upload(raw_health_csv)
 
 
 def test_bad_year_param_returns_json_400(served):
