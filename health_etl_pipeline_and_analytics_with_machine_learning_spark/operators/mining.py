@@ -2348,14 +2348,14 @@ def streaming_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunked parquet dir, COMPLETE output to a memory sink named
     ``countmin_replay``); the exact ground-truth probe side runs as a
     batch query, which is exactly the production split — sketch on the
-    stream, truth from the warehouse. The replay input is the events
-    chunk set the sessionize replays share (streaming/sessionize.py);
+    stream, truth from the warehouse. The replay input is the one events
+    stream source, ``streaming.events_stream.read_events_stream``;
     streaming/replay.py runs it with the JVM-state partition count.
     """
+    from ..streaming.events_stream import read_events_stream
     from ..streaming.replay import REPLAY_STATE_PARTITIONS, run_bounded
-    from ..streaming.sessionize import _chunked_events_dir, _read_chunked_stream
 
-    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, 3))
+    raw = read_events_stream(spark, sf_dir)
     grid_stream = (
         _cm_cells(raw)
         .groupBy("hrow", "bucket")

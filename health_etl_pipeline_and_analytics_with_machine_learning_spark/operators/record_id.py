@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.lineage import lineage_cut
+
 
 def with_record_id(
     df: DataFrame,
@@ -54,7 +56,7 @@ def with_record_id(
     # place a row in different partitions and every offset after the
     # first drifted boundary would be wrong. Checkpointing materializes
     # one partitioning that both jobs then share.
-    ordered = ordered.localCheckpoint()
+    ordered = lineage_cut(ordered, eager=True)
     # one narrow counting pass; tiny result collected to the driver
     counts = dict(
         ordered.groupBy("__pid").count().collect()

@@ -166,7 +166,7 @@ def table_schema(spark: SparkSession, sf_dir: str, table: str) -> T.StructType:
 
 
 def events_ts(events: DataFrame) -> DataFrame:
-    """``events`` (batch or stream, read with :func:`table_schema`) with
+    """``events`` (read with :func:`table_schema`) with
     ``ts`` as a TIMESTAMP whose session-rendered WALL CLOCK equals
     DuckDB's naive reading of the file, at microsecond precision,
     whichever on-disk encoding the file uses. timestamp[us] reads as

@@ -319,12 +319,10 @@ def _det_kmeans_fit(
     is the only knob — the corpus itself is never scanned until the
     final (also narrow) assignment pass.
     """
-    samp = (
+    samp = lineage_cut(
         e.filter(
             F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4) < sample_hex
-        )
-        .select("vec_id", "v")
-        .localCheckpoint(eager=False)
+        ).select("vec_id", "v")
     )
     init = samp.orderBy("vec_id").limit(k).collect()
     cents = [(i, list(r["v"])) for i, r in enumerate(init)]
@@ -1016,10 +1014,8 @@ def split_leakage_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint), and after the skinny-pair refactor the vectors are
     # dead downstream of vb — without the select, the checkpoint would
     # store the 64-dim vector + norm × _LSH_TABLES rows per vec
-    vb = (
-        _lsh_buckets(e, extra=("tr",))
-        .select("vec_id", "tr", "t", "bkey")
-        .localCheckpoint(eager=False)
+    vb = lineage_cut(
+        _lsh_buckets(e, extra=("tr",)).select("vec_id", "tr", "t", "bkey")
     )
     a = vb.filter(F.col("tr")).select(
         "t", "bkey", F.col("vec_id").alias("train_id")

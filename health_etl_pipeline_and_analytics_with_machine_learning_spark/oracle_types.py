@@ -1,5 +1,6 @@
-"""Shared oracle-output type-class maps: one source of truth for
-``scripts/drive_entry.py`` and the parity gate, so the two can't drift.
+"""Shared oracle-output comparison: the type-class maps and the row
+canonical form, one source of truth for ``scripts/drive_entry.py`` and
+the parity gate, so the two can't drift.
 
 The driver fetches DuckDB results through
 pandas/Arrow, where HUGEINT/DECIMAL become float64/decimal while Spark
@@ -10,6 +11,8 @@ classes whose pandas fetch diverges — forbidden in any oracle output.
 """
 
 from __future__ import annotations
+
+import math
 
 #: DuckDB declared type → class; 'H' = pandas/Arrow fetch diverges
 #: from Spark's int64/float64 (the r5 driver-red cause)
@@ -56,3 +59,19 @@ def class_mismatches(duck_description, spark_schema) -> list[str]:
         elif oc is not None and sc is not None and oc != sc:
             errs.append(f"{col}: oracle {dt} vs spark class {sc!r}")
     return errs
+
+
+def canon(rows, colnames):
+    """Order-insensitive canonical form: sort columns by name, then rows;
+    floats rounded to 9dp, NaN as a sortable marker."""
+    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
+
+    def norm(v):
+        if isinstance(v, float):
+            if math.isnan(v):
+                return ("nan",)
+            return round(v, 9)
+        return v
+
+    out = [tuple(norm(r[i]) for i in order) for r in rows]
+    return sorted(out, key=repr)

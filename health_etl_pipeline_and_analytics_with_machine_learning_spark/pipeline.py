@@ -20,10 +20,9 @@ Architecture notes (scale-first):
   scalable form of pandas ``groupby().transform('median')``
   (SURVEY §2.3/§2.4). Both rate fills share one aggregation.
 - Between the expression phase and the statistics phase the lineage is
-  cut once (``materializer``, default ``localCheckpoint``): the cleaned
+  cut once (``functions.lineage.lineage_cut``, eager): the cleaned
   columns are computed exactly once instead of once per statistics
-  pass, and the logical plan stays flat. On a cluster the equivalent
-  materializer is a silver-parquet write + re-read.
+  pass, and the logical plan stays flat.
 
 Stage ordering follows the reference exactly — it is load-bearing
 (e.g. Severity Score reads PRE-clip DALYs because derived columns are
@@ -33,8 +32,6 @@ decisions (SURVEY §2.11) are annotated inline.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +43,7 @@ from .functions.cleaning import (
     clean_disease,
     clean_numeric,
 )
+from .functions.lineage import lineage_cut
 from .functions.quantiles import exact_quantiles_multi
 from .operators.record_id import with_record_id
 from .sources.ingest import read_csv_raw
@@ -213,10 +211,7 @@ def stage_year(df: DataFrame) -> DataFrame:
     return out.filter((_c("Year") >= 1900) & (_c("Year") <= 2100))
 
 
-def stage_missing(
-    df: DataFrame,
-    materializer: Callable[[DataFrame], DataFrame] | None = None,
-) -> DataFrame:
+def stage_missing(df: DataFrame) -> DataFrame:
     """2f: population filled by (Country, Year) group median then global
     median then cast to int (truncating); ages → 25; the three rate
     columns filled by (Disease, Country) group median then global median.
@@ -225,7 +220,7 @@ def stage_missing(
     pandas groupby(dropna=True).transform semantics.
 
     Job structure (r9): BOTH group-fill joins are composed lazily, the
-    lineage is cut ONCE (``materializer``), and the four global medians
+    lineage is cut ONCE (:func:`lineage_cut`), and the four global medians
     come from ONE batched selection-engine call over the cut. Before,
     every downstream statistics pass re-executed the group-median
     aggregate subplans behind the broadcast joins (Catalyst re-runs
@@ -260,8 +255,8 @@ def stage_missing(
             out = out.withColumn(c, F.coalesce(_c(c), _c(f"__gm_{i}")))
         out = out.drop(*[f"__gm_{i}" for i in range(len(rates))])
 
-    if materializer is not None and (has_pop or rates):
-        out = materializer(out)
+    if has_pop or rates:
+        out = lineage_cut(out, eager=True)
 
     need = ({"Country_pop": [0.5]} if has_pop else {}) | {c: [0.5] for c in rates}
     if need:
@@ -435,18 +430,10 @@ def stage_finalize(df: DataFrame, record_id_mode: str = "window") -> DataFrame:
     return out.orderBy(*[_c(c) for c in order + tiebreak])
 
 
-def _default_materializer(df: DataFrame) -> DataFrame:
-    """Cut lineage after the expression phase: compute the cleaned columns
-    once, keep the plan flat for the statistics passes. Cluster analog:
-    write the silver parquet and re-read it."""
-    return df.localCheckpoint(eager=True)
-
-
 def clean_health_dataframe(
     df: DataFrame,
     record_id_mode: str = "window",
     country_corrections: dict | None = None,
-    materializer: Callable[[DataFrame], DataFrame] | None = _default_materializer,
 ) -> DataFrame:
     """Full transformation on an already-ingested raw (all-string,
     NA-nulled) DataFrame.
@@ -456,14 +443,15 @@ def clean_health_dataframe(
     reference parity on quirk Q1 (Italy stays 'Itl'); default normalizes.
     """
     out = stage_rowwise(df, country_corrections)
-    if materializer is not None:
-        out = materializer(out)
+    # cut after the expression phase: the cleaned columns are computed
+    # once and the plan stays flat for the statistics passes
+    out = lineage_cut(out, eager=True)
     out = stage_year(out)
     # second lineage cut INSIDE stage_missing, after the group-fill
     # joins: every later statistics pass (global medians, IQR
     # quantiles, sweep medians) and the final write then read
     # materialized columns instead of re-running the join subplans
-    out = stage_missing(out, materializer=materializer)
+    out = stage_missing(out)
     out = stage_derived_first_pass(out)
     out = stage_iqr_clip(out)
     out = stage_rename(out)

@@ -36,12 +36,6 @@ def write_csv(
     return path
 
 
-def write_silver_parquet(df: DataFrame, path: str) -> str:
-    """The canonical cleaned-table sink."""
-    df.write.mode("overwrite").parquet(path)
-    return path
-
-
 def write_compacted_parquet(
     df: DataFrame, path: str, target_file_bytes: int = 128 * 1024 * 1024
 ) -> str:

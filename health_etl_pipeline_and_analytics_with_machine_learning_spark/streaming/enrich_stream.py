@@ -46,7 +46,7 @@ def run_enrich_to_memory(
     spark: SparkSession, sf_dir: str, query_name: str = "events_enriched"
 ) -> DataFrame:
     """Drive the enrichment stream to completion against the bounded
-    parquet source (memory sink, complete mode — the aggregate makes
+    events source (memory sink, complete mode — the aggregate makes
     this a stateful sink query even though the join itself is
     stateless)."""
     dim = load(spark, sf_dir, "customer")

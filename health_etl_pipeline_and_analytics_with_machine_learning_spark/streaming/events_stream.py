@@ -2,6 +2,13 @@
 extension of the reference's weekly-batch report cadence (SURVEY §2.9,
 §7.5): continuous ingest replaces re-running the batch.
 
+:func:`read_events_stream` is the ONE events stream source: the table
+as time-ordered chunk files (:func:`events_chunks`), one chunk per
+micro-batch. Every events flow reads it: the rollup, dedup and
+enrichment drains here and in ``enrich_stream``, the five certified
+replays in ``sessionize`` and ``operators.mining.streaming_countmin_replay``.
+Each drains through :func:`replay.run_bounded`.
+
 The aggregation logic is shared with the batch twin
 (operators.events.events_hour_agg) so batch and streaming stay
 consistent; tests drive the stream from the same parquet and compare
@@ -18,44 +25,57 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import artifacts
-from ..operators.registry import events_ts, table_schema
-from .replay import ReplayDir, run_bounded
-from .sessionize import _fmt_wall, _wall_ts
+from .replay import ReplayDir, chunk_table, read_chunks, run_bounded
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
-    """readStream over the events parquet (stand-in for kafka/kinesis),
-    read with ``load``'s memoized footer schema and normalized by the
-    batch loader's own ``ts`` rebuild (``registry.events_ts``), so the
-    stream and the batch agree under either on-disk encoding and any
-    session timezone.
+def _wall_ts(col):
+    """Session-TZ-proof event-time canonicalization: ``ts`` arrives
+    as an NTZ→TIMESTAMP cast whose epoch carries the session offset;
+    re-adding it makes the epoch equal the wall clock read as UTC, so
+    tumbling ``window()`` buckets align to WALL hours under any session
+    timezone (identity under UTC). Mirrors registry.epoch_us_utc."""
+    return F.from_utc_timestamp(col, F.expr("current_timezone()"))
 
-    FileStreamSource wants a DIRECTORY it can watch for arriving files;
-    the driver ships one flat file, so we expose it through a temp
-    directory of symlinks — which is also exactly how continuous ingest
-    would land files in production. ``copies > 1`` symlinks the file
-    multiple times to simulate at-least-once redelivery (every event
-    duplicated), the input the streaming dedup twin exists for. The
-    directory is a replay slot of :func:`artifacts.memo`, shared by
-    every read with the same ``copies``."""
-    import os
 
-    src = os.path.join(sf_dir, "events.parquet")
-    watch_dir = src
-    if os.path.isfile(src):
+def _fmt_wall(col, fmt: str):
+    """Render a wall-canonical timestamp (epoch == wall-as-UTC) as its
+    wall-clock string regardless of session TZ: ``to_utc_timestamp``
+    subtracts the session offset that ``date_format`` re-adds."""
+    return F.date_format(F.to_utc_timestamp(col, F.expr("current_timezone()")), fmt)
 
-        def link(out: str) -> None:
-            for i in range(copies):
-                os.symlink(src, os.path.join(out, f"events_{i}.parquet"))
 
-        watch_dir = artifacts.memo(
-            spark, "events_stream", sf_dir, "events", (copies,),
-            lambda: ReplayDir.new("events_stream", link),
-            ReplayDir.on_disk, ReplayDir.remove,
-        ).path
-    schema = table_schema(spark, sf_dir, "events")
-    return events_ts(spark.readStream.schema(schema).parquet(watch_dir))
+def events_chunks(spark: SparkSession, sf_dir: str, n_chunks: int) -> ReplayDir:
+    """The events table as ``n_chunks`` equal-count, time-ordered chunks
+    (:func:`replay.chunk_table`), so every user active in more than one
+    time slice crosses batch boundaries and exercises the cross-batch
+    state path. Chunk = global (ts, event_id) rank ÷ step, with the rank
+    from the funnel-free two-phase pattern (operators.record_id): the
+    only driver data is the row count and the per-partition offset map.
+    Chunks hold ``ts`` as registry.load normalizes it, a session-TZ
+    TIMESTAMP, whatever the on-disk encoding, so the stream agrees with
+    the batch under any session timezone."""
+    from ..operators.record_id import with_record_id
+    from ..operators.registry import load
+
+    def build() -> DataFrame:
+        ev = load(spark, sf_dir, "events")
+        step = (ev.count() + n_chunks - 1) // n_chunks
+        ranked = with_record_id(ev, ["ts", "event_id"], id_col="__rid", mode="scaled")
+        return ranked.withColumn(
+            "__chunk", F.expr(f"CAST((__rid - 1) DIV {step} AS INT)")
+        ).drop("__rid")
+
+    return chunk_table(spark, "events_chunks", sf_dir, "events", n_chunks, build)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> DataFrame:
+    """readStream over the events table (stand-in for kafka/kinesis):
+    a FileStreamSource over :func:`events_chunks`, read with the schema
+    the chunker recorded, one chunk per micro-batch. Two reads share one
+    chunk dir and are independent sources; unioning them is an
+    at-least-once redelivery (every event twice)."""
+    chunks = events_chunks(spark, sf_dir, n_chunks)
+    return read_chunks(spark, chunks.path, chunks.schema)
 
 
 def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -83,7 +103,7 @@ def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 def run_to_memory(
     spark: SparkSession, sf_dir: str, query_name: str = "events_rollup"
 ) -> DataFrame:
-    """Drive the stream to completion against the bounded parquet source
+    """Drive the stream to completion against the bounded source
     (memory sink, complete mode) and return the result as a DataFrame.
     This is the local smoke path; production uses a real sink +
     checkpointLocation."""
@@ -112,14 +132,15 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "2 hours") -> Dat
 
 
 def run_dedup_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    copies: int = 2,
-    query_name: str = "events_dedup",
+    spark: SparkSession, sf_dir: str, query_name: str = "events_dedup"
 ) -> DataFrame:
-    """Drive the redelivered (``copies``×) stream through the dedup
-    operator to completion; append-mode memory sink."""
-    stream = dedup_within_watermark(read_events_stream(spark, sf_dir, copies=copies))
+    """Drive the redelivered stream (two unioned reads, every event
+    twice) through the dedup operator to completion; append-mode memory
+    sink."""
+    redelivered = read_events_stream(spark, sf_dir).unionByName(
+        read_events_stream(spark, sf_dir)
+    )
+    stream = dedup_within_watermark(redelivered)
     run_bounded(
         stream.writeStream.outputMode("append").format("memory").queryName(query_name)
     )

@@ -1,9 +1,9 @@
 """Bounded Structured Streaming replays of the events table, each the
 oracle-certified twin of a batch op: sessionization, the hourly
 rollup, the view-to-purchase join, exactly-once dedup and CDC
-compaction. Every replay reads the same time-ordered chunk dir, one
-chunk per micro-batch, and runs to completion through
-:func:`replay.run_bounded`.
+compaction. Every replay reads the one events stream source,
+:func:`events_stream.read_events_stream` (time-ordered chunks, one per
+micro-batch), and runs to completion through :func:`replay.run_bounded`.
 
 Sessionization is a native ``session_window`` count. The batch twin
 (``operators.events.sessionization``) starts a session when the gap to
@@ -24,29 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .replay import (
-    REPLAY_STATE_PARTITIONS,
-    ReplayDir,
-    chunk_table,
-    read_chunks,
-    run_bounded,
-)
-
-
-def _wall_ts(col):
-    """Session-TZ-proof event-time canonicalization: ``ts`` arrives
-    as an NTZ→TIMESTAMP cast whose epoch carries the session offset;
-    re-adding it makes the epoch equal the wall clock read as UTC, so
-    tumbling ``window()`` buckets align to WALL hours under any session
-    timezone (identity under UTC). Mirrors registry.epoch_us_utc."""
-    return F.from_utc_timestamp(col, F.expr("current_timezone()"))
-
-
-def _fmt_wall(col, fmt: str):
-    """Render a wall-canonical timestamp (epoch == wall-as-UTC) as its
-    wall-clock string regardless of session TZ: ``to_utc_timestamp``
-    subtracts the session offset that ``date_format`` re-adds."""
-    return F.date_format(F.to_utc_timestamp(col, F.expr("current_timezone()")), fmt)
+from .events_stream import _fmt_wall, _wall_ts, read_events_stream
+from .replay import REPLAY_STATE_PARTITIONS, run_bounded
 
 #: batch twin's inactivity gap (operators/events.py sessionization)
 SESSION_GAP_S = 30 * 60
@@ -68,34 +47,6 @@ HLL_REL_MARGIN = 4 * HLL_RSD
 #: never cover that regime)
 HLL_ABS_FLOOR = 5.0
 
-def _chunked_events_dir(spark: SparkSession, sf_dir: str, n_chunks: int) -> ReplayDir:
-    """The events table as ``n_chunks`` equal-count, time-ordered chunks
-    (:func:`replay.chunk_table`), so every user active in more than one
-    time slice crosses batch boundaries and exercises the cross-batch
-    state path. Chunk = global (ts, event_id) rank ÷ step, with the rank
-    from the funnel-free two-phase pattern (operators.record_id): the
-    only driver data is the row count and the per-partition offset map.
-    Chunks hold ``ts`` as registry.load normalizes it, a session-TZ
-    TIMESTAMP, whatever the on-disk encoding."""
-    from ..operators.record_id import with_record_id
-    from ..operators.registry import load
-
-    def build() -> DataFrame:
-        ev = load(spark, sf_dir, "events")
-        step = (ev.count() + n_chunks - 1) // n_chunks
-        ranked = with_record_id(ev, ["ts", "event_id"], id_col="__rid", mode="scaled")
-        return ranked.withColumn(
-            "__chunk", F.expr(f"CAST((__rid - 1) DIV {step} AS INT)")
-        ).drop("__rid")
-
-    return chunk_table(spark, "events_chunks", sf_dir, "events", n_chunks, build)
-
-
-def _read_chunked_stream(spark: SparkSession, chunks: ReplayDir) -> DataFrame:
-    """FileStreamSource over an events chunk dir, read with the schema
-    the chunker recorded."""
-    return read_chunks(spark, chunks.path, chunks.schema)
-
 
 def session_counts(raw: DataFrame) -> DataFrame:
     """One row per (user, session): ``user_id``, the session window over
@@ -114,7 +65,7 @@ def stream_sessionization(
     completion and roll the sessions up per user — same columns, same
     values as the batch ``sessionization`` query (and its DuckDB
     oracle)."""
-    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
+    raw = read_events_stream(spark, sf_dir, n_chunks)
     name = "sessionize_sessions"
     sessions = session_counts(raw)
     run_bounded(
@@ -167,7 +118,7 @@ def stream_hour_rollup(
     window expression with a 2 h watermark and append output to a real
     sink. State here is O(hours × event types), not O(events) — the
     HLL buffer is a fixed ~kB per (hour, type) group at rsd=0.02."""
-    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
+    raw = read_events_stream(spark, sf_dir, n_chunks)
     rolled = (
         raw.groupBy(F.window(_wall_ts(F.col("ts")), "1 hour").alias("win"), "event_type")
         .agg(
@@ -245,9 +196,8 @@ def stream_view_purchase_join(
     Scale shape: the join shuffles both streams on user_id once;
     per-micro-batch work is new-rows × matching-state, with state
     bounded by the watermark horizon in the production form."""
-    chunks = _chunked_events_dir(spark, sf_dir, n_chunks)
     views = (
-        _read_chunked_stream(spark, chunks)
+        read_events_stream(spark, sf_dir, n_chunks)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -256,7 +206,7 @@ def stream_view_purchase_join(
         )
     )
     purchases = (
-        _read_chunked_stream(spark, chunks)
+        read_events_stream(spark, sf_dir, n_chunks)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -309,9 +259,8 @@ def stream_dedup_replay(
     within the lateness horizon); the bounded replay keeps full state
     so the answer is exact.
     """
-    chunks = _chunked_events_dir(spark, sf_dir, n_chunks)
-    a = _read_chunked_stream(spark, chunks)
-    b = _read_chunked_stream(spark, chunks)
+    a = read_events_stream(spark, sf_dir, n_chunks)
+    b = read_events_stream(spark, sf_dir, n_chunks)
     deduped = (
         a.unionByName(b)
         .select("event_id", "event_type", "value")
@@ -347,7 +296,7 @@ def stream_cdc_compaction(
     """
     from ..operators.warehouse import latest_per_user
 
-    raw = _read_chunked_stream(spark, _chunked_events_dir(spark, sf_dir, n_chunks))
+    raw = read_events_stream(spark, sf_dir, n_chunks)
     name = "cdc_compaction_latest"
     latest = latest_per_user(raw)
     run_bounded(

@@ -12,7 +12,6 @@ column against Spark's, ``oracle_types.class_mismatches``). With args:
 only the named ops (the fast inner loop while authoring). Exits 1 on
 any MISMATCH. This is the /verify skill's recipe.
 """
-import math
 import os
 import sys
 
@@ -20,25 +19,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import __spark_entry__ as E
-from pyspark.sql import SparkSession
 
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.oracle_types import (
+    canon,
     class_mismatches,
 )
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.session import get_spark
 
 SF01 = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.driver.memory", "8g")
-    .appName("drive_entry")
-    .getOrCreate()
-)
+# the test suite's session settings (tests/conftest.py ``spark``)
+spark = get_spark(app_name="drive_entry", cpus=8, shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 
 # 1. entry() smoke at sf0.001
@@ -54,19 +48,6 @@ for t in TABLES:
     p = f"{SF01}/{t}.parquet"
     if os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-def canon(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-
-    def norm(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return ("nan",)
-            return round(v, 9)
-        return v
-
-    out = [tuple(norm(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
 
 queries = E.queries()
 oracles = E.oracle_sql()

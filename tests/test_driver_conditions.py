@@ -37,6 +37,7 @@ TABLES = (
 ).split()
 
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.oracle_types import (  # noqa: E402
+    canon,
     class_mismatches,
 )
 
@@ -69,10 +70,6 @@ def duck():
         )
     yield con
     con.close()
-
-
-# ONE canon protocol repo-wide: test_oracle_parity's
-from test_oracle_parity import canon as _canon  # noqa: E402
 
 
 def test_no_hugeint_oracle_outputs(spark, duck):
@@ -180,7 +177,7 @@ def test_hostile_session_parity(spark, duck):
             o_cols = [d[0] for d in res.description]
             o_rows = res.fetchall()
             assert sorted(sdf.columns) == sorted(o_cols), name
-            cs, co = _canon(s_rows, sdf.columns), _canon(o_rows, o_cols)
+            cs, co = canon(s_rows, sdf.columns), canon(o_rows, o_cols)
             assert len(cs) == len(co), f"{name}: {len(cs)} vs {len(co)} rows"
             diffs = [(a, b) for a, b in zip(cs, co) if a != b][:3]
             assert cs == co, f"{name}: first diffs {diffs}"

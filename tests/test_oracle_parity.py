@@ -8,14 +8,13 @@ This mirrors the reference's own informal dual-implementation strategy
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
     REGISTRY,
 )
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.oracle_types import canon
 
 from conftest import SF_CORRECT
 
@@ -33,21 +32,6 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
-
-
-def canon(rows, colnames):
-    """Order-insensitive canonical form: sort columns by name, then rows."""
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-
-    def norm(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return ("nan",)
-            return round(v, 9)
-        return v
-
-    out = [tuple(norm(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
 
 
 ORACLE_QUERIES = sorted(n for n, rq in REGISTRY.items() if rq.oracle is not None)

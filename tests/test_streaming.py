@@ -29,43 +29,6 @@ def test_stream_matches_batch(spark):
     assert len(s_rows) > 0
 
 
-def test_streaming_csv_ingest_matches_batch_rowwise(spark, tmp_path, raw_health_csv):
-    """Streaming the dirty raw CSV (the reference dataset or the
-    FIXTURES.md §1 file) through the stateless cleaning phase must
-    produce exactly the batch stage_rowwise output."""
-    import shutil
-
-    from health_etl_pipeline_and_analytics_with_machine_learning_spark.pipeline import (
-        stage_rowwise,
-    )
-    from health_etl_pipeline_and_analytics_with_machine_learning_spark.sources.ingest import (
-        read_csv_raw,
-    )
-    from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming import (
-        csv_ingest_stream,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    shutil.copy(raw_health_csv, landing / "part1.csv")
-
-    schema = csv_ingest_stream.raw_csv_schema(spark, str(landing / "part1.csv"))
-    stream = csv_ingest_stream.clean_stream(
-        csv_ingest_stream.read_raw_stream(spark, str(landing), schema)
-    )
-    csv_ingest_stream.run_to_parquet(
-        stream, str(tmp_path / "silver"), str(tmp_path / "ckpt")
-    )
-
-    streamed = spark.read.parquet(str(tmp_path / "silver"))
-    batch = stage_rowwise(read_csv_raw(spark, raw_health_csv))
-    assert streamed.count() == batch.count()
-    # spot-compare the cleaned country census — full-column equality
-    s_census = dict(streamed.groupBy("Country").count().collect())
-    b_census = dict(batch.groupBy("Country").count().collect())
-    assert s_census == b_census
-
-
 # (the stateful sessionizer's stream-vs-batch equality now lives in
 # tests/test_streaming_sessionize.py against streaming/sessionize.py —
 # the chunked-replay, oracle-certified successor of the single-batch
@@ -82,7 +45,7 @@ def test_streaming_dedup_restores_exactly_once(spark):
         load,
     )
 
-    deduped = events_stream.run_dedup_to_memory(spark, SF_SMOKE, copies=2)
+    deduped = events_stream.run_dedup_to_memory(spark, SF_SMOKE)
     batch = load(spark, SF_SMOKE, "events")
 
     d = deduped.agg(
@@ -173,9 +136,10 @@ def test_streaming_neardup_probe_batch_boundary_invariance(spark):
 
 
 def test_bounded_replays_go_through_the_replay_module():
-    """Every bounded replay drains and pins its shuffle partitions in
-    streaming/replay.py (run_bounded) and nowhere else; the session
-    builder's ``.config`` is not a ``conf.set`` and stays exempt."""
+    """Every bounded replay drains, triggers and pins its shuffle
+    partitions in streaming/replay.py (run_bounded) and nowhere else;
+    the session builder's ``.config`` is not a ``conf.set`` and stays
+    exempt."""
     import pathlib
     import re
 
@@ -183,7 +147,8 @@ def test_bounded_replays_go_through_the_replay_module():
 
     root = pathlib.Path(pkg.__file__).parent
     banned = re.compile(
-        r"processAllAvailable\(|conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions"
+        r"processAllAvailable\(|awaitTermination\(|\.trigger\("
+        r"|conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions"
     )
     offenders = [
         f"{path.relative_to(root)}:{i}"

@@ -17,13 +17,15 @@ from pyspark.sql import functions as F
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.events import (
     sessionization,
 )
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.events_stream import (
+    events_chunks,
+)
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.replay import (
     mkdtemp,
     read_chunks,
     run_bounded,
 )
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
-    _chunked_events_dir,
     session_counts,
 )
 
@@ -52,7 +54,7 @@ def _run_phase(spark, watch_dir: str, schema, ckpt: str, out: str) -> None:
 
 
 def test_sessionizer_recovers_state_from_checkpoint(spark, tmp_path):
-    src = _chunked_events_dir(spark, SF_SMOKE, 3)
+    src = events_chunks(spark, SF_SMOKE, 3)
     watch = str(tmp_path / "watch")
     os.makedirs(watch)
     chunks = sorted(f for f in os.listdir(src.path) if f.endswith(".parquet"))

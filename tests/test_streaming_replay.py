@@ -65,18 +65,26 @@ def test_chunker_dirs_are_registered_and_reaped(spark, tmp_path, monkeypatch):
         read_events_stream,
     )
 
-    # repeated reads share one watch dir; a reaped one refills
-    artifacts.evict("events_stream", SF_SMOKE)
+    def events_slots():
+        return [
+            d
+            for d in replay._TMP_DIRS
+            if os.path.basename(d).startswith("events_chunks_") and os.path.isdir(d)
+        ]
+
+    # two reads share one chunk dir; a reaped one refills
+    artifacts.evict("events_chunks", SF_SMOKE)
     read_events_stream(spark, SF_SMOKE)
     read_events_stream(spark, SF_SMOKE)
-    (watch,) = [d for d in replay._TMP_DIRS if "events_stream_" in d]
+    (slot,) = events_slots()
 
     replay._reap_tmp_dirs()
-    assert not os.path.exists(chunks.path) and not os.path.exists(watch)
+    assert not os.path.exists(chunks.path) and not os.path.exists(slot)
     assert replay._TMP_DIRS == []
     read_events_stream(spark, SF_SMOKE)
-    (refilled,) = replay._TMP_DIRS
-    assert refilled != watch and os.listdir(refilled) == ["events_0.parquet"]
+    (refilled,) = events_slots()
+    assert refilled != slot
+    assert sorted(os.listdir(refilled)) == [f"chunk_00{i}.parquet" for i in range(3)]
     replay._reap_tmp_dirs()
 
 

@@ -23,8 +23,10 @@ from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.eve
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.operators.registry import (
     REGISTRY,
 )
+from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.events_stream import (
+    events_chunks,
+)
 from health_etl_pipeline_and_analytics_with_machine_learning_spark.streaming.sessionize import (
-    _chunked_events_dir,
     session_counts,
     stream_sessionization,
 )
@@ -84,7 +86,7 @@ def test_state_actually_crosses_microbatches(spark, tmp_path):
     rows = sorted([(1, t) for t in u1] + [(2, t) for t in u2], key=lambda r: r[1])
     sf = _write_events(tmp_path, [(i, u, t) for i, (u, t) in enumerate(rows)])
 
-    chunks = _chunked_events_dir(spark, sf, 4)
+    chunks = events_chunks(spark, sf, 4)
     files = sorted(f for f in os.listdir(chunks.path) if f.endswith(".parquet"))
     assert len(files) == 4
     per_chunk = [
@@ -118,7 +120,7 @@ def test_gap_edge_matches_batch_stream_and_oracle(spark, tmp_path):
             (5, 3, 1802.95),
         ],
     )
-    chunks = _chunked_events_dir(spark, sf, 2)
+    chunks = events_chunks(spark, sf, 2)
     first = spark.read.parquet(os.path.join(chunks.path, "chunk_000.parquet"))
     assert sorted(r["event_id"] for r in first.collect()) == [0, 1, 2]
 
@@ -240,7 +242,7 @@ def test_stream_stream_join_pairs_straddle_microbatches(spark, tmp_path):
             (5, 3, 2100, "purchase"),
         ],
     )
-    chunks = _chunked_events_dir(spark, sf, 3)
+    chunks = events_chunks(spark, sf, 3)
     files = sorted(f for f in os.listdir(chunks.path) if f.endswith(".parquet"))
     per_chunk = [
         pair
