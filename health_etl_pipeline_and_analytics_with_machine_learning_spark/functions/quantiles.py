@@ -1,5 +1,5 @@
-"""Distributed EXACT quantiles — the scale path for the reference's
-exact medians/IQR (SURVEY §4.3).
+"""Exact quantiles — the scale path for the reference's exact
+medians/IQR (SURVEY §4.3).
 
 Spark's built-in exact ``percentile`` aggregate buffers every distinct
 value (a value→count map) inside one final aggregation state — correct,
@@ -7,9 +7,16 @@ but a single-node memory funnel: at 100 TB it OOMs the task that merges
 the buffers. ``percentile_approx`` fixes memory but changes answers,
 which the parity tier can't accept.
 
-This module computes exact interpolated quantiles by DISTRIBUTED
-SELECTION (bucket refinement — the classic k-th-smallest algorithm).
-No stage ever moves more than ``N_BUCKETS`` rows per map task:
+Small inputs (at most ``SMALL_INPUT_MAX_ROWS`` rows, the engine's own
+``MAX_BOUNDARY_COLLECT``) are answered on the driver: one
+``limit(bound + 1)`` ``toArrow()`` collect of the requested columns —
+one job, no Python worker — and a numpy sort per column. This is the
+engine's rule "collect a bucket that fits" applied to the whole input;
+the reference's 10k-row ETL lives here.
+
+Larger inputs go through DISTRIBUTED SELECTION (bucket refinement —
+the classic k-th-smallest algorithm). No stage ever moves more than
+``N_BUCKETS`` rows per map task:
 
 1. one aggregate → (count, nan count, min, max) per column;
 2. one aggregate → a fixed-width ``N_BUCKETS``-bucket count histogram
@@ -28,23 +35,27 @@ No stage ever moves more than ``N_BUCKETS`` rows per map task:
 
 Multi-column batching (``exact_quantiles_multi``) runs stages 1/2/4
 for ALL requested columns in single passes, so e.g. four medians cost
-three jobs total, not twelve. The histogram/boundary passes ride Arrow
-batches with numpy ``bincount``/``unique`` partials (``_multi_pass``),
-so a pass costs one scan, not row-count × column-count rows.
+three passes after the small-input collect, not twelve. The
+histogram/boundary passes ride the JVM struct-explode for few columns
+and Arrow batches with numpy ``bincount``/``unique`` partials for many
+(``_multi_pass``), so a pass costs one scan, not row-count ×
+column-count rows.
 
-NaN and ±Infinity follow IEEE/Spark sort order (−inf < finite < +inf
-< NaN): all four regions count toward n; ranks landing in the −inf,
-+inf, or NaN prefix/suffix regions resolve in closed form from the
-region counts, and bucket selection runs only over the FINITE window
-(so an infinite outlier can't produce an infinite bucket width).
-Nulls are ignored.
+Both paths share one ordering rule. NaN and ±Infinity follow
+IEEE/Spark sort order (−inf < finite < +inf < NaN) and all four
+regions count toward n; −0.0 equals +0.0 and comes back as +0.0; nulls
+are ignored. In the distributed path, ranks landing in the −inf, +inf,
+or NaN prefix/suffix regions resolve in closed form from the region
+counts, and bucket selection runs only over the FINITE window (so an
+infinite outlier can't produce an infinite bucket width).
 
 Rank extraction and interpolation are the SHARED invariant-6 math
 (``functions.rank_math`` — one definition for this engine, the grouped
 in-plan engine, and the quantile-normalize op), so results are
 bit-comparable with the oracle (pinned by tests/test_quantiles.py
-against the built-in exact percentile; see BASELINE.md "Certification
-invariants" item 6 and the rank_math module docstring).
+against the built-in exact percentile, with each path forced; see
+BASELINE.md "Certification invariants" item 6 and the rank_math module
+docstring).
 """
 
 from __future__ import annotations
@@ -54,7 +65,7 @@ import math
 from collections import defaultdict
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .rank_math import interp, rank_spec
@@ -67,6 +78,49 @@ MAX_BOUNDARY_COLLECT = 65536
 #: refinement depth guard — progress is guaranteed while lo < hi, but
 #: degenerate FP ranges fall back to an exact histogram collect
 MAX_DEPTH = 64
+#: inputs of at most this many rows are answered from one driver-side
+#: Arrow collect (:func:`_small_input_quantiles`); larger ones run the
+#: distributed engine
+SMALL_INPUT_MAX_ROWS = MAX_BOUNDARY_COLLECT
+
+
+def _small_input_quantiles(
+    df: DataFrame, col_probs: dict[str, Sequence[float]]
+) -> dict[str, list[float]] | None:
+    """The small-input path: collect the requested columns (as doubles)
+    once with ``limit(bound + 1).toArrow()`` — one job, no Python
+    worker — and return None when the collect holds more than
+    :data:`SMALL_INPUT_MAX_ROWS` rows. Otherwise every rank is read
+    off a numpy sort, which orders −inf < finite < +inf < NaN like
+    Spark; nulls are dropped, NaN counts toward n, and ``+ 0.0`` turns
+    −0.0 into +0.0 as the distributed path's ``groupBy`` key
+    normalization does."""
+    import numpy as np
+
+    bound = SMALL_INPUT_MAX_ROWS
+    cols = list(col_probs)
+    tbl = (
+        df.select(
+            *[F.col(c).cast("double").alias(f"__q_{i}") for i, c in enumerate(cols)]
+        )
+        .limit(bound + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > bound:
+        return None
+    out: dict[str, list[float]] = {}
+    for i, c in enumerate(cols):
+        vals = np.sort(tbl.column(i).drop_null().to_numpy() + 0.0)
+        n = len(vals)
+        res = []
+        for p in col_probs[c]:
+            if n == 0:
+                res.append(float("nan"))
+                continue
+            k0, k1, frac = rank_spec(n, p)
+            res.append(interp(float(vals[k0 - 1]), float(vals[k1 - 1]), frac))
+        out[c] = res
+    return out
 
 
 def _bucket_expr(v, lo: float, width: float):
@@ -120,7 +174,7 @@ def _multi_pass_jvm(
     needed: dict[str, list[int]] | None,
 ):
     """JVM transport: ``explode(array(<struct per column>))`` into a
-    hash aggregate — the r1–r8 form, kept for FEW columns where its
+    hash aggregate, used for FEW columns where its
     row-count × column-count intermediate stays cheap and whole-stage
     codegen beats the Arrow path's fixed per-pass Python-worker cost.
     Bucket assignment is :func:`_bucket_expr` — the exact JVM twin of
@@ -151,6 +205,80 @@ def _multi_pass_jvm(
     )
 
 
+def _probe_executor_python_env(spark: SparkSession) -> None:
+    """Fail fast, with a clear message, when the EXECUTOR Python envs
+    lack the Arrow transport's dependencies (pandas / pyarrow / numpy);
+    :func:`_multi_pass_arrow` runs it before its first pass. Driver and
+    executor envs often differ on YARN/K8s, so a cluster missing them
+    fails with install instructions, not mid-job. The probe is a minimal
+    mapInPandas job spread over default-parallelism tasks — it reaches
+    the executors that pick up its tasks, representative, not
+    exhaustive; its success is cached on the SparkSession."""
+    if getattr(spark, "_arrow_env_probed", False):
+        return
+
+    def _probe(batches):
+        # each probed import is wrapped so ANY failure to import the
+        # module, a broken transitive dependency included, surfaces
+        # under the sentinel the driver-side rebrand anchors on
+        import importlib
+
+        for _mod in ("numpy", "pandas", "pyarrow"):
+            try:
+                importlib.import_module(_mod)
+            except BaseException as e:
+                raise ImportError(
+                    f"executor-env-probe: import {_mod} failed: {e!r}"
+                ) from e
+        for b in batches:
+            yield b
+
+    try:
+        # sparkContext raises on Spark Connect sessions — the probe
+        # still works there (range/mapInPandas are Connect-compatible),
+        # it just spreads over a fixed task count instead
+        try:
+            n = spark.sparkContext.defaultParallelism
+        except Exception:  # pragma: no cover - Connect-only path
+            n = 8
+        spark.range(n).repartition(n).mapInPandas(_probe, "id long").count()
+    except Exception as exc:  # pragma: no cover - env-dependent
+        # Rebrand ONLY failures of the probe's OWN three imports — a
+        # preempted executor, a transient shuffle error, or an exception
+        # that merely ECHOES 'ImportError' must propagate as itself.
+        # TWO anchored forms rebrand: the 'executor-env-probe:' sentinel
+        # the probe wraps its imports in (covers transitive breakage,
+        # e.g. pandas present but dateutil missing), and the raw
+        # missing-module traceback naming one of the three — when
+        # pandas/pyarrow are absent outright, the pyspark worker
+        # bootstrap dies before the sentinel wrapper runs.
+        import re
+
+        msg = f"{type(exc).__name__}: {exc}"
+        probe_module_missing = re.search(
+            r"executor-env-probe: import (?:numpy|pandas|pyarrow) failed:[^\n]*"
+            r"|(?:ImportError|ModuleNotFoundError): No module named "
+            # dotted SUBMODULES of the three only, with a trailing
+            # word-boundary guard — [\w.]* would also swallow
+            # '_'-suffixed sibling packages (pyarrow_hotfix,
+            # pandas_flavor) and rebrand an unrelated missing module
+            r"'?(?:numpy|pandas|pyarrow)(?:\.\w+)*'?(?!\w)",
+            msg,
+        )
+        if not probe_module_missing:
+            raise
+        raise ImportError(
+            "the exact-quantile engine's Arrow bincount transport "
+            "(functions/quantiles.py, inputs above SMALL_INPUT_MAX_ROWS "
+            "rows with more than JVM_TRANSPORT_MAX_COLS columns) requires "
+            "pandas, pyarrow and numpy in every EXECUTOR Python "
+            "environment. An executor failed the probe; install them in "
+            f"the cluster Python environment. "
+            f"Probe failure: {probe_module_missing.group(0)}"
+        ) from exc
+    spark._arrow_env_probed = True
+
+
 def _multi_pass_arrow(
     df: DataFrame,
     specs: list[tuple[str, float, float]],
@@ -163,16 +291,19 @@ def _multi_pass_arrow(
     scan: 4.9 s vs 1.1 s). Per-element ops are IEEE-identical to the
     JVM expression (``(v − lo) / width · B`` then ``floor`` then the B−1
     clamp, exactly :func:`_bucket_of`), so the histogram is bit-equal;
-    the engine's property suite covers it.    covers it.
+    the engine's property suite covers it.
 
     ``mapInArrow``, not ``mapInPandas``: the numpy partials need no
     pandas (measured at 25 columns × 600k rows: 1.92 → 1.57 s per
     pass); ``Array.to_numpy(zero_copy_only=False)`` gives the float64
     array with nulls as NaN. The partials column ``c`` stays the
     COLUMN NAME (not an index) so the merged rows are drop-in for both
-    callers."""
+    callers. Its first use in a session runs
+    :func:`_probe_executor_python_env`."""
     import numpy as np
     import pyarrow as pa
+
+    _probe_executor_python_env(df.sparkSession)
 
     aliases = [(f"__q_{i}", c, lo, width) for i, (c, lo, width) in enumerate(specs)]
     sub = df.select(
@@ -265,7 +396,7 @@ def _kth_smallest(
         ks_, fr, lo_, hi_, base_, depth = pending.pop()
         if lo_ == hi_:
             for k in ks_:
-                out[k] = float(lo_)
+                out[k] = float(lo_) + 0.0  # -0.0 → +0.0
             continue
         if depth >= MAX_DEPTH:  # pragma: no cover - degenerate FP ranges
             rows = [
@@ -318,9 +449,14 @@ def _kth_smallest(
 def exact_quantiles_multi(
     df: DataFrame, col_probs: dict[str, Sequence[float]]
 ) -> dict[str, list[float]]:
-    """Exact interpolated quantiles for SEVERAL columns in three jobs
-    total (stats, histograms, boundary values) — see module docstring.
-    Returns ``{col: [q for each prob]}``; empty columns yield NaN."""
+    """Exact interpolated quantiles for SEVERAL columns — see module
+    docstring. A small input costs one job (the Arrow collect); a large
+    one that collect's partial job plus three passes (stats, histograms,
+    boundary values) and any skew recursion. Returns
+    ``{col: [q for each prob]}``; empty columns yield NaN."""
+    small = _small_input_quantiles(df, col_probs)
+    if small is not None:
+        return small
     cols = list(col_probs)
     inf = float("inf")
     aggs = []
@@ -476,8 +612,9 @@ def exact_quantiles_multi(
                         f"{k - n_neg}) of column {c!r} was never resolved"
                     ) from None
             # finite window exists but needed no selection: every
-            # finite value equals lo (the lo == hi degenerate case)
-            return float(lo)
+            # finite value equals lo (the lo == hi degenerate case);
+            # min() may return -0.0, which the groupBy paths normalize
+            return float(lo) + 0.0
 
         res = []
         for k0, k1, frac in specs[c]:

@@ -46,8 +46,8 @@ def rank_spec(n: int, p: float) -> tuple[int, int, float]:
     """(k_lo, k_hi, frac) for the p-quantile of n values — 1-based
     flanking ranks plus the interpolation fraction. Requires n ≥ 1 and
     p in [0, 1] (``math.floor`` keeps this dialect identical to
-    :func:`rank_spec_col` even for a drifted caller with p < 0 —
-    ADVICE r9 flagged that ``int()`` truncation would diverge there —
+    :func:`rank_spec_col` even for a drifted caller with p < 0, where
+    ``int()`` truncation would diverge from the Column ``floor`` —
     but out-of-range p has no quantile meaning, so it is rejected
     rather than silently extrapolated; a real raise, not an assert,
     so ``python -O`` cannot strip the guard)."""

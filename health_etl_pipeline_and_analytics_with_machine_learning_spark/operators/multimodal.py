@@ -10,8 +10,7 @@ parsers; payloads with no recognized magic get deterministic
 byte-derived features (the driver corpus is UTF-8 text, which is
 exactly such an opaque payload). Codecs that genuinely need external
 libraries (JPEG, MP4, ...) would be added to the same magic-dispatch
-table as further parsers — there is no stubbed/raising branch left
-(VERDICT r6 item 4).
+table as further parsers — there is no stubbed/raising branch.
 """
 
 from __future__ import annotations
@@ -170,8 +169,8 @@ def _ppm_parse(b: bytes) -> tuple[int, int, int, int, float]:
     raise ValueError (never assert — ``python -O`` strips asserts and
     would turn truncation into a silently wrong px_mean).
 
-    Header numbers must be CANONICAL decimals (r12, the same
-    int()-leniency class the _y4m_header fuzz patrol surfaced: bare
+    Header numbers must be CANONICAL decimals (the same
+    int()-leniency class the _y4m_header fuzz test guards: bare
     int() accepts b'1_0' and b'+2', so junk would classify as ppm with
     dimensions no PPM writer ever spells), and maxval must sit in
     (0, 256) — the 1-byte-per-sample range this reader implements: the
@@ -330,8 +329,7 @@ def _bmp_parse(b: bytes) -> tuple[int, int, int, int, float]:
         # silently aggregating an empty pixel window
         raise ValueError("non-positive BMP dimensions")
     if off < 54:
-        # r12 (the _y4m_header patrol's sibling sweep): an offset
-        # pointing inside the 54-byte BITMAPINFOHEADER layout would
+        # an offset pointing inside the 54-byte BITMAPINFOHEADER layout would
         # silently aggregate header bytes as "pixels" — junk accepted
         # as bmp instead of falling to the opaque quarantine
         raise ValueError("BMP pixel offset inside the header")
@@ -503,7 +501,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling over the binary payload column: up to
     FRAMES_PER_DOC uniformly-spaced frames per document, one output row
     per frame. Partition-parallel, Arrow-batched, deterministic — and
-    since r6 FULLY oracle-certified: DuckDB replays the frame-count/
+    FULLY oracle-certified: DuckDB replays the frame-count/
     offset integer arithmetic and recomputes each signature from the
     hex-encoded payload window, so the 1→N batch contract, the byte
     offsets, and the sig derivation are all value-checked."""
@@ -531,8 +529,8 @@ def _wav_encode(doc_id: int, hex_digest: str) -> bytes:
     bytes, cycled — so the oracle can replay the waveform arithmetic
     without touching bytes.
 
-    The PCM body is built at C speed (r11, VERDICT r10 item 2 — the
-    same slice-of-repeated-digest idiom proven on the Y4M encoder,
+    The PCM body is built at C speed (the same
+    slice-of-repeated-digest idiom as the Y4M encoder,
     where the interpreted per-byte loop was most of the measured cost):
     sample i is struct.pack('<h', lo + 256·hi − 32768) with
     lo = src[2i % 32], hi = src[(2i+1) % 32]; byte-wise that is the
@@ -900,17 +898,17 @@ from .dedup import (  # noqa: E402
 
 def _hashed_src(d: DataFrame, spark: SparkSession, fan_out: bool) -> DataFrame:
     """(doc_id, hx): the md5-digest source the synthetic-container ops
-    build payloads from — one definition (r10 review find: three
-    inline copies of the hash + fan-out idiom would drift on a
-    retune). ``fan_out=True`` applies the bounded spread() for the
-    single-split testdata (the r5 lesson) — a MEASURED per-op decision
+    build payloads from — one definition (inline copies of the hash +
+    fan-out idiom would drift on a retune). ``fan_out=True`` applies
+    the bounded spread() for the single-split testdata (a single-file
+    table is a single-task narrow stage) — a MEASURED per-op decision
     (see the A/B notes at each call site; cheap loops lose to the
     shuffle, heavy ones win) and a no-op to remove at production split
     counts."""
     src = d.select("doc_id", F.md5(F.encode(F.col("text"), "UTF-8")).alias("hx"))
     if fan_out:
-        # sparkContext raises on Spark Connect sessions (ADVICE r10) —
-        # same fixed fallback as pipeline._probe_executor_python_env
+        # sparkContext raises on Spark Connect sessions — same fixed
+        # fallback as functions.quantiles._probe_executor_python_env
         try:
             par = spark.sparkContext.defaultParallelism
         except Exception:  # pragma: no cover - Connect-only path
@@ -993,7 +991,7 @@ def _bmp_phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("multimodal",),
 )
 def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual IMAGE near-duplicate detection (VERDICT r9 item 8):
+    """Perceptual IMAGE near-duplicate detection:
     aHash-class fingerprints over the decoded BMP corpus, paired by the
     same multi-band Hamming blocking the text simhash op certifies —
     dedup extended to the multimodal column family by composing two
@@ -1200,15 +1198,15 @@ def _y4m_header(b: bytes) -> tuple[int, int, int, int]:
     """Parse the stream header of the writer's Y4M profile (C444, plain
     FRAME markers): returns (w, h, frame_bytes, data_start). Malformed
     headers raise ValueError. ONE definition shared by the frame
-    sampler and the magic dispatch's stream decode (the r10 review's
-    no-copy rule: two header walks would drift on any profile change).
+    sampler and the magic dispatch's stream decode (two header walks
+    would drift on any profile change).
 
-    Dimension bodies must be CANONICAL positive decimals — the r12
+    Dimension bodies must be CANONICAL positive decimals — the
     Hypothesis patrol (tests/test_llm_ops.py::test_y4m_header_fuzz)
-    found the truthiness guard alone accepted 'W-1 H-6' (both negative,
-    frame_bytes positive), and the round's review then showed bare
-    int() still admits Python-only spellings ('W1_0' → 10, 'W+2' → 2)
-    no Y4M writer emits — so junk classified as y4m instead of falling
+    shows the truthiness guard alone accepts 'W-1 H-6' (both negative,
+    frame_bytes positive), and bare
+    int() admits Python-only spellings ('W1_0' → 10, 'W+2' → 2)
+    no Y4M writer emits — so junk would classify as y4m instead of falling
     to the dispatch's opaque quarantine. isdigit() + a nonzero check
     rejects signs, underscores, and empty bodies in one gate (the
     ascii decode above it already excludes the non-ASCII digit
@@ -1234,11 +1232,12 @@ def _y4m_header(b: bytes) -> tuple[int, int, int, int]:
 
 
 def _y4m_stream_parse(b: bytes) -> tuple[int, int, int, int, float]:
-    """Whole-stream decode for the magic dispatch (VERDICT r10 item 2):
+    """Whole-stream decode for the magic dispatch:
     walk every frame and aggregate ALL plane bytes — returns (w, h,
     n_frames, file_size, plane-byte mean with round_cmp's pinned
     tie-break). Each frame's planes are summed as one C-speed
-    bytes-slice sum — no per-byte Python (the r10 lesson)."""
+    bytes-slice sum — no per-byte Python, which would dominate the
+    cost."""
     import math
 
     w, h, fb, pos = _y4m_header(b)

@@ -487,10 +487,14 @@ def median_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column exact medians — the reference's fill values and UI
     defaults (Health_Jim.py:222, 293, 306, 390-391).
 
-    Computed by ``functions.quantiles.exact_quantiles_multi`` — the
-    distributed-selection engine (bucket-refinement k-th-smallest):
-    three bounded jobs for all four columns, no per-value aggregation
-    buffer anywhere, collects capped at the histogram width. The
+    Computed by ``functions.quantiles.exact_quantiles_multi``. Up to
+    ``SMALL_INPUT_MAX_ROWS`` (65,536) lineitem rows — sf0.01's 60,000
+    included — that is one Arrow collect of the four columns and a
+    driver-side sort; above it (sf0.1 and up) the distributed-selection
+    engine (bucket-refinement k-th-smallest) runs three bounded passes
+    for all four columns after that collect's partial job, with no
+    per-value aggregation buffer anywhere and collects capped at the
+    histogram width. The
     built-in exact ``median`` it replaces buffers every distinct value
     in one final aggregation state — fine at parity scale, a memory
     funnel at 100 TB (and measurably slower even at sf0.1: 1.8 s vs
@@ -551,8 +555,9 @@ def iqr_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clip(lo, hi) = LEAST(GREATEST(x, lo), hi) — native expressions, no UDF.
     Scale: the q1/q3 scalars come from
-    ``functions.quantiles.exact_quantiles`` — distributed-selection
-    exact quantiles with bounded collects (the built-in exact
+    ``functions.quantiles.exact_quantiles`` — one Arrow collect up to
+    ``SMALL_INPUT_MAX_ROWS`` rows (sf0.01), distributed-selection exact
+    quantiles with bounded collects above it (the built-in exact
     ``percentile`` it replaces buffers every distinct value in one
     final aggregation state; it was also the slowest single stage of
     this op at sf0.1, 1.9 s → 1.2 s). The scalars then fold into the
@@ -601,22 +606,25 @@ _PROFILE_PROBS = (0.01, 0.25, 0.5, 0.75, 0.99, 0.9999999999999999)
     """,
 )
 def quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-column quantile PROFILE — the distributed exact-quantile
-    engine certified directly, not through a single consumer: 4 columns
-    × 6 probs (24 scalars) in the engine's three batched jobs, against
-    DuckDB ``quantile_cont`` at every point. The reference's describe()/
+    """Multi-column quantile PROFILE — the exact-quantile engine
+    certified directly, not through a single consumer: 4 columns × 6
+    probs (24 scalars) in one engine call, against DuckDB
+    ``quantile_cont`` at every point. At sf0.01 (60,000 rows, under
+    ``SMALL_INPUT_MAX_ROWS``) the engine's small-input path answers it;
+    at sf0.1 its three batched distributed jobs do. The reference's describe()/
     quantile calls (Health_Jim.py:222, 332-347) are the 1-column
     special case of this shape.
 
-    The probe set is chosen adversarially: 0.9999999999999999 is the
-    exact class the r8 fix addressed (``1 + (n-1)·p`` rounds the
-    fractional rank away in IEEE doubles; the engine now derives the
-    0-based position first and interpolates with Spark's symmetric
-    form — certification invariant 6), and 0.01/0.99 exercise deep-tail
-    bucket location where the cumulative histogram is flattest.
+    The probe set is chosen adversarially: at 0.9999999999999999
+    ``1 + (n-1)·p`` rounds the fractional rank away in IEEE doubles (the
+    engine derives the 0-based position first and interpolates with
+    Spark's symmetric form — certification invariant 6), and 0.01/0.99
+    exercise deep-tail bucket location where the cumulative histogram
+    is flattest.
 
-    Scale: same contract as ``median_fill`` — stats, histogram, and
-    boundary collects are all bounded (O(N_BUCKETS) driver memory);
+    Scale: same contract as ``median_fill`` — above the small-input
+    bound the stats, histogram, and boundary collects are all bounded
+    (O(N_BUCKETS) driver memory);
     no per-value aggregation buffer anywhere, so the 100 TB failure
     mode of builtin exact ``percentile`` (single-state value map) can't
     occur. The 24 result scalars are metadata-sized; the eager

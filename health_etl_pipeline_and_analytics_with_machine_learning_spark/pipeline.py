@@ -7,11 +7,11 @@ Architecture notes (scale-first):
   expressions assembled in ONE ``select`` — a single narrow stage, fully
   codegen'd, no shuffle, no UDFs (SURVEY §4.2).
 - Column statistics the reference computes eagerly (medians, IQR
-  quantiles) are likewise computed eagerly here — on the
-  DISTRIBUTED-EXACT selection engine (functions.quantiles; the builtin
-  percentile's single-task value buffer is both a local bottleneck and
-  the 100 TB OOM), then collected to the driver
-  and re-embedded as literals. That is metadata-scale traffic (a
+  quantiles) are likewise computed eagerly here — by the exact-quantile
+  engine (functions.quantiles: one driver-side Arrow collect for inputs
+  that fit, distributed selection above that; the builtin percentile's
+  single-task value buffer is both a local bottleneck and the 100 TB
+  OOM), then re-embedded as literals. That is metadata-scale traffic (a
   handful of doubles) and deliberately so: embedding them lazily as
   cross-joined subplans duplicates the whole upstream plan per
   statistic and blows up Catalyst analysis (exponential plan growth),
@@ -135,14 +135,17 @@ def _scalar(df: DataFrame, *exprs: Column) -> list:
 def _global_quantiles(
     df: DataFrame, col_probs: dict[str, list[float]]
 ) -> dict[str, list[float | None]]:
-    """Eager global quantiles via the DISTRIBUTED-EXACT selection engine
+    """Eager global quantiles via the exact-quantile engine
     (functions.quantiles) — bit-compatible with the builtin exact
     ``percentile``/``median`` (invariant 6, property-pinned), but with
     no single-task value buffer: the builtin funnels every value of
     every profiled column into ONE final-aggregation task, which is both
     the 100 TB OOM and, measured here, the local bottleneck (the sweep's
     18-median builtin agg cost 9.1 s at 600k rows; the engine's three
-    distributed passes cost ~2 s). NaN results (empty column, or a
+    distributed passes cost ~2 s). Up to
+    ``functions.quantiles.SMALL_INPUT_MAX_ROWS`` rows (the reference's
+    10k-row file) the engine answers from one Arrow collect instead:
+    one job, no Python worker. NaN results (empty column, or a
     NaN-majority column) are mapped to None = "no fill value", matching
     the builtin's null-on-empty.
 
@@ -198,10 +201,9 @@ def stage_rowwise(df: DataFrame, country_corrections: dict | None = None) -> Dat
 def stage_year(df: DataFrame) -> DataFrame:
     """2c: fillna(median) → astype(int) (truncates) → keep 1900–2100.
     Median computed over the pre-fill column (reference ordering), on
-    the selection engine like every other eager statistic (a builtin
-    F.median here was the one funnel left after the r9 conversion —
-    flagged by the round's code review against BASELINE.md's
-    zero-funnel claim)."""
+    the quantile engine like every other eager statistic, so the plan
+    holds no builtin single-task ``F.median`` funnel
+    (tests/test_pipeline_structure.py pins this)."""
     if "Year" not in df.columns:
         return df
     (ymed,) = _global_quantiles(df, {"Year": [0.5]})["Year"]
@@ -219,14 +221,14 @@ def stage_missing(df: DataFrame) -> DataFrame:
     does. Null join keys fall through to the global fill, matching
     pandas groupby(dropna=True).transform semantics.
 
-    Job structure (r9): BOTH group-fill joins are composed lazily, the
+    Job structure: BOTH group-fill joins are composed lazily, the
     lineage is cut ONCE (:func:`lineage_cut`), and the four global medians
-    come from ONE batched selection-engine call over the cut. Before,
-    every downstream statistics pass re-executed the group-median
-    aggregate subplans behind the broadcast joins (Catalyst re-runs
-    shared subplans per job) — at 600k rows that re-evaluation, not the
-    aggregates themselves, dominated the ETL (measured: this stage
-    9.4 s → ~2 s; the whole pipeline 34 s → see bench note). The
+    come from ONE batched quantile-engine call over the cut. Without the
+    cut, every downstream statistics pass would re-execute the
+    group-median aggregate subplans behind the broadcast joins (Catalyst
+    re-runs shared subplans per job) — at 600k rows that re-evaluation,
+    not the aggregates themselves, dominated the ETL (measured: this
+    stage 9.4 s without the cut, ~2 s with it). The
     column-independence that makes batching safe: the pop median reads
     only group-filled pop, the rate medians only group-filled rates."""
     out = df
@@ -412,7 +414,7 @@ def stage_finalize(df: DataFrame, record_id_mode: str = "window") -> DataFrame:
     Row_num (≈ original file order — what pandas' stable sort preserves)
     so id assignment is deterministic across runs.
 
-    Scaled mode skips the trailing global ``orderBy`` (r17): the
+    Scaled mode skips the trailing global ``orderBy``: the
     two-phase id assignment ALREADY leaves the data range-partitioned
     by the sort keys with each partition sorted (that order is what the
     ids encode), so re-sorting globally only re-pays the full-width
@@ -461,77 +463,6 @@ def clean_health_dataframe(
     return out
 
 
-def _probe_executor_python_env(spark: SparkSession) -> None:
-    """Fail fast, with a clear message, when the EXECUTOR Python envs
-    lack the selection engine's Arrow-transport dependencies (pandas /
-    pyarrow / numpy — required by the ETL path since r9). The probe is
-    a minimal mapInPandas job spread over default-parallelism tasks;
-    its success is cached on the SparkSession."""
-    if getattr(spark, "_health_etl_env_probed", False):
-        return
-
-    def _probe(batches):
-        # each probed import is wrapped so ANY failure to import the
-        # module, a broken transitive dependency included, surfaces
-        # under the sentinel the driver-side rebrand anchors on
-        import importlib
-
-        for _mod in ("numpy", "pandas", "pyarrow"):
-            try:
-                importlib.import_module(_mod)
-            except BaseException as e:
-                raise ImportError(
-                    f"executor-env-probe: import {_mod} failed: {e!r}"
-                ) from e
-        for b in batches:
-            yield b
-
-    try:
-        # sparkContext raises on Spark Connect sessions — the probe
-        # still works there (range/mapInPandas are Connect-compatible),
-        # it just spreads over a fixed task count instead
-        try:
-            n = spark.sparkContext.defaultParallelism
-        except Exception:  # pragma: no cover - Connect-only path
-            n = 8
-        spark.range(n).repartition(n).mapInPandas(_probe, "id long").count()
-    except Exception as exc:  # pragma: no cover - env-dependent
-        # Rebrand ONLY failures of the probe's OWN three imports — a
-        # preempted executor, a transient shuffle error, or an exception
-        # that merely ECHOES 'ImportError' must propagate as itself.
-        # TWO anchored forms rebrand: the 'executor-env-probe:' sentinel
-        # the probe wraps its imports in (covers transitive breakage,
-        # e.g. pandas present but dateutil missing), and the raw
-        # missing-module traceback naming one of the three — when
-        # pandas/pyarrow are absent outright, the pyspark worker
-        # bootstrap dies before the sentinel wrapper runs.
-        import re
-
-        msg = f"{type(exc).__name__}: {exc}"
-        probe_module_missing = re.search(
-            r"executor-env-probe: import (?:numpy|pandas|pyarrow) failed:[^\n]*"
-            r"|(?:ImportError|ModuleNotFoundError): No module named "
-            # dotted SUBMODULES of the three only, with a trailing
-            # word-boundary guard — [\w.]* would also swallow
-            # '_'-suffixed sibling packages (pyarrow_hotfix,
-            # pandas_flavor) and rebrand an unrelated missing module
-            # (ADVICE r11)
-            r"'?(?:numpy|pandas|pyarrow)(?:\.\w+)*'?(?!\w)",
-            msg,
-        )
-        if not probe_module_missing:
-            raise
-        raise ImportError(
-            "clean_health_dataset requires pandas, pyarrow and numpy in "
-            "every EXECUTOR Python environment since r9 (the exact-"
-            "quantile engine's Arrow bincount transport — "
-            "functions/quantiles.py). An executor failed the entry "
-            f"probe; install them in the cluster Python environment. "
-            f"Probe failure: {probe_module_missing.group(0)}"
-        ) from exc
-    spark._health_etl_env_probed = True
-
-
 def clean_health_dataset(
     spark: SparkSession,
     csv_path: str,
@@ -544,15 +475,14 @@ def clean_health_dataset(
     wrote CSV — parquet is the scale-correct canonical sink; CSV export
     remains available via df.write.csv).
 
-    Executor-side requirements: the eager statistics ride the
-    selection engine's Arrow transport (functions.quantiles._multi_pass),
-    so every EXECUTOR Python env needs pandas + pyarrow + numpy. They
-    are probed here on the executors (a tiny mapInPandas job; driver
-    and executor envs often differ on YARN/K8s), so a cluster missing
-    them fails at entry with a clear message, not mid-job. The result
-    is cached on the SparkSession; the probe reaches the executors that
-    pick up its tasks — representative, not exhaustive."""
-    _probe_executor_python_env(spark)
+    Executor-side requirements: none at the reference's size. The
+    eager statistics (``_global_quantiles``) of an input up to
+    ``functions.quantiles.SMALL_INPUT_MAX_ROWS`` rows are answered from
+    one driver-side Arrow collect, and the rest of the ETL is JVM
+    expressions, so no Python worker starts. A larger input's final
+    sweep (18 columns) rides the engine's Arrow transport, which needs
+    pandas + pyarrow + numpy in every EXECUTOR Python env and probes
+    for them before its first pass."""
     raw = read_csv_raw(spark, csv_path)
     cleaned = clean_health_dataframe(
         raw, record_id_mode=record_id_mode, country_corrections=country_corrections

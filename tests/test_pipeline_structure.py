@@ -1,12 +1,12 @@
-"""Structural pins for the ETL's zero-funnel contract and the dirty
-fixture generator.
+"""Structural pins for the ETL's zero-funnel contract, its
+no-Python-worker path at the reference's size, and the dirty fixture
+generator.
 
 BASELINE.md "Cleaning pipeline at volume (r9)" claims the benched plan
 carries ZERO single-task value buffers — every eager median/quantile
-rides the distributed-selection engine. stage_year disproved the first
-version of that claim (the round's code review caught a leftover
-builtin F.median), so the contract gets a source-level pin: the
-builtin exact percentile/median aggregates may not appear in
+rides the exact-quantile engine. A builtin F.median in one stage is
+enough to break that claim, so the contract gets a source-level pin:
+the builtin exact percentile/median aggregates may not appear in
 pipeline.py at all. Crude but effective — the defect class is "someone
 adds one eager stat the quick way", and that is exactly a text match.
 """
@@ -97,100 +97,40 @@ def test_nan_median_means_no_fill(spark):
     assert [r["x"] for r in filled.collect()].count(None) == 1
 
 
-def test_env_probe_rebrands_only_anchored_missing_module_failures():
-    """The executor-env probe must rebrand a
-    failure into install instructions ONLY when the exception text
-    carries the probe's own 'executor-env-probe:' sentinel naming one
-    of the three probed modules — an error that merely echoes the word
-    'ImportError' in a log line must propagate as itself, a TRANSITIVE
-    dependency failure of a probed module (pandas present, dateutil
-    missing) must still rebrand, and the rebranded message must retain
-    the matched cause."""
+def test_reference_size_etl_skips_the_arrow_transport(spark, raw_health_csv, monkeypatch):
+    """At the reference's size every eager statistic of the ETL takes
+    the quantile engine's small-input path, so ``clean_health_dataset``
+    never reaches the Arrow transport or its executor probe (and starts
+    no Python worker): spies that raise stand in for both. Forcing the
+    distributed engine (bound 0) sends the 18-column final sweep
+    through the Arrow transport, and the cleaned rows come out the
+    same."""
+    import health_etl_pipeline_and_analytics_with_machine_learning_spark.functions.quantiles as Q
     from health_etl_pipeline_and_analytics_with_machine_learning_spark.pipeline import (
-        _probe_executor_python_env,
+        clean_health_dataset,
     )
 
-    class _FakeJob:
-        def __init__(self, exc):
-            self._exc = exc
+    def _forbidden(name):
+        def spy(*args, **kwargs):
+            raise AssertionError(f"the reference-size ETL called {name}")
 
-        def repartition(self, n):
-            return self
+        return spy
 
-        def mapInPandas(self, fn, schema):
-            return self
+    with monkeypatch.context() as m:
+        m.setattr(Q, "_multi_pass_arrow", _forbidden("_multi_pass_arrow"))
+        m.setattr(Q, "_probe_executor_python_env", _forbidden("the executor probe"))
+        small = clean_health_dataset(spark, raw_health_csv).collect()
+    assert 0 < len(small) <= Q.SMALL_INPUT_MAX_ROWS
 
-        def count(self):
-            raise self._exc
+    arrow_passes = []
+    real = Q._multi_pass_arrow
 
-    class _FakeSpark:
-        def __init__(self, exc):
-            self._exc = exc
+    def counting(*args, **kwargs):
+        arrow_passes.append(len(args[1]))
+        return real(*args, **kwargs)
 
-        class _SC:
-            defaultParallelism = 4
-
-        sparkContext = _SC()
-
-        def range(self, n):
-            return _FakeJob(self._exc)
-
-    genuine = RuntimeError(
-        "Job aborted: PythonException: Traceback (most recent call last):\n"
-        "  ...\nImportError: executor-env-probe: import pyarrow failed: "
-        "ModuleNotFoundError(\"No module named 'pyarrow'\")"
-    )
-    with pytest.raises(ImportError) as ei:
-        _probe_executor_python_env(_FakeSpark(genuine))
-    assert "import pyarrow failed" in str(ei.value)
-    assert ei.value.__cause__ is genuine
-
-    # the r11 review's transitive case: pandas itself is present but a
-    # dependency it imports is not — the sentinel wraps it, so the
-    # rebrand still fires with actionable text
-    transitive = RuntimeError(
-        "PythonException: ImportError: executor-env-probe: import pandas "
-        "failed: ModuleNotFoundError(\"No module named 'dateutil'\")"
-    )
-    with pytest.raises(ImportError) as ti:
-        _probe_executor_python_env(_FakeSpark(transitive))
-    assert "import pandas failed" in str(ti.value)
-    assert "dateutil" in str(ti.value)
-
-    # the worker-bootstrap case: with pandas/pyarrow absent OUTRIGHT,
-    # the Arrow serializer import in pyspark's worker dies BEFORE the
-    # sentinel wrapper runs — the raw traceback form naming a probed
-    # module must still rebrand
-    bootstrap = RuntimeError(
-        "PythonException: Traceback (most recent call last):\n"
-        "  File pyspark/sql/pandas/serializers.py ...\n"
-        "ModuleNotFoundError: No module named 'pyarrow'"
-    )
-    with pytest.raises(ImportError) as bi:
-        _probe_executor_python_env(_FakeSpark(bootstrap))
-    assert "No module named 'pyarrow" in str(bi.value)
-
-    # dotted SUBMODULE of a probed package (a broken install whose
-    # binary submodule is missing) still rebrands
-    submodule = RuntimeError(
-        "PythonException: ModuleNotFoundError: No module named "
-        "'numpy.core._multiarray_umath'"
-    )
-    with pytest.raises(ImportError) as si:
-        _probe_executor_python_env(_FakeSpark(submodule))
-    assert "_multiarray_umath" in str(si.value)
-
-    # echoes the keyword but is NOT a probe-module import failure:
-    # propagates unchanged (transient executor loss whose log mentions
-    # ImportError, a missing module that is not ours, and — ADVICE
-    # r11 — a '_'-suffixed SIBLING package of a probed one, which the
-    # old [\w.]* suffix wrongly swallowed)
-    for other in (
-        RuntimeError("executor lost; stderr said: ImportError was retried"),
-        RuntimeError("ModuleNotFoundError: No module named 'user_udf_helper'"),
-        RuntimeError("ModuleNotFoundError: No module named 'pyarrow_hotfix'"),
-        RuntimeError("ModuleNotFoundError: No module named 'pandas_flavor'"),
-    ):
-        with pytest.raises(RuntimeError) as ri:
-            _probe_executor_python_env(_FakeSpark(other))
-        assert ri.value is other
+    monkeypatch.setattr(Q, "SMALL_INPUT_MAX_ROWS", 0)
+    monkeypatch.setattr(Q, "_multi_pass_arrow", counting)
+    dist = clean_health_dataset(spark, raw_health_csv).collect()
+    assert arrow_passes, "the forced distributed sweep should ride the Arrow transport"
+    assert [repr(r) for r in small] == [repr(r) for r in dist]
